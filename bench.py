@@ -244,6 +244,42 @@ def percentile(samples: list[float], q: float) -> float:
     return s[max(0, min(len(s) - 1, math.ceil(q * len(s)) - 1))]
 
 
+def compact_line(per_query: dict, details: dict, off_headline: dict,
+                 serving: dict, host: dict, sf, iterations: int) -> str:
+    """The ONE compact stdout line, printed LAST. The recorded BENCH
+    artifact keeps only the last 2000 chars of stdout; a longer line
+    arrives with its head cut off and parses as null. Contract keys
+    (metric/value/unit/n/sf/queries/env); per-query values rounded to
+    2 dp to fit (full precision is in the stderr record); `env` adds
+    the envelope verdict + worst rows so the artifact is
+    self-contained. The slowest headline query is the argmax of
+    `queries` (not repeated in `env`: at 99.99 s per query the line
+    would not fit); `wmax` is its slowest iteration. The length bound
+    is pinned by tests/test_bench_contract.py."""
+    worst = max(per_query, key=per_query.get)
+    offworst = (max(off_headline, key=lambda k: off_headline[k]["mean_s"])
+                if off_headline else None)
+    return json.dumps({
+        "metric": "headline_query_mean_runtime_total",
+        "value": round(sum(per_query.values()), 4),
+        "unit": "sec",
+        "n": iterations,
+        "sf": sf,
+        "queries": {k: round(v, 2) for k, v in per_query.items()},
+        "env": {
+            "wmax": round(details[worst]["max_s"], 2),
+            "over2": sum(v >= 2.0 for v in per_query.values()),
+            "offworst": offworst,
+            "offwmean": (round(off_headline[offworst]["mean_s"], 3)
+                         if offworst else None),
+            "srv_p95_ms": serving.get("point_query_miss_p95_ms"),
+            "load1m": host.get("loadavg_1m"),
+            "cpus": host.get("cpus"),
+            "cold": 1,  # r12: timed iterations clear Spark caches first
+        },
+    }, separators=(",", ":"))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     iterations = int(os.environ.get("BENCH_ITERATIONS", "20"))
@@ -346,7 +382,6 @@ def main() -> None:
         # composition itself is scale-measured, not just its parts
         curate10x = run_curate10x(spark, sf_dir)
 
-    total = round(sum(per_query.values()), 4)
     # FULL-fidelity record (per-query percentiles, off-headline,
     # serving, scale10x/curate10x, host fingerprint) → stderr: redirect
     # to a file at freeze and mine for PERFORMANCE.md. Keeps every
@@ -357,39 +392,8 @@ def main() -> None:
         "scale10x": scale10x, "curate10x": curate10x, "host": host,
         "sf": sf, "n": iterations,
     }), file=sys.stderr)
-    # ONE compact stdout line, LAST, ≤ ~1950 chars (r11, round-10
-    # verdict ask #3): the driver's BENCH artifact keeps only a
-    # 2000-char stdout tail, and the old ~10 KB line arrived with its
-    # head cut off — every round's `parsed` read null and the headline
-    # numbers survived only in PERFORMANCE.md prose. Contract keys
-    # (metric/value/unit/queries/sf) unchanged; every r10 query name
-    # kept; per-query values rounded to 2 dp to fit (full precision is
-    # in the stderr record); `env` adds the envelope verdict + worst
-    # rows so the committed artifact is self-contained.
-    worst = max(per_query, key=per_query.get)
-    offworst = (max(off_headline, key=lambda k: off_headline[k]["mean_s"])
-                if off_headline else None)
-    print(json.dumps({
-        "metric": "headline_query_mean_runtime_total",
-        "value": total,
-        "unit": "sec",
-        "n": iterations,
-        "sf": sf,
-        "queries": {k: round(v, 2) for k, v in per_query.items()},
-        "env": {
-            "worst": worst,
-            "wmean": round(per_query[worst], 3),
-            "wmax": round(details[worst]["max_s"], 2),
-            "over2": sum(v >= 2.0 for v in per_query.values()),
-            "offworst": offworst,
-            "offwmean": (round(off_headline[offworst]["mean_s"], 3)
-                         if offworst else None),
-            "srv_p95_ms": serving.get("point_query_miss_p95_ms"),
-            "load1m": host.get("loadavg_1m"),
-            "cpus": host.get("cpus"),
-            "cold": 1,  # r12: timed iterations clear Spark caches first
-        },
-    }, separators=(",", ":")))
+    print(compact_line(per_query, details, off_headline, serving, host,
+                       sf, iterations))
 
 
 if __name__ == "__main__":

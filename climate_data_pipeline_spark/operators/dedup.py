@@ -32,41 +32,21 @@ from pyspark.sql import functions as F
 
 from .text import _spread, fingerprint, words
 
-# Bounded plan-keyed cache for the jaccard shingle-array table (see
-# ngram_jaccard_pairs): within one query the table feeds the prefix
-# explode AND both verify joins; across a session, repeated runs over
-# the SAME corpus (bench iterations, a tuning sweep) hit the same
-# entry. The LRU bound is the lifetime contract — a full-registry
-# sweep over many distinct corpora evicts (and unpersists) old
-# entries instead of accumulating MEMORY_AND_DISK blocks until
-# storage-memory pressure.
+# Bounded plan-keyed cache for the jaccard intermediates (see
+# ngram_jaccard_pairs). It pays INSIDE one query: the shingle-frequency
+# table feeds the eager density-gate aggregate AND the join, and the
+# shingle-array table feeds the prefix explode AND both verify joins.
+# Measured cold (caches cleared before every iteration), 10
+# interleaved pairs at sf0.1 on a 4-core host (local[4]), against the
+# same code with the cache off: medians 4.90/5.44 s dedup_ngram_jaccard,
+# 3.75/4.10 s _dfcap, 4.69/5.33 s dedup_clusters, 4.87/5.45 s
+# dedup_keep_best; the four-query sum 18.72 vs 20.20 s, cached faster
+# in 10/10 pairs. The LRU bound is the lifetime contract — a
+# full-registry sweep over many distinct corpora evicts (and
+# unpersists) old entries instead of accumulating MEMORY_AND_DISK
+# blocks until storage-memory pressure.
 _ARR_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _ARR_CACHE_MAX = 4
-
-# source_overlap_matrix / checkpoint_above_gate consumers: a small
-# derived table with several consumers of one big source scan. The r11
-# premise was that AQE's stage cache never reuses the consumers'
-# identical exchanges (3 scans, 0 ReusedExchange observed then), so a
-# size gate engaged a lazy localCheckpoint above 256 MB of input.
-# RETRACTED in r12, on direct measurement (tools/gate_ab.py,
-# plans/r12/gate_ab_*.txt):
-#   1. the premise no longer holds — executed plans at sf0.1, 54 MB and
-#      3.3 GB all show AQE ReusedExchange on the heavy exchanges (the
-#      residual extra "scans" are cheap column-pruned file reads);
-#   2. interleaved above-gate A/Bs show the engaged arm LOSING
-#      steady-state: set_ops 7.5 s vs 4.6-5.8 s at 279 MB and
-#      37-48 s vs 20-37 s at 3.3 GB; corpus_source_overlap a wash
-#      (64-88 s both arms at 54 MB);
-#   3. mechanically, under AQE a lazy localCheckpoint executes the
-#      checkpointed subtree's stages EAGERLY and serially at
-#      Dataset-build time, losing the one-DAG parallelism the naive
-#      plan gets for free.
-# The force arms stay (tests pin both arms row-identical; the A/B
-# harness drives them), but nothing auto-engages:
-# SOURCE_OVERLAP_CKPT_MIN_BYTES is None = never. Results are identical
-# either way (same rows; the gate can never flip a hash).
-SOURCE_OVERLAP_CHECKPOINT: bool | None = None
-SOURCE_OVERLAP_CKPT_MIN_BYTES: int | None = None  # r12: auto retracted
 
 
 def _cache_bounded(df: DataFrame) -> DataFrame:
@@ -357,26 +337,6 @@ MINHASH_HOT_BUCKET = 1024
 MINHASH_GUARD_MIN_BYTES = 256 * 1024 * 1024
 
 
-def checkpoint_above_gate(small: DataFrame, source: DataFrame,
-                          force: bool | None = None,
-                          min_bytes: int | None = None) -> DataFrame:
-    """Materialization point for a SMALL table that several consumers
-    derive from a BIG source scan. RETRACTED as an auto-engaging
-    optimization in r12 — see the SOURCE_OVERLAP_CHECKPOINT block for
-    the measurements (AQE reuses the heavy exchanges after all, and the
-    forced checkpoint arm measured SLOWER above the old gate at every
-    tested scale). Nothing engages unless ``force=True`` or a caller
-    passes an explicit ``min_bytes`` (tests and tools/gate_ab.py pin
-    the arms; they remain row-identical by construction — the gate can
-    never flip a hash)."""
-    if min_bytes is None:
-        min_bytes = SOURCE_OVERLAP_CKPT_MIN_BYTES
-    engage = force if force is not None \
-        else (min_bytes is not None
-              and _input_bytes(source) >= min_bytes)
-    return small.localCheckpoint(eager=False) if engage else small
-
-
 def _input_bytes(df: DataFrame) -> int:
     """Total size of the scan's backing files — a driver-side metadata
     peek (0 for non-file sources)."""
@@ -570,10 +530,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
                   .alias("__sh"))
              .withColumn("n_sh", F.size("__sh")))
     # plan-keyed BOUNDED cache (module LRU above): the array table
-    # feeds the prefix explode AND both verify joins, and repeated
-    # runs over the same corpus reuse the entry; distinct corpora
-    # beyond the bound evict-and-unpersist instead of accumulating
-    # MEMORY_AND_DISK blocks for the life of the session.
+    # feeds the prefix explode AND both verify joins
     arr = _cache_bounded(arr)
     # prefix length for Jaccard t: |x| − ⌈t·|x|⌉ + 1; positions ride
     # along for the PPJoin positional filter below
@@ -1497,20 +1454,12 @@ def source_overlap_matrix(df: DataFrame, text_col: str, source_col: str,
         sets = (ss.groupBy("shingle")
                   .agg(F.array_sort(F.collect_set("__src"))
                         .alias("__set")))
-    # three consumers read ``sets``; AQE reuses the heavy exchange
-    # across them (executed plans at every tested scale — see the
-    # SOURCE_OVERLAP_CHECKPOINT retraction note), so nothing engages
-    # the checkpoint arm unless a test/harness forces it. The shingle
-    # column is dropped first — no consumer reads it, so only the
-    # source-set arrays ever materialize.
-    ckpt = SOURCE_OVERLAP_CHECKPOINT
-    if ckpt is None:
-        ckpt = (SOURCE_OVERLAP_CKPT_MIN_BYTES is not None
-                and _input_bytes(df) >= SOURCE_OVERLAP_CKPT_MIN_BYTES)
-    if ckpt:
-        sets = sets.select("__set").localCheckpoint(eager=False)
-    else:
-        sets = sets.select("__set")
+    # three consumers read ``sets``: AQE plans a ReusedExchange for
+    # them, and a lazy localCheckpoint runs its subtree eagerly and
+    # serially — measured slower (the above-gate A/B records in
+    # plans/r12/). Only the source-set arrays are read, so the shingle
+    # column drops here.
+    sets = sets.select("__set")
     totals = (sets.select(F.explode("__set").alias("__src"))
                   .groupBy("__src").agg(F.count("*").alias("n_total")))
     srcs = sets.where(F.size("__set") >= 2)

@@ -22,11 +22,6 @@ from pyspark.sql import functions as F
 
 N_BUCKETS = 10_000
 
-# temperature_weights: materialize the |groups|-row token aggregate
-# once above a size gate (None = auto by input size; True/False force
-# an arm for tests/A/B — see dedup.checkpoint_above_gate)
-TEMPERATURE_WEIGHTS_CHECKPOINT: bool | None = None
-
 
 def hash_bucket(id_col: Column | str, n_buckets: int = N_BUCKETS,
                 salt: str = "") -> Column:
@@ -231,14 +226,6 @@ def temperature_weights(df: DataFrame, group_col: str, token_col: str,
     g = (df.groupBy(F.col(group_col).alias("group"))
            .agg(F.count("*").alias("n_docs"),
                 F.sum(token_col).alias("n_tokens")))
-    # |groups| rows (single digits for language mixes) derived from a
-    # corpus-wide scan, consumed by tot, shares AND (via shares) z.
-    # The r11 auto-engaging size gate was retracted in r12 (see
-    # dedup.SOURCE_OVERLAP_CHECKPOINT: AQE reuses the heavy exchanges,
-    # and the checkpoint arm measured slower above the old gate); the
-    # force flag remains for the arm-equality test.
-    from .dedup import checkpoint_above_gate
-    g = checkpoint_above_gate(g, df, force=TEMPERATURE_WEIGHTS_CHECKPOINT)
     tot = g.agg(F.sum("n_tokens").alias("__tot"))
     p = round_port(F.col("n_tokens") / F.col("__tot"), 9)
     shares = (g.crossJoin(F.broadcast(tot))

@@ -36,12 +36,6 @@ LANG_MARKERS: dict[str, tuple[str, ...]] = {
 ENGLISH_STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is",
                      "it", "that", "this", "for", "on", "with", "as", "at")
 
-# lm_perplexity: materialize the bigram pair-count table once above a
-# size gate (see the comment at its use site; None = auto by input
-# size, True/False force an arm for A/B and tests)
-LM_PC_CHECKPOINT: bool | None = None
-
-
 def _spread(df: DataFrame) -> DataFrame:
     """Rebalance a DataFrame whose scan yields fewer partitions than the
     cluster has slots — the case for small/compacted inputs (a single
@@ -587,12 +581,14 @@ def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
     a raw float.
 
     Plan shape: the conditional-total table derives from the bigram
-    pair counts; above a size gate the pair-count table (vocab²-
-    bounded) is materialized once so its two consumers share it —
-    AQE's stage cache does not reuse their identical exchanges (r11,
-    see LM_PC_CHECKPOINT) — and the corpus then pays exactly three
-    passes: pair counts, vocabulary, scoring. V is a broadcast
-    one-row aggregate. The fully-scored LM — pair
+    pair counts, so the pair-count table (vocab²-bounded) has two
+    consumers. Their (cur, nxt) exchanges are NOT reused: Catalyst
+    infers a different null filter into each branch (the scoring join
+    keys on (cur, nxt), the total on cur), so the executed plan at
+    sf0.1 has no ReusedExchange and the corpus pays four passes: pair
+    counts twice, vocabulary, scoring. A localCheckpoint to share them
+    was never measured to pay here and lost at the sites that were
+    measured (plans/r12/). V is a broadcast one-row aggregate. The fully-scored LM — pair
     count ⋈ context total ⋈ V, with the micro-nat log-prob already
     computed — is assembled on the vocabulary-sized side FIRST, so the
     token stream pays exactly ONE equi join + one grouped sum. No
@@ -615,20 +611,6 @@ def lm_perplexity(df: DataFrame, text_col: str, id_col: str,
     else:
         train = ref if ref is not None else df
         pc, cc, vocab = train_bigram_lm(train, text_col, id_col)
-        # pc has TWO consumers (the LM join side and the context-total
-        # derivation). The r11 size-gated checkpoint here was RETRACTED
-        # in r12 with the rest of the pattern (see
-        # dedup.SOURCE_OVERLAP_CHECKPOINT): executed plans show AQE
-        # reusing the heavy exchanges after all, and the forced
-        # checkpoint arm measured slower above the old gate. The force
-        # flag stays for the arm-equality test.
-        from .dedup import SOURCE_OVERLAP_CKPT_MIN_BYTES, _input_bytes
-        if LM_PC_CHECKPOINT or (LM_PC_CHECKPOINT is None and
-                                SOURCE_OVERLAP_CKPT_MIN_BYTES is not None
-                                and _input_bytes(train)
-                                >= SOURCE_OVERLAP_CKPT_MIN_BYTES):
-            pc = pc.localCheckpoint(eager=False)
-            cc = pc.groupBy("cur").agg(F.sum("__c").alias("__total"))
     if ref is None and lm is None:
         # self-trained: every scored bigram exists in the LM, so the
         # fully-scored LM assembles vocabulary-side and the token

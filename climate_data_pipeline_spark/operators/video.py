@@ -260,12 +260,15 @@ def decode_video_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
         # pattern): (width, height, mean) is a pure function of the
         # frame's JPEG bytes, and MJPEG corpora repeat frames heavily
         # (shared intro/outro cards, block-constant synthetics — the
-        # sf0.1 fixture set has ~1k distinct frames across 15k sampled
-        # decodes). Bounded by accumulated key bytes like the mp3
-        # memo; within one task of one run, never across runs.
+        # sf0.1 fixture set has 911 distinct frames, 306,966 key bytes,
+        # across 15k sampled decodes). Bounded by accumulated key bytes
+        # like the mp3 memo; within one task of one run, never across
+        # runs. The cap is per task, so N concurrent tasks pin up to
+        # N × 32 MB: below the ~60 MB sibling memos, and still ~100×
+        # the sf0.1 key bytes.
         memo: dict[bytes, tuple] = {}
         memo_bytes = 0
-        MEMO_BYTES_MAX = 128 * 1024 * 1024
+        MEMO_BYTES_MAX = 32 * 1024 * 1024
 
         def frame_stats(fb: bytes) -> tuple:
             nonlocal memo_bytes

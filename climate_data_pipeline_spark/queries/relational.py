@@ -149,15 +149,7 @@ def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                                                      f"{year}-12-31"))
                  .select("o_custkey").distinct())
 
-    # each cohort feeds THREE set operations. The r11 auto-engaging
-    # size gate was retracted in r12 on direct above-gate measurement
-    # (tools/gate_ab.py at 279 MB and 3.3 GB: AQE reuses the cohort
-    # exchanges after all, and the forced-checkpoint arm ran SLOWER
-    # steady-state — 7.5 s vs 4.6-5.8 s, 37-48 s vs 20-37 s); the call
-    # now engages only when forced (tests / the A/B harness).
-    from ..operators.dedup import checkpoint_above_gate
-    c95 = checkpoint_above_gate(cohort(1995), o)
-    c96 = checkpoint_above_gate(cohort(1996), o)
+    c95, c96 = cohort(1995), cohort(1996)
     rows = [
         ("intersect", c95.intersect(c96)),
         ("except", c95.exceptAll(c96).distinct()),

@@ -338,14 +338,6 @@ def seasonal_mann_kendall_lineitem(spark: SparkSession,
            .agg(F.round(
                F.sum(F.round(F.col("l_quantity") * 1e6).cast("long")) / 1e6
                / F.count(F.lit(1)), 6).alias("v")))
-    # the (series, month, year)-bounded digest has FOUR consumers
-    # (both self-join sides, the season sizes, the tie correction).
-    # The r11 auto-engaging size gate was retracted in r12 (see
-    # dedup.SOURCE_OVERLAP_CHECKPOINT: AQE reuses the heavy exchanges,
-    # and the checkpoint arm measured slower above the old gate);
-    # checkpoint_above_gate now engages only when forced.
-    from ..operators.dedup import checkpoint_above_gate
-    m = checkpoint_above_gate(m, li)
     a, b = m.alias("a"), m.alias("b")
     pairs = (a.join(b, (F.col("a.l_returnflag") == F.col("b.l_returnflag"))
                     & (F.col("a.mon") == F.col("b.mon"))

@@ -66,11 +66,12 @@ def query(name: str, oracle: str | None = None):
 
 # The per-round driver correctness sample reads the FIRST 50 entries of
 # queries() in dict order, so a fixed registration order would pin the
-# driver's coverage to the same 50 names forever (215 registered). This
+# sample to the same 50 names forever (246 registered). This
 # list promotes a rotating slice — this round's changed queries plus
 # families the driver has never sampled — to the front; everything else
-# follows in registration order, so ~35 of the long-standing names stay
-# in the sample for round-over-round continuity. Refresh each round.
+# follows in registration order. The current list has 50 names, so it
+# fills every slot of the sample and no long-standing name outside it
+# is sampled; the full sweep still covers them. Refresh each round.
 DRIVER_ROTATION = [
     # Round 12 (optimization round 2). FIRST: the two r11 gate
     # failures, both fixed this round — mm_features (array column

@@ -347,97 +347,21 @@ def test_perplexity_stream_single_join_and_no_cartesian(spark, sf_small):
 def test_source_overlap_no_distinct_before_collect_set(spark, sf_small):
     """collect_set's partial aggregation IS the dedup — a separate
     distinct() would add a full-stream shuffle. The pair explode must
-    be an ordinary Generate, never a self-join of the stream. (Below
-    the r11 checkpoint size gate the plan stays fully visible — this
-    test is also the guard that the gate defaults OFF at test scale.)"""
+    be an ordinary Generate, never a self-join of the stream."""
     plan = _plan(spark, sf_small, "corpus_source_overlap")
     assert "CartesianProduct" not in plan and "NestedLoop" not in plan
     assert plan.count("partial_collect_set") >= 1
-    assert "ExistingRDD" not in plan
 
 
-def test_source_overlap_checkpoint_gate(spark, sf_small):
-    """r11: the source-set subtree has three consumers and AQE never
-    reuses their exchanges, so above a size gate the subtree is
-    materialized once (lazy localCheckpoint). Forcing the arm on must
-    (a) show the checkpoint boundary in the plan and (b) return
-    EXACTLY the rows of the visible-plan arm — the gate can never
-    flip a result."""
-    from climate_data_pipeline_spark.operators import dedup as D
-
-    name = "corpus_source_overlap"
-    old = D.SOURCE_OVERLAP_CHECKPOINT
-    try:
-        D.SOURCE_OVERLAP_CHECKPOINT = True
-        plan_on = _plan(spark, sf_small, name)
-        assert "ExistingRDD" in plan_on
-        from climate_data_pipeline_spark.registry import queries
-        on = queries()[name](spark, sf_small).toPandas()
-        D.SOURCE_OVERLAP_CHECKPOINT = False
-        off = queries()[name](spark, sf_small).toPandas()
-    finally:
-        D.SOURCE_OVERLAP_CHECKPOINT = old
-    key = ["source_a", "source_b"]
-    on = on.sort_values(key).reset_index(drop=True)
-    off = off.sort_values(key).reset_index(drop=True)
-    import pandas.testing as pt
-    pt.assert_frame_equal(on, off)
-
-
-def test_lm_perplexity_pc_checkpoint_gate(spark, sf_small):
-    """r11: the bigram pair-count table has two consumers (LM join
-    side, context totals) and AQE never reuses their exchanges; above
-    the size gate it is materialized once. Forcing the arm on must
-    show the checkpoint boundary and return exactly the visible-plan
-    arm's rows; the default at test scale keeps the plan visible."""
-    from climate_data_pipeline_spark.operators import text as T
-    from climate_data_pipeline_spark.registry import queries
-
-    name = "text_perplexity"
-    plan = _plan(spark, sf_small, name)
-    assert "ExistingRDD" not in plan        # gate off at test scale
-    old = T.LM_PC_CHECKPOINT
-    try:
-        T.LM_PC_CHECKPOINT = True
-        on = queries()[name](spark, sf_small).toPandas()
-        T.LM_PC_CHECKPOINT = False
-        off = queries()[name](spark, sf_small).toPandas()
-    finally:
-        T.LM_PC_CHECKPOINT = old
-    on = on.sort_values("doc_id").reset_index(drop=True)
-    off = off.sort_values("doc_id").reset_index(drop=True)
-    import pandas.testing as pt
-    pt.assert_frame_equal(on, off)
-
-
-def test_auto_checkpoint_gates_preserve_results(spark, sf_small):
-    """r11: every auto size-gated materialization site
-    (dedup.checkpoint_above_gate consumers — temperature weights,
-    seasonal Mann-Kendall) must return exactly the visible-plan arm's
-    rows when the gate is forced on by zeroing the byte threshold."""
-    import pandas.testing as pt
-
-    from climate_data_pipeline_spark.operators import dedup as D
-    from climate_data_pipeline_spark.registry import queries
-
-    names = ["lang_temperature_resample", "a9_seasonal_mann_kendall"]
-    base = {}
-    for n in names:
-        base[n] = queries()[n](spark, sf_small).toPandas()
-    old = D.SOURCE_OVERLAP_CKPT_MIN_BYTES
-    try:
-        D.SOURCE_OVERLAP_CKPT_MIN_BYTES = 0
-        # prove the arm actually engaged (else the equality below is
-        # vacuous): the checkpoint boundary shows as an RDD scan
-        assert "ExistingRDD" in _plan(spark, sf_small, names[0])
-        for n in names:
-            got = queries()[n](spark, sf_small).toPandas()
-            cols = list(base[n].columns)
-            pt.assert_frame_equal(
-                got.sort_values(cols).reset_index(drop=True),
-                base[n].sort_values(cols).reset_index(drop=True))
-    finally:
-        D.SOURCE_OVERLAP_CKPT_MIN_BYTES = old
+@pytest.mark.parametrize("name", [
+    "corpus_source_overlap", "text_perplexity", "lang_temperature_resample",
+    "a9_seasonal_mann_kendall", "set_ops"])
+def test_shared_subplan_is_not_checkpointed(spark, sf_small, name):
+    """Each of these plans feeds one derived table to several consumers.
+    A localCheckpoint there lost wherever it was measured (the
+    above-gate A/B records in plans/r12/), so the plan stays whole: a
+    checkpoint boundary would show as an RDD scan."""
+    assert "ExistingRDD" not in _plan(spark, sf_small, name)
 
 
 def test_multiprobe_is_bucket_equi_join(spark, sf_small):
