@@ -14,9 +14,10 @@ Endpoints mirrored (reference line refs in handlers):
   GET  /stac /stac/collections /stac/search          (main.py:254-317)
 
 Queries execute through the library `ServingApi`/`Catalog`; request
-counters and latency accumulate in-process and render in the Prometheus
-exposition format (the reference's `arco_requests_total` /
-`arco_request_latency_seconds` counters, main.py:28-39).
+counters and a latency histogram accumulate in-process and render in the
+Prometheus exposition format (the reference's `arco_requests_total` /
+`arco_request_latency_seconds` metrics, main.py:28-39), next to the
+result cache's hit, miss and entry counts.
 """
 
 from __future__ import annotations
@@ -33,11 +34,18 @@ VERSION = "1.0.0"
 class Metrics:
     """Prometheus-style counters, rendered in exposition text format."""
 
+    # upper bounds (seconds) of the latency histogram: the Prometheus
+    # client's default buckets
+    BUCKETS = (0.005, 0.01, 0.025, 0.05, 0.075, 0.1, 0.25, 0.5, 0.75,
+               1.0, 2.5, 5.0, 7.5, 10.0)
+
     def __init__(self):
         self._lock = threading.Lock()
         self.requests: dict[tuple[str, str, str], int] = {}
         self.latency_sum: dict[tuple[str, str], float] = {}
         self.latency_count: dict[tuple[str, str], int] = {}
+        # cumulative: latency_le[k][i] counts requests <= BUCKETS[i]
+        self.latency_le: dict[tuple[str, str], list[int]] = {}
 
     def observe(self, method: str, endpoint: str, status: int,
                 seconds: float) -> None:
@@ -47,23 +55,38 @@ class Metrics:
             lk = (method, endpoint)
             self.latency_sum[lk] = self.latency_sum.get(lk, 0.0) + seconds
             self.latency_count[lk] = self.latency_count.get(lk, 0) + 1
+            le = self.latency_le.setdefault(lk, [0] * len(self.BUCKETS))
+            for i, bound in enumerate(self.BUCKETS):
+                if seconds <= bound:
+                    le[i] += 1
 
-    def render(self) -> str:
+    def render(self, cache_stats: dict) -> str:
+        """Exposition text; `cache_stats` is `QueryCache.stats()`."""
         lines = ["# TYPE arco_requests_total counter"]
         with self._lock:
             for (m, e, s), n in sorted(self.requests.items()):
                 lines.append(
                     f'arco_requests_total{{method="{m}",endpoint="{e}",'
                     f'status="{s}"}} {n}')
-            lines.append("# TYPE arco_request_latency_seconds summary")
+            lines.append("# TYPE arco_request_latency_seconds histogram")
             for (m, e), tot in sorted(self.latency_sum.items()):
                 cnt = self.latency_count[(m, e)]
+                labels = f'method="{m}",endpoint="{e}"'
+                for bound, n in zip(self.BUCKETS, self.latency_le[(m, e)]):
+                    lines.append(f'arco_request_latency_seconds_bucket'
+                                 f'{{{labels},le="{bound}"}} {n}')
+                lines.append(f'arco_request_latency_seconds_bucket'
+                             f'{{{labels},le="+Inf"}} {cnt}')
                 lines.append(
-                    f'arco_request_latency_seconds_sum{{method="{m}",'
-                    f'endpoint="{e}"}} {tot:.6f}')
+                    f'arco_request_latency_seconds_sum{{{labels}}} {tot:.6f}')
                 lines.append(
-                    f'arco_request_latency_seconds_count{{method="{m}",'
-                    f'endpoint="{e}"}} {cnt}')
+                    f'arco_request_latency_seconds_count{{{labels}}} {cnt}')
+        for name, kind, key in (
+                ("arco_cache_hits_total", "counter", "hits"),
+                ("arco_cache_misses_total", "counter", "misses"),
+                ("arco_cache_entries", "gauge", "entries")):
+            lines.append(f"# TYPE {name} {kind}")
+            lines.append(f"{name} {cache_stats[key]}")
         return "\n".join(lines) + "\n"
 
 
@@ -118,7 +141,8 @@ class ServingHttpServer:
         if method == "GET" and path == "/ready":
             return 200, {"status": "ready"}
         if method == "GET" and path == "/metrics":
-            return 200, self.metrics.render()     # text, not JSON
+            return 200, self.metrics.render(      # text, not JSON
+                self.api.cache.stats())
         if method == "GET" and path == "/datasets":
             collection = (query.get("collection") or [None])[0]
             names = self.catalog.list_datasets()
@@ -422,9 +446,12 @@ class ServingHttpServer:
         else:
             labels = None
             key = F.year(tcol)
+        # one row per month, season or year: ordered here, not by a Spark
+        # sort (which adds a range-partition sampling job and an exchange)
         rows = (out.groupBy(key.alias("__k"))
-                   .agg(F.avg(var).alias("__m")).orderBy("__k").collect())
+                   .agg(F.avg(var).alias("__m")).collect())
         if metric == "annual":
+            rows.sort(key=lambda r: (r["__k"] is not None, r["__k"]))
             labels = [str(r["__k"]) for r in rows]
             values = [r["__m"] for r in rows]
         else:
@@ -458,7 +485,7 @@ class ServingHttpServer:
         rows = (out.groupBy(F.month(tcol).alias("__m"))
                    .agg(F.percentile(var, F.array(
                        *[F.lit(p / 100.0) for p in pcts])).alias("__p"))
-                   .orderBy("__m").collect())
+                   .collect())
         by_m = {r["__m"]: r["__p"] for r in rows}
         return {
             "dataset": name,
@@ -544,20 +571,21 @@ class ServingHttpServer:
             raise ApiError(422, f"time must be YYYY-MM-DD, got {at!r}")
         out, tcol, var, loc, (y0, y1) = self._point_slice(
             name, query, "reference_start", "reference_end")
-        clim = (out.where(F.month(tcol) == month)
-                   .agg(F.avg(var).alias("m"),
-                        F.stddev_pop(var).alias("s")).first())
-        obs = (out.where(F.to_date(F.col(tcol)) == at)
-                  .agg(F.avg(var).alias("v")).first())
-        if clim["m"] is None or obs["v"] is None:
+        # climatology and observation in one pass (one Spark action)
+        in_month = F.when(F.month(tcol) == month, F.col(var))
+        on_day = F.when(F.to_date(F.col(tcol)) == at, F.col(var))
+        r = out.agg(F.avg(in_month).alias("m"),
+                    F.stddev_pop(in_month).alias("s"),
+                    F.avg(on_day).alias("v")).first()
+        if r["m"] is None or r["v"] is None:
             raise ApiError(404, f"no data at {at} for {name}")
         if kind == "absolute":
-            value, units, cstd = obs["v"] - clim["m"], "units", None
+            value, units, cstd = r["v"] - r["m"], "units", None
         else:
-            if not clim["s"]:
+            if not r["s"]:
                 raise ApiError(422, "zero climatological variance")
-            value = (obs["v"] - clim["m"]) / clim["s"]
-            units, cstd = "standard deviations", clim["s"]
+            value = (r["v"] - r["m"]) / r["s"]
+            units, cstd = "standard deviations", r["s"]
         return {
             "dataset": name,
             "location": {"lat": loc[0], "lon": loc[1]},
@@ -565,7 +593,7 @@ class ServingHttpServer:
             "reference_period": {"start": y0, "end": y1},
             "anomaly": {"type": kind, "value": value, "units": units,
                         "climatology_month": month,
-                        "climatological_mean": clim["m"],
+                        "climatological_mean": r["m"],
                         "climatological_std": cstd},
             "classification": self._classify_anomaly(value, kind),
             "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),

@@ -54,7 +54,9 @@ class QueryCache:
             return None
         expires, value = entry
         if time.monotonic() > expires:
-            del self._store[key]
+            # pop, not del: another server thread may have dropped the
+            # same expired entry since the lookup above
+            self._store.pop(key, None)
             self._misses += 1
             return None
         self._hits += 1

@@ -36,6 +36,8 @@ class Catalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._entries: dict[str, DatasetEntry] = {}
+        # name → (path, store signature, DataFrame); see `load`
+        self._loaded: dict[str, tuple[str, tuple | None, DataFrame]] = {}
 
     def register(self, name: str, path: str, title: str = "",
                  attrs: dict | None = None,
@@ -55,7 +57,32 @@ class Catalog:
         return sorted(self._entries)
 
     def load(self, name: str) -> DataFrame:
+        """The registered store as a lazy DataFrame, memoized per store
+        state.
+
+        A DataFrame is an analysed plan that can be reused, so a repeat
+        load returns the same object and runs no Spark job (opening a
+        parquet store runs a schema-inference job; NetCDF and Zarr
+        stores decode on the driver). The memo is keyed on the entry's
+        path and a signature of the store's files — relative path, size
+        and mtime of every file under the path — recomputed on every
+        call (one `os.walk`). A rewritten store, a new path from
+        `register`, or a path not on the local file system loads afresh,
+        so a frame whose file index points at deleted part files is
+        never served. Two racing loads both build a correct frame; the
+        last one is kept."""
         entry = self._require(name)
+        sig = _store_signature(entry.path)
+        memo = self._loaded.get(name)
+        if sig is not None and memo is not None \
+                and memo[:2] == (entry.path, sig):
+            return memo[2]
+        df = self._open(entry)
+        self._loaded[name] = (entry.path, sig, df)
+        return df
+
+    def _open(self, entry: DatasetEntry) -> DataFrame:
+        name = entry.name
         # format dispatch: the registry serves parquet stores, classic
         # NetCDF files and Zarr/ARCO stores through one interface (the
         # reference's dataset registry, `api/routes/data.py:12-40`)
@@ -137,3 +164,22 @@ class Catalog:
             raise KeyError(f"dataset {name!r} not registered; "
                            f"known: {self.list_datasets()}")
         return self._entries[name]
+
+
+def _store_signature(path: str) -> tuple | None:
+    """(relative path, size, st_mtime_ns) of every file under `path` (of
+    `path` itself for a single file), or None when `path` is not on the
+    local file system."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return ((".", st.st_size, st.st_mtime_ns),)
+    if not os.path.isdir(path):
+        return None
+    sig = []
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            st = os.stat(full)
+            sig.append((os.path.relpath(full, path), st.st_size,
+                        st.st_mtime_ns))
+    return tuple(sorted(sig))

@@ -28,3 +28,26 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_small():
     return SF_SMALL
+
+
+
+@pytest.fixture
+def spark_jobs_of(spark):
+    """Callable(fn) → (fn(), number of Spark jobs without a job group
+    started while fn ran), read from the status tracker after the
+    listener bus has delivered every pending event. Job ids only grow,
+    so the count holds after the store has evicted old jobs."""
+    sc = spark.sparkContext
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+
+    def run(fn):
+        before = newest()
+        out = fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sum(1 for j in sc.statusTracker().getJobIdsForGroup(None)
+                        if j > before)
+
+    return run

@@ -112,6 +112,22 @@ def test_metrics_exposition(server):
     assert 'arco_requests_total{method="GET",endpoint="/health",' \
            'status="200"}' in text
     assert "arco_request_latency_seconds_count" in text
+    assert "# TYPE arco_request_latency_seconds histogram" in text
+    health = 'method="GET",endpoint="/health"'
+    buckets = [line for line in text.splitlines() if line.startswith(
+        f"arco_request_latency_seconds_bucket{{{health},le=")]
+    assert buckets[-1].startswith(
+        f'arco_request_latency_seconds_bucket{{{health},le="+Inf"}}')
+    counts = [int(line.rsplit(" ", 1)[1]) for line in buckets]
+    assert len(counts) > 1 and counts == sorted(counts)   # cumulative
+    count = next(line for line in text.splitlines() if line.startswith(
+        f"arco_request_latency_seconds_count{{{health}}}"))
+    assert counts[-1] == int(count.rsplit(" ", 1)[1]) >= 1
+    for name, kind in (("arco_cache_hits_total", "counter"),
+                       ("arco_cache_misses_total", "counter"),
+                       ("arco_cache_entries", "gauge")):
+        assert f"# TYPE {name} {kind}" in text
+        assert any(line.startswith(f"{name} ") for line in text.splitlines())
 
 
 # ============ climate data/metrics routes: REAL computed values =============
@@ -165,6 +181,18 @@ def test_point_route_real_series(climate_server):
     with pytest.raises(HTTPError) as e:
         _get(f"{url}/datasets/era5-like/point?lon=0")
     assert e.value.code == 422
+
+
+def test_cached_point_request_runs_no_spark_job(climate_server,
+                                               spark_jobs_of):
+    """A repeated point request is a cache hit: neither the cache lookup
+    nor re-opening the unchanged store runs a Spark job."""
+    url, _rows = climate_server
+    q = f"{url}/datasets/era5-like/point?lat=20&lon=110"
+    first = _get(q)
+    again, n_jobs = spark_jobs_of(lambda: _get(q))
+    assert again[0] == 200 and again[1]["data"] == first[1]["data"]
+    assert n_jobs == 0
 
 
 def test_region_route_pivots_grid(climate_server):

@@ -31,6 +31,19 @@ def test_cache_ttl_and_pattern():
     assert s["entries"] == 1 and s["hits"] == 2 and s["misses"] == 2
 
 
+def test_cache_get_tolerates_concurrent_expiry():
+    """Two threads can read the same expired entry; the second one to drop
+    it must see a miss, not a KeyError (an HTTP 500 in the server)."""
+    class RacedStore(dict):
+        def get(self, key, default=None):    # expired, already removed
+            return (0.0, "stale")
+
+    cache = QueryCache()
+    cache._store = RacedStore()
+    assert cache.get("point:aa") is None
+    assert cache.stats()["misses"] == 1
+
+
 @pytest.fixture(scope="module")
 def api(spark):
     return ServingApi(spark)
