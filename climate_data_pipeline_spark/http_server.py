@@ -17,7 +17,8 @@ Queries execute through the library `ServingApi`/`Catalog`; request
 counters and a latency histogram accumulate in-process and render in the
 Prometheus exposition format (the reference's `arco_requests_total` /
 `arco_request_latency_seconds` metrics, main.py:28-39), next to the
-result cache's hit, miss and entry counts.
+result cache's hit, miss, entry and eviction counts and the cell reads
+per reader.
 """
 
 from __future__ import annotations
@@ -27,6 +28,8 @@ import threading
 import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
+
+from .functions import spark_mirror as sm
 
 VERSION = "1.0.0"
 
@@ -60,8 +63,9 @@ class Metrics:
                 if seconds <= bound:
                     le[i] += 1
 
-    def render(self, cache_stats: dict) -> str:
-        """Exposition text; `cache_stats` is `QueryCache.stats()`."""
+    def render(self, cache_stats: dict, cell_reads: dict) -> str:
+        """Exposition text; `cache_stats` is `QueryCache.stats()`,
+        `cell_reads` is `Catalog.cell_reads`."""
         lines = ["# TYPE arco_requests_total counter"]
         with self._lock:
             for (m, e, s), n in sorted(self.requests.items()):
@@ -84,9 +88,13 @@ class Metrics:
         for name, kind, key in (
                 ("arco_cache_hits_total", "counter", "hits"),
                 ("arco_cache_misses_total", "counter", "misses"),
-                ("arco_cache_entries", "gauge", "entries")):
+                ("arco_cache_entries", "gauge", "entries"),
+                ("arco_cache_evictions_total", "counter", "evictions")):
             lines.append(f"# TYPE {name} {kind}")
             lines.append(f"{name} {cache_stats[key]}")
+        lines.append("# TYPE arco_cell_reads_total counter")
+        for reader, n in sorted(cell_reads.items()):
+            lines.append(f'arco_cell_reads_total{{reader="{reader}"}} {n}')
         return "\n".join(lines) + "\n"
 
 
@@ -108,6 +116,7 @@ class ServingHttpServer:
         self.metrics = Metrics()
         self.api = ServingApi(catalog.spark)
         self._httpd: ThreadingHTTPServer | None = None
+        self._pows: dict[float, tuple[float, float]] = {}   # `_z_powers`
 
     # --- route handlers (return (status, payload)) --------------------------
 
@@ -142,7 +151,7 @@ class ServingHttpServer:
             return 200, {"status": "ready"}
         if method == "GET" and path == "/metrics":
             return 200, self.metrics.render(      # text, not JSON
-                self.api.cache.stats())
+                self.api.cache.stats(), self.catalog.cell_reads)
         if method == "GET" and path == "/datasets":
             collection = (query.get("collection") or [None])[0]
             names = self.catalog.list_datasets()
@@ -240,11 +249,15 @@ class ServingHttpServer:
     # The reference declares these endpoints but returns hardcoded
     # samples ("Sample data - connect to actual data store", routes/
     # data.py:125, metrics.py:46); here the same contract (paths, query
-    # params, payload keys) is served by actual Spark queries over the
-    # catalog dataset. All collects are bounded: coordinate lists by
-    # the grid resolution, point series by ServingApi.MAX_TIMESTEPS,
-    # region grids by ServingApi.MAX_POINTS, everything else is
-    # single-row aggregates.
+    # params, payload keys) is served from the catalog dataset. Region and
+    # stats run Spark queries. The five one-cell routes (cold point,
+    # temporal, percentiles, trend, anomaly) read their cell with
+    # `Catalog.read_cell` (pyarrow, no Spark job, on a local parquet
+    # store) and aggregate it with `functions.spark_mirror`, Spark's own
+    # aggregate formulas, so each payload is bit-identical to the Spark
+    # query it replaces. All reads are bounded: coordinate lists by the
+    # grid resolution, a cell by its time steps, region grids by
+    # ServingApi.MAX_POINTS, everything else is single-row aggregates.
 
     @staticmethod
     def _q(query: dict, key: str, cast=str, default=None, required=False):
@@ -259,10 +272,14 @@ class ServingHttpServer:
             raise ApiError(422, f"invalid value for {key!r}: {raw!r}")
 
     def _grid_dataset(self, name: str, query: dict):
-        """→ (df, time_col, lat_col, lon_col, value_col) or 404/422."""
+        """→ (df, time_col, lat_col, lon_col, value_col, key) or 404/422;
+        `key` names the dataset in cache keys: its name plus the digest of
+        the store state it was loaded at, so a rewritten store is never
+        served from results of the old one."""
         if name not in self.catalog.list_datasets():
             raise ApiError(404, f"Dataset {name} not found")
-        df = self.catalog.load(name)
+        state = self.catalog.state(name)
+        df = state.df
         tcol = next((f.name for f in df.schema.fields
                      if f.dataType.simpleString().startswith("timestamp")),
                     None)
@@ -280,13 +297,13 @@ class ServingHttpServer:
         if not all((tcol, latc, lonc, var)):
             raise ApiError(422, f"dataset {name} is not a (time, lat, "
                                 "lon, value) grid")
-        return df, tcol, latc, lonc, var
+        return df, tcol, latc, lonc, var, f"{name}@{state.digest}"
 
-    def _nearest(self, name: str, df, latc: str, lonc: str,
+    def _nearest(self, key: str, df, latc: str, lonc: str,
                  lat: float, lon: float) -> tuple[float, float]:
         """Nearest grid coordinates (xarray .sel(method='nearest')
         semantics). The distinct coordinate lists are bounded by the
-        grid resolution and cached per dataset."""
+        grid resolution and cached per dataset state."""
         from .serving import cache_key
 
         def build():
@@ -294,13 +311,9 @@ class ServingHttpServer:
             lons = [r[0] for r in df.select(lonc).distinct().collect()]
             return [sorted(lats), sorted(lons)]
 
-        hit = self.api.cache.get(cache_key("coords", dataset=name))
-        if hit is None:
-            hit = build()
-            self.api.cache.set(cache_key("coords", dataset=name), hit)
-        lats, lons = hit
+        lats, lons = self.api.cached(cache_key("coords", dataset=key), build)
         if not lats or not lons:
-            raise ApiError(404, f"dataset {name} has no data")
+            raise ApiError(404, f"dataset {key.split('@')[0]} has no data")
         return (min(lats, key=lambda v: (abs(v - lat), v)),
                 min(lons, key=lambda v: (abs(v - lon), v)))
 
@@ -316,18 +329,64 @@ class ServingHttpServer:
             end += " 23:59:59.999999"
         return (start or "0001-01-01", end)
 
+    def _spark_cast(self, kind: str, text: str, field: str, tz: str) -> int:
+        """`text` cast the way Spark casts a string compared with a
+        TIMESTAMP (µs, in session time zone `tz`) or DATE (days) column;
+        422 where ANSI Spark raises CAST_INVALID_INPUT."""
+        jvm = self.catalog.spark.sparkContext._jvm
+        utils = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils
+        utf8 = jvm.org.apache.spark.unsafe.types.UTF8String.fromString(text)
+        opt = (utils.stringToTimestamp(utf8, utils.getZoneId(tz))
+               if kind == "timestamp" else utils.stringToDate(utf8))
+        if not opt.isDefined():
+            raise ApiError(422, f"invalid value for {field!r}: {text!r}")
+        return int(opt.get())
+
+    def _z_powers(self, z: float) -> tuple[float, float]:
+        """(z ** 3, z ** 5) as Spark's `pow` computes them: the JVM's
+        `StrictMath.pow`, which differs from C's `pow` in the last bit
+        for about one z in five."""
+        if z not in self._pows:
+            pow_ = self.catalog.spark.sparkContext._jvm.java.lang \
+                .StrictMath.pow
+            self._pows[z] = (pow_(z, 3.0), pow_(z, 5.0))
+        return self._pows[z]
+
     def _point_route(self, name: str, query: dict) -> dict:
         """`GET /datasets/{id}/point` (routes/data.py:88-127)."""
         import datetime as _dt
 
+        from pyspark.sql.types import TimestampType
+
+        from .serving import cache_key
+
         lat = self._q(query, "lat", float, required=True)
         lon = self._q(query, "lon", float, required=True)
-        df, tcol, latc, lonc, var = self._grid_dataset(name, query)
-        nlat, nlon = self._nearest(name, df, latc, lonc, lat, lon)
+        df, tcol, latc, lonc, var, key = self._grid_dataset(name, query)
+        nlat, nlon = self._nearest(key, df, latc, lonc, lat, lon)
         tr = self._trange(query)
-        rows = self.api.point_timeseries(
-            df, tcol, var, keys={latc: nlat, lonc: nlon},
-            time_range=tr, dataset=name)
+        keys = {latc: nlat, lonc: nlon}
+
+        def build():
+            # `orderBy(time).limit(MAX_TIMESTEPS).collect()` over the
+            # cell, optionally `between` the bounds; `ts` as collect()
+            # renders a TIMESTAMP (a local datetime)
+            tz = self.catalog.spark.conf.get("spark.sql.session.timeZone")
+            lo, hi = (None, None) if tr is None else (
+                self._spark_cast("timestamp", tr[0], "start_date", tz),
+                self._spark_cast("timestamp", tr[1], "end_date", tz))
+            cell = _Cell(self.catalog.read_cell(name, tcol, var, keys))
+            rows = []
+            for t, v in zip(cell.us, cell.values):
+                if tr is None or (t is not None and lo <= t <= hi):
+                    rows.append({"ts": str(TimestampType().fromInternal(t)),
+                                 "value": v})
+                    if len(rows) == self.api.MAX_TIMESTEPS:
+                        break
+            return rows
+
+        rows = self.api.cached(cache_key("point", dataset=key, var=var,
+                                         keys=keys, tr=tr), build)
         return {
             "dataset": name,
             "location": {"lat": nlat, "lon": nlon,
@@ -350,19 +409,17 @@ class ServingHttpServer:
 
         bbox = tuple(self._q(query, k, float, required=True)
                      for k in ("west", "south", "east", "north"))
-        df, tcol, latc, lonc, var = self._grid_dataset(name, query)
+        df, tcol, latc, lonc, var, key = self._grid_dataset(name, query)
         at = (query.get("time") or [None])[0]
         if at is None:
-            hit = self.api.cache.get(cache_key("latest", dataset=name))
-            if hit is None:
+            def latest():
                 from pyspark.sql import functions as F
-                hit = str(df.agg(F.max(tcol)).first()[0])
-                self.api.cache.set(cache_key("latest", dataset=name), hit)
-            at = hit
+                return str(df.agg(F.max(tcol)).first()[0])
+            at = self.api.cached(cache_key("latest", dataset=key), latest)
         sl = (at, at + (" 23:59:59.999999" if len(at) == 10 else ""))
         pts = self.api.region_grid(df, latc, lonc, var, bbox, at=sl,
                                    time_col=tcol,
-                                   dataset=f"{name}@{at}")
+                                   dataset=f"{key}@{at}")
         lats = sorted({p["lat"] for p in pts})
         lons = sorted({p["lon"] for p in pts})
         cell = {(p["lat"], p["lon"]): p["value"] for p in pts}
@@ -384,13 +441,13 @@ class ServingHttpServer:
 
         bbox = tuple(self._q(query, k, float, required=True)
                      for k in ("west", "south", "east", "north"))
-        df, tcol, latc, lonc, var = self._grid_dataset(name, query)
+        df, tcol, latc, lonc, var, key = self._grid_dataset(name, query)
         tr = self._trange(query)
         if tr is not None:
             df = df.where(F.col(tcol).between(*tr))
         stats = self.api.region_summary(
             df, latc, lonc, var, bbox,
-            dataset=f"{name}@{tr[0]}:{tr[1]}" if tr else name)
+            dataset=f"{key}@{tr[0]}:{tr[1]}" if tr else key)
         return {
             "dataset": name,
             "bbox": {"west": bbox[0], "south": bbox[1],
@@ -404,61 +461,64 @@ class ServingHttpServer:
             "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),
         }
 
-    def _point_slice(self, name: str, query: dict,
-                     start_key="start_year", end_key="end_year"):
-        """Common metrics-route setup: nearest-point filter plus an
-        optional year-range filter; returns (sliced df, cols, nearest)."""
-        from pyspark.sql import functions as F
+    def _cell(self, name: str, query: dict,
+              start_key="start_year", end_key="end_year"):
+        """Common metrics-route setup: the nearest cell's rows, read by
+        `Catalog.read_cell`, kept where `year(time)` lies in the optional
+        year range → (cell, value col, nearest, (y0, y1), session time
+        zone)."""
+        import pyarrow.compute as pc
+
+        from .sources.catalog import local_micros
 
         lat = self._q(query, "lat", float, required=True)
         lon = self._q(query, "lon", float, required=True)
-        df, tcol, latc, lonc, var = self._grid_dataset(name, query)
-        nlat, nlon = self._nearest(name, df, latc, lonc, lat, lon)
-        out = df.where((F.col(latc) == nlat) & (F.col(lonc) == nlon))
+        df, tcol, latc, lonc, var, key = self._grid_dataset(name, query)
+        nlat, nlon = self._nearest(key, df, latc, lonc, lat, lon)
         y0 = self._q(query, start_key, int)
         y1 = self._q(query, end_key, int)
-        if y0 is not None:
-            out = out.where(F.year(tcol) >= y0)
-        if y1 is not None:
-            out = out.where(F.year(tcol) <= y1)
-        return out, tcol, var, (nlat, nlon), (y0, y1)
+        tz = self.catalog.spark.conf.get("spark.sql.session.timeZone")
+        table = self.catalog.read_cell(name, tcol, var,
+                                       {latc: nlat, lonc: nlon})
+        zone = self.catalog.session_zone()
+        year = pc.year(_naive(local_micros(table.column(0), zone)))
+        for bound, keep in ((y0, pc.greater_equal), (y1, pc.less_equal)):
+            if bound is not None:       # a null year drops, as in Spark
+                mask = keep(year, bound)
+                table, year = table.filter(mask), year.filter(mask)
+        return _Cell(table, zone), var, (nlat, nlon), (y0, y1), tz
 
     def _metric_temporal(self, name: str, query: dict) -> dict:
         """`GET /api/v1/metrics/temporal/{id}` (routes/metrics.py:11-46):
-        real monthly/seasonal/annual means at the nearest grid point."""
+        real monthly/seasonal/annual means at the nearest grid point —
+        `groupBy(month | floor((month % 12) / 3) | year).agg(avg)`."""
         import datetime as _dt
-
-        from pyspark.sql import functions as F
 
         metric = self._q(query, "metric", required=True)
         if metric not in ("monthly", "seasonal", "annual"):
             raise ApiError(422, "metric must be monthly|seasonal|annual")
-        out, tcol, var, loc, (y0, y1) = self._point_slice(name, query)
+        cell, var, loc, (y0, y1), _ = self._cell(name, query)
         if metric == "monthly":
             labels = ["Jan", "Feb", "Mar", "Apr", "May", "Jun", "Jul",
                       "Aug", "Sep", "Oct", "Nov", "Dec"]
-            key = F.month(tcol)
+            keys = cell.month
         elif metric == "seasonal":
             # DJF/MAM/JJA/SON, the reference's season labels
             # (metrics/temporal.py:73-83)
             labels = ["DJF", "MAM", "JJA", "SON"]
-            key = F.floor((F.month(tcol) % 12) / 3)
+            keys = [None if m is None else (m % 12) // 3 for m in cell.month]
         else:
             labels = None
-            key = F.year(tcol)
-        # one row per month, season or year: ordered here, not by a Spark
-        # sort (which adds a range-partition sampling job and an exchange)
-        rows = (out.groupBy(key.alias("__k"))
-                   .agg(F.avg(var).alias("__m")).collect())
+            keys = cell.year
+        means = {k: sm.avg(vs) for k, vs in _groups(keys, cell.values)}
         if metric == "annual":
-            rows.sort(key=lambda r: (r["__k"] is not None, r["__k"]))
-            labels = [str(r["__k"]) for r in rows]
-            values = [r["__m"] for r in rows]
+            order = sorted(means, key=lambda k: (k is not None, k))
+            labels = [str(k) for k in order]
+            values = [means[k] for k in order]
         else:
-            by_k = {r["__k"]: r["__m"] for r in rows}
             first = 1 if metric == "monthly" else 0
-            values = [by_k.get(k) for k in range(first,
-                                                 first + len(labels))]
+            values = [means.get(k) for k in range(first,
+                                                  first + len(labels))]
         return {
             "dataset": name, "metric": f"{metric}_mean",
             "location": {"lat": loc[0], "lon": loc[1]},
@@ -470,30 +530,29 @@ class ServingHttpServer:
     def _metric_percentiles(self, name: str, query: dict) -> dict:
         """`GET /api/v1/metrics/percentiles/{id}`
         (routes/metrics.py:70-117): per-month climatological
-        percentiles at the nearest grid point."""
+        percentiles at the nearest grid point — `groupBy(month)
+        .agg(percentile(value, array(p / 100.0, ...)))`."""
         import datetime as _dt
-
-        from pyspark.sql import functions as F
 
         raw = self._q(query, "percentiles", default="10,25,50,75,90,95,99")
         try:
             pcts = [int(p.strip()) for p in raw.split(",") if p.strip()]
         except ValueError:
             raise ApiError(422, f"invalid percentiles list: {raw!r}")
-        out, tcol, var, loc, (y0, y1) = self._point_slice(
+        if not pcts or not all(0 <= p <= 100 for p in pcts):
+            raise ApiError(422, f"percentiles must be 0..100: {raw!r}")
+        cell, var, loc, (y0, y1), _ = self._cell(
             name, query, "reference_start", "reference_end")
-        rows = (out.groupBy(F.month(tcol).alias("__m"))
-                   .agg(F.percentile(var, F.array(
-                       *[F.lit(p / 100.0) for p in pcts])).alias("__p"))
-                   .collect())
-        by_m = {r["__m"]: r["__p"] for r in rows}
+        ps = [p / 100.0 for p in pcts]
+        by_m = {m: sm.percentile(vs, ps, cell.float32)
+                for m, vs in _groups(cell.month, cell.values)}
         return {
             "dataset": name,
             "location": {"lat": loc[0], "lon": loc[1]},
             "reference_period": {"start": y0, "end": y1},
             "percentiles": pcts,
             "values": {"months": list(range(1, 13)),
-                       **{f"p{p}": [by_m.get(m, [None] * len(pcts))[i]
+                       **{f"p{p}": [(by_m.get(m) or [None] * len(pcts))[i]
                                     for m in range(1, 13)]
                           for i, p in enumerate(pcts)}},
             "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),
@@ -501,31 +560,42 @@ class ServingHttpServer:
 
     def _metric_trend(self, name: str, query: dict) -> dict:
         """`GET /api/v1/metrics/trend/{id}` (routes/metrics.py:119-162):
-        OLS slope + significance at the nearest grid point, via the A10
-        closed-form stderr operator (scipy.linregress parity)."""
+        OLS slope + significance at the nearest grid point, the A10
+        closed-form stderr operator `trend_with_confidence`
+        (scipy.linregress parity) over the cell."""
         import datetime as _dt
         import math
 
-        from .operators.trends import trend_with_confidence
+        from .operators.trends import _normal_quantile
 
         conf = self._q(query, "confidence", float, default=0.95)
-        out, tcol, var, loc, (y0, y1) = self._point_slice(name, query)
-        r = trend_with_confidence(out, tcol, var,
-                                  confidence=conf).first()
-        if r is None or r["n"] < 3:
+        cell, var, loc, (y0, y1), tz = self._cell(name, query)
+        # x = fractional_years(time, "1995-01-01"): whole seconds since t0
+        # (unix_timestamp floors) over a 365.25-day year
+        t0 = self._spark_cast("timestamp", "1995-01-01", "t0",
+                              tz) // 1_000_000
+        xs = [None if t is None else (t // 1_000_000 - t0) / 31557600.0
+              for t in cell.us]
+        n = sum(v is not None for v in cell.values)
+        slope = sm.regr_slope(cell.values, xs)
+        if n < 3 or slope is None:
             raise ApiError(404, "not enough data for a trend")
+        se = sm.trend_std_err(sm.var_pop(cell.values), sm.var_pop(xs),
+                              slope, n)
+        z = _normal_quantile((1 + conf) / 2)
+        z3, z5 = self._z_powers(z)
+        margin = None if se is None else sm.t_crit(z, z3, z5, n) * se
         # two-sided p-value from the t statistic via the normal CDF
         # (n is large for climate series; documented approximation).
         # A perfectly-linear series makes the closed-form residual
         # variance a tiny negative number → NaN stderr; clamp to the
         # exact-fit limit (zero residual, p = 0).
-        se, margin = r["std_err"], r["margin"]
         if se is None or se != se or se <= 0:
             se, margin = 0.0, 0.0
         if se == 0:
-            p_value = 0.0 if r["slope"] else 1.0
+            p_value = 0.0 if slope else 1.0
         else:
-            tstat = r["slope"] / se
+            tstat = slope / se
             p_value = 2 * (1 - 0.5 * (1 + math.erf(abs(tstat)
                                                    / math.sqrt(2))))
         years = ((y1 or 9999) - (y0 or 0))
@@ -534,18 +604,17 @@ class ServingHttpServer:
             "location": {"lat": loc[0], "lon": loc[1]},
             "period": {"start": y0, "end": y1},
             "trend": {
-                "slope": r["slope"], "slope_units": "units per year",
-                "total_change": (r["slope"] * years
-                                 if y0 and y1 else None),
+                "slope": slope, "slope_units": "units per year",
+                "total_change": (slope * years if y0 and y1 else None),
                 "p_value": p_value,
                 "significant": p_value < (1 - conf),
                 "confidence_level": conf,
                 "confidence_interval": {
-                    "lower": r["slope"] - margin,
-                    "upper": r["slope"] + margin},
+                    "lower": slope - margin,
+                    "upper": slope + margin},
             },
             "method": "ordinary_least_squares",
-            "n": r["n"],
+            "n": n,
             "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),
         }
 
@@ -553,10 +622,10 @@ class ServingHttpServer:
         """`GET /api/v1/metrics/anomaly/{id}` (routes/metrics.py:164-218):
         anomaly vs the month's climatology at the nearest grid point,
         absolute or standardized, with the reference's severity
-        classification (metrics.py:221-247)."""
+        classification (metrics.py:221-247): `avg`/`stddev_pop` of the
+        month's values and `avg` of the values on `to_date(time) ==
+        time`."""
         import datetime as _dt
-
-        from pyspark.sql import functions as F
 
         at = self._q(query, "time", required=True)
         kind = self._q(query, "anomaly_type", default="absolute")
@@ -569,23 +638,22 @@ class ServingHttpServer:
                 raise ValueError(at)
         except (IndexError, ValueError):
             raise ApiError(422, f"time must be YYYY-MM-DD, got {at!r}")
-        out, tcol, var, loc, (y0, y1) = self._point_slice(
+        cell, var, loc, (y0, y1), tz = self._cell(
             name, query, "reference_start", "reference_end")
-        # climatology and observation in one pass (one Spark action)
-        in_month = F.when(F.month(tcol) == month, F.col(var))
-        on_day = F.when(F.to_date(F.col(tcol)) == at, F.col(var))
-        r = out.agg(F.avg(in_month).alias("m"),
-                    F.stddev_pop(in_month).alias("s"),
-                    F.avg(on_day).alias("v")).first()
-        if r["m"] is None or r["v"] is None:
+        day = self._spark_cast("date", at, "time", tz)
+        in_month = [v for m, v in zip(cell.month, cell.values) if m == month]
+        clim, cstd = sm.avg(in_month), sm.stddev_pop(in_month)
+        obs = sm.avg([v for d, v in zip(cell.days(), cell.values)
+                      if d == day])
+        if clim is None or obs is None:
             raise ApiError(404, f"no data at {at} for {name}")
         if kind == "absolute":
-            value, units, cstd = r["v"] - r["m"], "units", None
+            value, units, cstd = obs - clim, "units", None
         else:
-            if not r["s"]:
+            if not cstd:
                 raise ApiError(422, "zero climatological variance")
-            value = (r["v"] - r["m"]) / r["s"]
-            units, cstd = "standard deviations", r["s"]
+            value = (obs - clim) / cstd
+            units = "standard deviations"
         return {
             "dataset": name,
             "location": {"lat": loc[0], "lon": loc[1]},
@@ -593,7 +661,7 @@ class ServingHttpServer:
             "reference_period": {"start": y0, "end": y1},
             "anomaly": {"type": kind, "value": value, "units": units,
                         "climatology_month": month,
-                        "climatological_mean": r["m"],
+                        "climatological_mean": clim,
                         "climatological_std": cstd},
             "classification": self._classify_anomaly(value, kind),
             "timestamp": _dt.datetime.now(_dt.timezone.utc).isoformat(),
@@ -683,3 +751,43 @@ class ServingHttpServer:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+
+
+class _Cell:
+    """One grid cell's rows from `Catalog.read_cell` as Python lists: UTC
+    microseconds and values and, given the session time `zone`, the
+    calendar fields Spark's `year`, `month` and `to_date` read."""
+
+    def __init__(self, table, zone=None):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from .sources.catalog import local_micros
+
+        self.us = table.column(0).cast(pa.int64()).to_pylist()
+        self.values = table.column(1).to_pylist()
+        self.float32 = pa.types.is_float32(table.column(1).type)
+        if zone is not None:
+            self._wall = local_micros(table.column(0), zone)
+            self.year = pc.year(_naive(self._wall)).to_pylist()
+            self.month = pc.month(_naive(self._wall)).to_pylist()
+
+    def days(self) -> list[int | None]:
+        """Local dates as days since 1970-01-01."""
+        return [None if w is None else w // 86_400_000_000
+                for w in self._wall.to_pylist()]
+
+
+def _naive(micros):
+    import pyarrow as pa
+
+    return micros.cast(pa.timestamp("us"))
+
+
+def _groups(keys, values):
+    """(key, values in row order) per distinct key — a `groupBy` whose
+    groups keep the order rows reach the aggregate."""
+    out: dict = {}
+    for k, v in zip(keys, values):
+        out.setdefault(k, []).append(v)
+    return out.items()

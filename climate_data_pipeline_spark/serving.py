@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import json
+import threading
 import time
 from collections.abc import Sequence
 
@@ -44,39 +45,51 @@ class QueryCache:
     def __init__(self, default_ttl: float = 3600.0):
         self.default_ttl = default_ttl
         self._store: dict[str, tuple[float, object]] = {}
-        self._hits = 0
-        self._misses = 0
+        # hits, misses, evictions (expiry drops, `delete`, `clear_pattern`);
+        # bumped under a lock, as server threads share the cache
+        self._counts = {"hits": 0, "misses": 0, "evictions": 0}
+        self._lock = threading.Lock()
+
+    def _count(self, name: str, n: int = 1) -> None:
+        with self._lock:
+            self._counts[name] += n
 
     def get(self, key: str):
         entry = self._store.get(key)
         if entry is None:
-            self._misses += 1
+            self._count("misses")
             return None
         expires, value = entry
         if time.monotonic() > expires:
             # pop, not del: another server thread may have dropped the
             # same expired entry since the lookup above
-            self._store.pop(key, None)
-            self._misses += 1
+            if self._store.pop(key, None) is not None:
+                self._count("evictions")
+            self._count("misses")
             return None
-        self._hits += 1
+        self._count("hits")
         return value
 
     def set(self, key: str, value, ttl: float | None = None) -> None:
         self._store[key] = (time.monotonic() + (ttl or self.default_ttl), value)
 
     def delete(self, key: str) -> bool:
-        return self._store.pop(key, None) is not None
+        removed = self._store.pop(key, None) is not None
+        self._count("evictions", removed)
+        return removed
 
     def clear_pattern(self, prefix: str) -> int:
-        doomed = [k for k in self._store if k.startswith(prefix)]
-        for k in doomed:
-            del self._store[k]
-        return len(doomed)
+        """Drop every key starting with `prefix` → the number dropped. The
+        key list is a snapshot (server threads insert while this runs),
+        and a key another thread has dropped meanwhile is not counted."""
+        removed = sum(self._store.pop(k, None) is not None
+                      for k in list(self._store) if k.startswith(prefix))
+        self._count("evictions", removed)
+        return removed
 
     def stats(self) -> dict:
-        return {"entries": len(self._store), "hits": self._hits,
-                "misses": self._misses}
+        with self._lock:
+            return {"entries": len(self._store), **self._counts}
 
 
 class ServingApi:
@@ -91,7 +104,7 @@ class ServingApi:
         self.spark = spark
         self.cache = cache if cache is not None else QueryCache()
 
-    def _cached(self, key: str, build):
+    def cached(self, key: str, build):
         hit = self.cache.get(key)
         if hit is not None:
             return hit
@@ -120,7 +133,7 @@ class ServingApi:
             return [{"ts": str(r[time_col]), "value": r[value_col]}
                     for r in rows]
 
-        return self._cached(key, build)
+        return self.cached(key, build)
 
     def region_grid(self, df: DataFrame, lat_col: str, lon_col: str,
                     value_col: str,
@@ -143,7 +156,7 @@ class ServingApi:
             return [{"lat": r[lat_col], "lon": r[lon_col],
                      "value": r[value_col]} for r in rows]
 
-        return self._cached(key, build)
+        return self.cached(key, build)
 
     def region_summary(self, df: DataFrame, lat_col: str, lon_col: str,
                        value_col: str,
@@ -158,7 +171,7 @@ class ServingApi:
             return {k: row[k] for k in
                     ("mean", "std", "min", "max", "n", "p10", "p50", "p90")}
 
-        return self._cached(key, build)
+        return self.cached(key, build)
 
     def metric(self, df: DataFrame, metric_type: str, time_col: str,
                value_col: str, keys: Sequence[str] = (),
@@ -174,4 +187,4 @@ class ServingApi:
                              params)
             return [r.asDict() for r in out.limit(limit).collect()]
 
-        return self._cached(key, build)
+        return self.cached(key, build)

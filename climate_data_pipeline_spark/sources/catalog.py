@@ -11,8 +11,12 @@ live in a JSON sidecar dict here — metadata never blocks queries
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
+import operator
 import os
+import threading
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,14 +34,34 @@ class DatasetEntry:
     var_attrs: dict = field(default_factory=dict)      # per-column attrs
 
 
+@dataclass
+class StoreState:
+    """A registered store as loaded: its frame and the path and file
+    signature it was loaded at (see `Catalog.load`)."""
+    path: str
+    sig: tuple | None
+    df: DataFrame
+    # (pyarrow dataset, its INT96 columns) of a local parquet store,
+    # opened on the first `Catalog.read_cell`
+    cells: tuple | None = None
+
+    @property
+    def digest(self) -> str:
+        """12 hex chars that change whenever the store's files do."""
+        return hashlib.sha256(repr((self.path, self.sig)).encode()) \
+            .hexdigest()[:12]
+
+
 class Catalog:
     """STAC-lite registry: name → parquet path + attrs sidecar."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._entries: dict[str, DatasetEntry] = {}
-        # name → (path, store signature, DataFrame); see `load`
-        self._loaded: dict[str, tuple[str, tuple | None, DataFrame]] = {}
+        self._loaded: dict[str, StoreState] = {}     # see `load`
+        self._lock = threading.Lock()
+        self.cell_reads = {"parquet": 0, "frame": 0}  # see `read_cell`
+        self._zones: dict = {}                        # see `session_zone`
 
     def register(self, name: str, path: str, title: str = "",
                  attrs: dict | None = None,
@@ -75,22 +99,116 @@ class Catalog:
         sig = _store_signature(entry.path)
         memo = self._loaded.get(name)
         if sig is not None and memo is not None \
-                and memo[:2] == (entry.path, sig):
-            return memo[2]
-        df = self._open(entry)
-        self._loaded[name] = (entry.path, sig, df)
-        return df
+                and (memo.path, memo.sig) == (entry.path, sig):
+            return memo.df
+        state = StoreState(entry.path, sig, self._open(entry))
+        self._loaded[name] = state
+        return state.df
+
+    def state(self, name: str) -> StoreState:
+        """The memoized `StoreState` behind `load` (refreshed by it); its
+        `digest` keys results computed from this state of the store."""
+        self.load(name)
+        return self._loaded[name]
+
+    def read_cell(self, name: str, time_col: str, value_col: str,
+                  keys: dict[str, float]):
+        """The rows of one grid cell (`keys`: column → value, equality) as
+        a pyarrow Table of (`time_col` as timestamp[us, UTC],
+        `value_col`), stable-sorted by time, nulls first — the order in
+        which Spark aggregates a cell of a `timeseries` store.
+
+        A local parquet store is read with pyarrow, no Spark job: a
+        `pyarrow.dataset` (hive partitioning, as Spark discovers it)
+        memoized on the same path and file signature as `load`, scanned
+        for two columns under the cell filter, so row-group min/max
+        statistics skip the groups that cannot hold the cell. Every other
+        store (NetCDF, Zarr, a path not on the local file system) reads
+        the same cell from the memoized frame in one Spark job. Counted
+        per arm in `cell_reads`."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        state = self.state(name)
+        if state.sig is not None and _format(state.path) == "parquet":
+            arm, table = "parquet", self._parquet_cell(
+                state, time_col, value_col, keys)
+        else:
+            from pyspark.sql import functions as F
+            cond = functools.reduce(operator.and_, (
+                F.col(c) == F.lit(v) for c, v in keys.items()))
+            arm, table = "frame", (state.df.where(cond)
+                                   .select(time_col, value_col).toArrow())
+        with self._lock:
+            self.cell_reads[arm] += 1
+        utc = pa.timestamp("us", tz="UTC")
+        table = table.set_column(0, time_col, table.column(0).cast(utc))
+        return table.take(pc.sort_indices(
+            table, [(time_col, "ascending")], null_placement="at_start"))
+
+    def _parquet_cell(self, state: StoreState, time_col: str,
+                      value_col: str, keys: dict[str, float]):
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if state.cells is None:
+            fmt = ds.ParquetFileFormat(read_options=ds.ParquetReadOptions(
+                coerce_int96_timestamp_unit="us"))
+            dataset = ds.dataset(state.path, format=fmt,
+                                 partitioning="hive")
+            state.cells = (dataset, _int96_columns(dataset))
+        dataset, int96 = state.cells
+        cond = functools.reduce(operator.and_, (
+            ds.field(c) == v for c, v in keys.items()))
+        table = dataset.to_table(columns=[time_col, value_col], filter=cond)
+        t = table.column(0)
+        if t.type.tz is None and t.type.unit in ("ms", "us") \
+                and time_col not in int96:
+            # tz-naive micros/millis: Spark reads TIMESTAMP_NTZ, which
+            # `load_parquet` casts to TIMESTAMP as wall-clock time in the
+            # session time zone. (INT96 and tz-naive NANOS, read as
+            # int64 and converted by `load_parquet`, are UTC instants.)
+            t = _wall_clock_to_utc(t, self.session_zone())
+        else:
+            t = t.cast(pa.timestamp("us", tz="UTC"), safe=False)
+        return table.set_column(0, time_col, t)
+
+    def session_zone(self):
+        """`spark.sql.session.timeZone` as Spark resolves it
+        (`DateTimeUtils.getZoneId`, normalized): a fixed
+        `datetime.timezone` for an offset ("+05:30", "GMT+8", "UTC"),
+        else a `ZoneInfo`."""
+        import datetime as dt
+        from zoneinfo import ZoneInfo
+
+        tz = self.spark.conf.get("spark.sql.session.timeZone")
+        zone = self._zones.get(tz)
+        if zone is None:
+            utils = self.spark.sparkContext._jvm.org.apache.spark.sql \
+                .catalyst.util.DateTimeUtils
+            zid = utils.getZoneId(tz).normalized().getId()
+            if zid == "Z":
+                zone = dt.timezone.utc
+            elif zid[0] in "+-":
+                h, m, sec = (zid[1:].split(":") + ["0", "0"])[:3]
+                off = dt.timedelta(hours=int(h), minutes=int(m),
+                                   seconds=int(sec))
+                zone = dt.timezone(-off if zid[0] == "-" else off)
+            else:
+                zone = ZoneInfo(zid)
+            self._zones[tz] = zone
+        return zone
 
     def _open(self, entry: DatasetEntry) -> DataFrame:
         name = entry.name
         # format dispatch: the registry serves parquet stores, classic
         # NetCDF files and Zarr/ARCO stores through one interface (the
         # reference's dataset registry, `api/routes/data.py:12-40`)
-        if entry.path.endswith(".nc"):
+        fmt = _format(entry.path)
+        if fmt == "netcdf":
             from .netcdf import read_netcdf_long
             return read_netcdf_long(self.spark, entry.path)
-        if entry.path.rstrip("/").endswith(".zarr") or os.path.exists(
-                os.path.join(entry.path, ".zmetadata")):
+        if fmt == "zarr":
             from .zarr2 import read_zarr_long
             return read_zarr_long(self.spark, entry.path)
         # reuse the nanos-aware loader for known table names
@@ -164,6 +282,68 @@ class Catalog:
             raise KeyError(f"dataset {name!r} not registered; "
                            f"known: {self.list_datasets()}")
         return self._entries[name]
+
+
+def _format(path: str) -> str:
+    """"netcdf", "zarr" or "parquet": how `Catalog._open` reads `path`."""
+    if path.endswith(".nc"):
+        return "netcdf"
+    if path.rstrip("/").endswith(".zarr") or os.path.exists(
+            os.path.join(path, ".zmetadata")):
+        return "zarr"
+    return "parquet"
+
+
+def _int96_columns(dataset) -> frozenset:
+    """Columns stored as INT96 (Spark's default timestamp encoding, which
+    pyarrow reads as tz-naive), from the first file's footer."""
+    frag = next(iter(dataset.get_fragments()), None)
+    if frag is None:
+        return frozenset()
+    schema = frag.metadata.schema
+    return frozenset(schema.column(i).name for i in range(len(schema))
+                     if schema.column(i).physical_type == "INT96")
+
+
+def local_micros(t, zone):
+    """UTC instants (a timestamp or int64 µs pyarrow array) → the wall
+    clock in `zone` as int64 µs: the local date-time Spark's `year`,
+    `month` and `to_date` read in the session time zone."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(zone, dt.timezone):
+        off = zone.utcoffset(None) // dt.timedelta(microseconds=1)
+        return pc.add(t.cast(pa.int64()), off)
+    return pc.local_timestamp(t.cast(pa.timestamp("us", tz=zone.key))) \
+        .cast(pa.int64())
+
+
+def _wall_clock_to_utc(t, zone):
+    """tz-naive wall-clock timestamps → UTC instants in `zone`, as Java
+    resolves a local date-time: a time in a gap moves forward by the
+    gap, an ambiguous one takes the earlier offset (zoneinfo's fold=0
+    does both)."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    wall = t.cast(pa.timestamp("us")).cast(pa.int64())
+    if isinstance(zone, dt.timezone):
+        off = zone.utcoffset(None) // dt.timedelta(microseconds=1)
+        return pc.subtract(wall, off).cast(pa.timestamp("us", tz="UTC"))
+    epoch = dt.datetime(1970, 1, 1)
+    out = []
+    for us in wall.to_pylist():
+        if us is None:
+            out.append(None)
+            continue
+        local = (epoch + dt.timedelta(microseconds=us)).replace(tzinfo=zone)
+        out.append(us - local.utcoffset() // dt.timedelta(microseconds=1))
+    return pa.array(out, pa.int64()).cast(pa.timestamp("us", tz="UTC"))
 
 
 def _store_signature(path: str) -> tuple | None:

@@ -125,9 +125,33 @@ def test_metrics_exposition(server):
     assert counts[-1] == int(count.rsplit(" ", 1)[1]) >= 1
     for name, kind in (("arco_cache_hits_total", "counter"),
                        ("arco_cache_misses_total", "counter"),
-                       ("arco_cache_entries", "gauge")):
+                       ("arco_cache_entries", "gauge"),
+                       ("arco_cache_evictions_total", "counter")):
         assert f"# TYPE {name} {kind}" in text
         assert any(line.startswith(f"{name} ") for line in text.splitlines())
+    assert "# TYPE arco_cell_reads_total counter" in text
+    for reader in ("parquet", "frame"):
+        assert any(line.startswith(f'arco_cell_reads_total{{reader="{reader}"}} ')
+                   for line in text.splitlines())
+
+
+def test_metrics_count_cell_reads(climate_server):
+    """A cold point request reads its cell with pyarrow (the parquet
+    reader), counted on /metrics."""
+    url, _rows = climate_server
+
+    def value(text, prefix):
+        return int(next(line for line in text.splitlines()
+                        if line.startswith(prefix)).rsplit(" ", 1)[1])
+
+    _, before = _get(f"{url}/metrics")
+    _get(f"{url}/datasets/era5-like/point?lat=0&lon=110"
+         "&start_date=2020-02-01")
+    _, after = _get(f"{url}/metrics")
+    reads = 'arco_cell_reads_total{reader="parquet"}'
+    assert value(after, reads) == value(before, reads) + 1
+    assert value(after, 'arco_cell_reads_total{reader="frame"}') == \
+        value(before, 'arco_cell_reads_total{reader="frame"}')
 
 
 # ============ climate data/metrics routes: REAL computed values =============

@@ -44,6 +44,93 @@ def test_cache_get_tolerates_concurrent_expiry():
     assert cache.stats()["misses"] == 1
 
 
+def test_clear_pattern_tolerates_concurrent_set_and_expiry():
+    """Server threads set and expire entries while `clear_pattern` scans.
+    The scan runs Python code per key (`startswith`), where another
+    thread can take the interpreter lock; here a key does what such a
+    thread would: a `set` lands (the old scan raised `dictionary changed
+    size during iteration`) and an expiring `get` drops a matching key
+    first (the old `del` raised KeyError). Only keys actually removed
+    count, as removals and as evictions."""
+    cache = QueryCache()
+
+    class Interleaved(str):
+        def startswith(self, prefix, *args):
+            for k in ("region:late", "stats:late"):     # two sets
+                cache._store[k] = (float("inf"), "new")
+            cache._store.pop("point:b", None)          # one expiry
+            return str.startswith(self, prefix, *args)
+
+    cache._store = {Interleaved("point:a"): (float("inf"), 1),
+                    "point:b": (float("inf"), 2),
+                    "region:c": (float("inf"), 3)}
+    assert cache.clear_pattern("point:") == 1
+    assert sorted(cache._store) == ["region:c", "region:late", "stats:late"]
+    assert cache.stats()["evictions"] == 1
+
+
+def test_cache_counts_evictions():
+    cache = QueryCache(default_ttl=60)
+    cache.set("a", 1)
+    cache.set("b", 2, ttl=1e-9)
+    cache.set("c", 3)
+    import time
+    time.sleep(0.001)
+    assert cache.get("b") is None                  # expired: evicted
+    assert cache.delete("a") and not cache.delete("a")
+    assert cache.clear_pattern("c") == 1
+    s = cache.stats()
+    assert s["evictions"] == 3 and s["entries"] == 0
+
+
+def test_cache_counts_hold_under_thread_contention():
+    """Writers insert while a janitor thread clears their prefix, with
+    the interpreter switching threads every microsecond: no scan fails,
+    and every inserted key is counted as exactly one eviction."""
+    import sys
+    import threading
+
+    cache = QueryCache()
+    n_writers, n_keys = 8, 300
+    done = threading.Event()
+    cleared, errors = [], []
+
+    def write(t):
+        for i in range(n_keys):
+            cache.set(f"k:{t}:{i}", i)
+            cache.get(f"k:{t}:{i}")
+
+    def janitor():
+        try:
+            while not done.is_set():
+                cleared.append(cache.clear_pattern("k:"))
+        except Exception as exc:               # noqa: BLE001
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        jt = threading.Thread(target=janitor)
+        jt.start()
+        writers = [threading.Thread(target=write, args=(t,))
+                   for t in range(n_writers)]
+        for w in writers:
+            w.start()
+        for w in writers:
+            w.join(timeout=60)
+        done.set()
+        jt.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not jt.is_alive() and not any(w.is_alive() for w in writers)
+    assert errors == []
+    cleared.append(cache.clear_pattern("k:"))
+    s = cache.stats()
+    assert s["entries"] == 0
+    assert s["evictions"] == sum(cleared) == n_writers * n_keys
+    assert s["hits"] + s["misses"] == n_writers * n_keys
+
+
 @pytest.fixture(scope="module")
 def api(spark):
     return ServingApi(spark)
