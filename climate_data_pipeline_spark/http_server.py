@@ -199,11 +199,7 @@ class ServingHttpServer:
         d = self.catalog.describe(name)
         return {"id": d["id"], "name": d["title"],
                 "description": d["attrs"].get("description", d["title"]),
-                "format": "parquet" if d["path"].endswith(".parquet")
-                          else ("zarr" if ".zarr" in d["path"] or
-                                d["attrs"].get("format") == "zarr"
-                                else "netcdf" if d["path"].endswith(".nc")
-                                else "parquet"),
+                "format": d["format"],
                 "variables": sorted(d["variables"])}
 
     def _data_query(self, body: dict) -> dict:
@@ -342,6 +338,24 @@ class ServingHttpServer:
             raise ApiError(422, f"invalid value for {field!r}: {text!r}")
         return int(opt.get())
 
+    def _cast_checked(self, run, bounds: list[tuple[str, str]]):
+        """`run()`, with ANSI Spark's CAST_INVALID_INPUT answered as the
+        point routes answer it: 422 naming the first of the (field,
+        string) `bounds` that Spark cannot cast to a timestamp. Spark
+        raises it only when a cache miss runs its query, so a cache hit
+        pays nothing here."""
+        from pyspark.errors import PySparkException
+
+        try:
+            return run()
+        except PySparkException as exc:
+            if exc.getCondition() != "CAST_INVALID_INPUT":
+                raise
+            tz = self.catalog.spark.conf.get("spark.sql.session.timeZone")
+            for field, text in bounds:
+                self._spark_cast("timestamp", text, field, tz)
+            raise
+
     def _z_powers(self, z: float) -> tuple[float, float]:
         """(z ** 3, z ** 5) as Spark's `pow` computes them: the JVM's
         `StrictMath.pow`, which differs from C's `pow` in the last bit
@@ -417,9 +431,11 @@ class ServingHttpServer:
                 return str(df.agg(F.max(tcol)).first()[0])
             at = self.api.cached(cache_key("latest", dataset=key), latest)
         sl = (at, at + (" 23:59:59.999999" if len(at) == 10 else ""))
-        pts = self.api.region_grid(df, latc, lonc, var, bbox, at=sl,
-                                   time_col=tcol,
-                                   dataset=f"{key}@{at}")
+        pts = self._cast_checked(
+            lambda: self.api.region_grid(df, latc, lonc, var, bbox, at=sl,
+                                         time_col=tcol,
+                                         dataset=f"{key}@{at}"),
+            [("time", sl[0]), ("time", sl[1])])
         lats = sorted({p["lat"] for p in pts})
         lons = sorted({p["lon"] for p in pts})
         cell = {(p["lat"], p["lon"]): p["value"] for p in pts}
@@ -445,9 +461,11 @@ class ServingHttpServer:
         tr = self._trange(query)
         if tr is not None:
             df = df.where(F.col(tcol).between(*tr))
-        stats = self.api.region_summary(
-            df, latc, lonc, var, bbox,
-            dataset=f"{key}@{tr[0]}:{tr[1]}" if tr else key)
+        stats = self._cast_checked(
+            lambda: self.api.region_summary(
+                df, latc, lonc, var, bbox,
+                dataset=f"{key}@{tr[0]}:{tr[1]}" if tr else key),
+            list(zip(("start_date", "end_date"), tr or ())))
         return {
             "dataset": name,
             "bbox": {"west": bbox[0], "south": bbox[1],

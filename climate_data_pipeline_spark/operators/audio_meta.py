@@ -304,46 +304,28 @@ def synthesize_compressed_audio(df, id_col: str, text_col: str):
 
     Frame payloads are junk by contract — the walkers under test
     never decode audio."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ._kernel import media_payloads
 
-    from .text import _spread
-
-    def _synth(batches):
-        def blob(media_id: int) -> bytes:
-            c = media_id % 4
-            if c == 0:
-                return build_mp3(20 + media_id % 40, bitrate_idx=9,
-                                 rate_idx=0, seed=media_id)
-            if c == 1:
-                return build_mp3(10 + media_id % 30, bitrate_idx=14,
-                                 rate_idx=2, mono=True,
-                                 id3v2=b"tag" * (1 + media_id % 50),
-                                 id3v1=True, seed=media_id)
-            if c == 2:
-                return build_ogg_vorbis(media_id, 48000, 2,
-                                        5 + media_id % 20, 960,
-                                        seed=media_id)
-            return build_ogg_vorbis(media_id, 44100, 1,
-                                    3 + media_id % 10, 441,
+    def blob(_text: str, media_id: int) -> bytes:
+        c = media_id % 4
+        if c == 0:
+            return build_mp3(20 + media_id % 40, bitrate_idx=9,
+                             rate_idx=0, seed=media_id)
+        if c == 1:
+            return build_mp3(10 + media_id % 30, bitrate_idx=14,
+                             rate_idx=2, mono=True,
+                             id3v2=b"tag" * (1 + media_id % 50),
+                             id3v1=True, seed=media_id)
+        if c == 2:
+            return build_ogg_vorbis(media_id, 48000, 2,
+                                    5 + media_id % 20, 960,
                                     seed=media_id)
+        return build_ogg_vorbis(media_id, 44100, 1,
+                                3 + media_id % 10, 441,
+                                seed=media_id)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [blob(int(i)) for i in ids]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["audio/mpeg" if int(i) % 4 <= 1
-                               else "audio/ogg" for i in ids],
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="media_id long, "
-                         "media_type string, payload binary, "
-                         "n_bytes long"))
+    return media_payloads(df, id_col, text_col, blob,
+                          ["audio/mpeg"] * 2 + ["audio/ogg"] * 2)
 
 
 def audio_container_meta(media_df, id_col: str = "media_id",

@@ -839,32 +839,21 @@ def synthesize_mp3(df, id_col: str, text_col: str):
     repertoire above; the first text byte sets the amplitude via
     ``global_gain = 210 + 4·(byte % 8)`` — a power-of-two gain, so the
     decoded features scale EXACTLY by 2^k (the oracle's contract)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ._kernel import payload_stage
 
-    from .text import _spread
+    memo: dict[tuple[int, int], bytes] = {}
 
-    def _synth(batches):
-        memo: dict[tuple[int, int], bytes] = {}
+    def blob(text: str, mid: int) -> bytes:
+        raw = text.encode("utf-8") or b"\x00"
+        k = raw[0] % 8
+        key = (mid % 7, k)
+        if key not in memo:
+            memo[key] = encode_mp3_count1(
+                n_frames=2, global_gain=210 + 4 * k,
+                **_MP3_CLASSES[mid % 7])
+        return memo[key]
 
-        def blob(mid: int, text: str) -> bytes:
-            raw = text.encode("utf-8") or b"\x00"
-            k = raw[0] % 8
-            key = (mid % 7, k)
-            if key not in memo:
-                memo[key] = encode_mp3_count1(
-                    n_frames=2, global_gain=210 + 4 * k,
-                    **_MP3_CLASSES[mid % 7])
-            return memo[key]
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [blob(int(i), t) for i, t in
-                        zip(ids, pdf.iloc[:, 1].fillna(""))]
-            yield pd.DataFrame({"media_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="media_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, blob)
 
 
 def mp3_mdct_features(media_df, id_col: str = "media_id",

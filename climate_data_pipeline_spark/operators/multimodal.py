@@ -27,10 +27,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._kernel import media_frame, media_payloads
 from .jpeg import (decode_jpeg, encode_jpeg_baseline,
                    encode_jpeg_progressive)
 from .png import png_pixels
-from .text import _spread
 
 MEDIA_SCHEMA = "media_id long, media_type string, payload binary, n_bytes long"
 
@@ -41,10 +41,9 @@ def attach_payload(df: DataFrame, id_col: str, source_col: str,
     with typed metadata — the shape a real ingest (S3 object fetch,
     tar-shard extraction) would produce."""
     payload = F.encode(F.col(source_col).cast("string"), "UTF-8")
-    return df.select(F.col(id_col).cast("long").alias("media_id"),
-                     F.lit(media_type).alias("media_type"),
-                     payload.alias("payload"),
-                     F.length(payload).cast("long").alias("n_bytes"))
+    return media_frame(
+        df.select(F.col(id_col).cast("long").alias("media_id"),
+                  payload.alias("payload")), media_type)
 
 
 def synthesize_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -53,57 +52,39 @@ def synthesize_media(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ids become 16-bit mono WAV clips (samples from scaled char codes) —
     so the real-codec path has genuine containers to decode without any
     external media library."""
-    out_schema = MEDIA_SCHEMA
+    import io
+    import wave
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    import numpy as np
 
-        import numpy as np
+    def pgm(text: str) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        px = np.frombuffer(raw, dtype=np.uint8)
+        px = np.resize(px, 256).reshape(16, 16)
+        return b"P5\n16 16\n255\n" + px.tobytes()
 
-        def pgm(text: str) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            px = np.frombuffer(raw, dtype=np.uint8)
-            px = np.resize(px, 256).reshape(16, 16)
-            return b"P5\n16 16\n255\n" + px.tobytes()
+    def wav(text: str) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        # (b - 128) * 256 spans exactly [-32768, 32512]: every
+        # UTF-8 byte maps into int16 without wrap (a -64 bias
+        # overflowed for bytes >= 192, silently corrupting samples
+        # for any non-ASCII text)
+        samples = (np.frombuffer(raw, dtype=np.uint8)
+                   .astype(np.int16) - 128) * 256
+        samples = np.resize(samples, 400)
+        buf = io.BytesIO()
+        with wave.open(buf, "wb") as w:
+            w.setnchannels(1)
+            w.setsampwidth(2)
+            w.setframerate(8000)
+            w.writeframes(samples.astype("<i2").tobytes())
+        return buf.getvalue()
 
-        def wav(text: str) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            # (b - 128) * 256 spans exactly [-32768, 32512]: every
-            # UTF-8 byte maps into int16 without wrap (a -64 bias
-            # overflowed for bytes >= 192, silently corrupting samples
-            # for any non-ASCII text)
-            samples = (np.frombuffer(raw, dtype=np.uint8)
-                       .astype(np.int16) - 128) * 256
-            samples = np.resize(samples, 400)
-            buf = io.BytesIO()
-            with wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(2)
-                w.setframerate(8000)
-                w.writeframes(samples.astype("<i2").tobytes())
-            return buf.getvalue()
+    def media(text: str, media_id: int) -> bytes:
+        return pgm(text) if media_id % 2 == 0 else wav(text)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, types = [], []
-            for i, t in zip(ids, pdf[text_col].fillna("")):
-                if int(i) % 2 == 0:
-                    payloads.append(pgm(t))
-                    types.append("image/x-portable-graymap")
-                else:
-                    payloads.append(wav(t))
-                    types.append("audio/wav")
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": types,
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, media,
+                          ["image/x-portable-graymap", "audio/wav"])
 
 
 def synthesize_png(df: DataFrame, id_col: str, text_col: str,
@@ -127,116 +108,100 @@ def synthesize_png(df: DataFrame, id_col: str, text_col: str,
     palette/sub-byte shape, and the oracle re-derives its mean as
     ``byte // 16``. Because the pixels are the cycled text bytes, a
     SQL oracle can re-derive the decoded mean without touching zlib."""
-    out_schema = MEDIA_SCHEMA
+    import struct as st
+    import zlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as st
-        import zlib
+    import numpy as np
 
-        import numpy as np
+    def chunk(typ: bytes, data: bytes) -> bytes:
+        return (st.pack(">I", len(data)) + typ + data
+                + st.pack(">I", zlib.crc32(typ + data)))
 
-        def chunk(typ: bytes, data: bytes) -> bytes:
-            return (st.pack(">I", len(data)) + typ + data
-                    + st.pack(">I", zlib.crc32(typ + data)))
-
-        def filt_sub(sub: np.ndarray, f: int, ch: int) -> bytes:
-            # filter one (rows, cols*ch) sub-image; prev is the prior
-            # row WITHIN the sub-image (per spec, each Adam7 pass
-            # filters independently)
-            lines = []
-            for y in range(sub.shape[0]):
-                row = sub[y]
-                prev = sub[y - 1] if y else np.zeros_like(row)
-                left = np.concatenate([np.zeros(ch, np.int32),
-                                       row[:-ch]])
-                upleft = np.concatenate([np.zeros(ch, np.int32),
-                                         prev[:-ch]])
-                if f == 0:
-                    enc = row
-                elif f == 1:
-                    enc = row - left
-                elif f == 2:
-                    enc = row - prev
-                elif f == 3:
-                    enc = row - (left + prev) // 2
-                else:
-                    pa = np.abs(prev - upleft)
-                    pb = np.abs(left - upleft)
-                    pc = np.abs(left + prev - 2 * upleft)
-                    pred = np.where((pa <= pb) & (pa <= pc), left,
-                                    np.where(pb <= pc, prev, upleft))
-                    enc = row - pred
-                lines.append(bytes([f]) + (enc & 0xFF).astype(np.uint8)
-                             .tobytes())
-            return b"".join(lines)
-
-        ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
-                 (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
-                 (0, 1, 1, 2))
-
-        def png(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            # rgb_every <= 0 means "all grayscale" (media_id 0 is a
-            # multiple of everything, so no modulus can express that)
-            ch = 3 if rgb_every > 0 and media_id % rgb_every == 0 else 1
-            px = np.resize(np.frombuffer(raw, dtype=np.uint8),
-                           256 * ch).reshape(16, 16, ch).astype(np.int32)
-            f = media_id % 5
-            # residue min(3, N-1) keeps the "every N-th id" contract
-            # honest for N <= 3 (media_id % 1 == 3 is never true)
-            adam7 = (adam7_every > 0
-                     and media_id % adam7_every == min(3, adam7_every - 1))
-            subbyte = (subbyte_every > 0 and ch == 1
-                       and media_id % subbyte_every == 1)
-            if subbyte:
-                px = px >> 4            # 4-bit samples: the high nibble
-
-            def pack4(g: np.ndarray) -> np.ndarray:
-                # (ph, pw) 0..15 values -> MSB-first packed bytes,
-                # rows padded to a whole byte at odd widths
-                if g.shape[1] % 2:
-                    g = np.concatenate(
-                        [g, np.zeros((g.shape[0], 1), np.int32)], axis=1)
-                return (g[:, 0::2] << 4) | g[:, 1::2]
-
-            def rows_of(sub: np.ndarray) -> np.ndarray:
-                # filterable byte grid for one (sub-)image
-                return (pack4(sub[:, :, 0]) if subbyte
-                        else sub.reshape(len(sub), -1))
-
-            # the filter's left-reference distance: bpp bytes,
-            # floored at 1 for packed sub-byte rows (spec 9.2)
-            bpp = 1 if subbyte else ch
-            if adam7:
-                parts = []
-                for (x0, y0, dx, dy) in ADAM7:
-                    sub = px[y0::dy, x0::dx]
-                    if sub.size == 0:   # empty pass emits NO bytes
-                        continue
-                    parts.append(filt_sub(rows_of(sub), f, bpp))
-                body = b"".join(parts)
+    def filt_sub(sub: np.ndarray, f: int, ch: int) -> bytes:
+        # filter one (rows, cols*ch) sub-image; prev is the prior
+        # row WITHIN the sub-image (per spec, each Adam7 pass
+        # filters independently)
+        lines = []
+        for y in range(sub.shape[0]):
+            row = sub[y]
+            prev = sub[y - 1] if y else np.zeros_like(row)
+            left = np.concatenate([np.zeros(ch, np.int32),
+                                   row[:-ch]])
+            upleft = np.concatenate([np.zeros(ch, np.int32),
+                                     prev[:-ch]])
+            if f == 0:
+                enc = row
+            elif f == 1:
+                enc = row - left
+            elif f == 2:
+                enc = row - prev
+            elif f == 3:
+                enc = row - (left + prev) // 2
             else:
-                body = filt_sub(rows_of(px), f, bpp)
-            ihdr = st.pack(">IIBBBBB", 16, 16, 4 if subbyte else 8,
-                           2 if ch == 3 else 0, 0, 0, int(adam7))
-            return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-                    + chunk(b"IDAT", zlib.compress(body, 6))
-                    + chunk(b"IEND", b""))
+                pa = np.abs(prev - upleft)
+                pb = np.abs(left - upleft)
+                pc = np.abs(left + prev - 2 * upleft)
+                pred = np.where((pa <= pb) & (pa <= pc), left,
+                                np.where(pb <= pc, prev, upleft))
+                enc = row - pred
+            lines.append(bytes([f]) + (enc & 0xFF).astype(np.uint8)
+                         .tobytes())
+        return b"".join(lines)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [png(t, int(i))
-                        for i, t in zip(ids, pdf[text_col].fillna(""))]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/png"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
+    ADAM7 = ((0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8),
+             (2, 0, 4, 4), (0, 2, 2, 4), (1, 0, 2, 2),
+             (0, 1, 1, 2))
 
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    def png(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        # rgb_every <= 0 means "all grayscale" (media_id 0 is a
+        # multiple of everything, so no modulus can express that)
+        ch = 3 if rgb_every > 0 and media_id % rgb_every == 0 else 1
+        px = np.resize(np.frombuffer(raw, dtype=np.uint8),
+                       256 * ch).reshape(16, 16, ch).astype(np.int32)
+        f = media_id % 5
+        # residue min(3, N-1) keeps the "every N-th id" contract
+        # honest for N <= 3 (media_id % 1 == 3 is never true)
+        adam7 = (adam7_every > 0
+                 and media_id % adam7_every == min(3, adam7_every - 1))
+        subbyte = (subbyte_every > 0 and ch == 1
+                   and media_id % subbyte_every == 1)
+        if subbyte:
+            px = px >> 4            # 4-bit samples: the high nibble
+
+        def pack4(g: np.ndarray) -> np.ndarray:
+            # (ph, pw) 0..15 values -> MSB-first packed bytes,
+            # rows padded to a whole byte at odd widths
+            if g.shape[1] % 2:
+                g = np.concatenate(
+                    [g, np.zeros((g.shape[0], 1), np.int32)], axis=1)
+            return (g[:, 0::2] << 4) | g[:, 1::2]
+
+        def rows_of(sub: np.ndarray) -> np.ndarray:
+            # filterable byte grid for one (sub-)image
+            return (pack4(sub[:, :, 0]) if subbyte
+                    else sub.reshape(len(sub), -1))
+
+        # the filter's left-reference distance: bpp bytes,
+        # floored at 1 for packed sub-byte rows (spec 9.2)
+        bpp = 1 if subbyte else ch
+        if adam7:
+            parts = []
+            for (x0, y0, dx, dy) in ADAM7:
+                sub = px[y0::dy, x0::dx]
+                if sub.size == 0:   # empty pass emits NO bytes
+                    continue
+                parts.append(filt_sub(rows_of(sub), f, bpp))
+            body = b"".join(parts)
+        else:
+            body = filt_sub(rows_of(px), f, bpp)
+        ihdr = st.pack(">IIBBBBB", 16, 16, 4 if subbyte else 8,
+                       2 if ch == 3 else 0, 0, 0, int(adam7))
+        return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
+                + chunk(b"IDAT", zlib.compress(body, 6))
+                + chunk(b"IEND", b""))
+
+    return media_payloads(df, id_col, text_col, png, "image/png")
 
 
 def synthesize_jpeg(df: DataFrame, id_col: str, text_col: str,
@@ -267,42 +232,25 @@ def synthesize_jpeg(df: DataFrame, id_col: str, text_col: str,
     fixture decoration (e.g. `exif.exif_jpeg_post`) fuses into this
     stage instead of paying a second mapInPandas round trip of the
     full payload bytes (guide §4)."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    q = np.ones((8, 8), np.int64)
+    q[0, 0] = 8
 
-        q = np.ones((8, 8), np.int64)
-        q[0, 0] = 8
-
-        def jpg(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            vals = np.resize(np.frombuffer(raw, dtype=np.uint8), 16)
-            px = np.repeat(np.repeat(vals.reshape(4, 4), 8, 0), 8, 1)
-            if progressive_every > 0 and media_id % progressive_every == 2:
-                return encode_jpeg_progressive(
-                    px.astype(np.uint8), quant_tables=(q, q))
-            return encode_jpeg_baseline(
+    def jpg(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        vals = np.resize(np.frombuffer(raw, dtype=np.uint8), 16)
+        px = np.repeat(np.repeat(vals.reshape(4, 4), 8, 0), 8, 1)
+        if progressive_every > 0 and media_id % progressive_every == 2:
+            out = encode_jpeg_progressive(
+                px.astype(np.uint8), quant_tables=(q, q))
+        else:
+            out = encode_jpeg_baseline(
                 px.astype(np.uint8), quant_tables=(q, q),
                 restart_interval=restart_interval)
+        return out if post is None else post(out, media_id)
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [jpg(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            if post is not None:
-                payloads = [post(p, int(i))
-                            for p, i in zip(payloads, ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/jpeg"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, jpg, "image/jpeg")
 
 
 def synthesize_gif(df: DataFrame, id_col: str, text_col: str,
@@ -318,40 +266,24 @@ def synthesize_gif(df: DataFrame, id_col: str, text_col: str,
     frame f's pixels the text bytes cycled from offset f. Palette
     round trips are lossless, so a SQL oracle re-derives every decoded
     mean from the bytes."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .gif import build_gif
 
-        from .gif import build_gif
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
 
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    def gif(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        nf = (n_frames if animate_every > 0
+              and media_id % animate_every == 1 else 1)
+        frames = [bts[(f + np.arange(256)) % len(bts)]
+                  .reshape(16, 16) for f in range(nf)]
+        il = (interlace_every > 0
+              and media_id % interlace_every == 3)
+        return build_gif(frames, gray, interlace=il)
 
-        def gif(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8)
-            nf = (n_frames if animate_every > 0
-                  and media_id % animate_every == 1 else 1)
-            frames = [bts[(f + np.arange(256)) % len(bts)]
-                      .reshape(16, 16) for f in range(nf)]
-            il = (interlace_every > 0
-                  and media_id % interlace_every == 3)
-            return build_gif(frames, gray, interlace=il)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [gif(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/gif"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, gif, "image/gif")
 
 
 def synthesize_bmp(df: DataFrame, id_col: str, text_col: str,
@@ -368,42 +300,26 @@ def synthesize_bmp(df: DataFrame, id_col: str, text_col: str,
     8-bit id with ``media_id % rle_every == 1`` is BI_RLE8-compressed
     (encoded runs + absolute mode + escapes; bottom-up per spec) —
     same pixels, so the RLE walk sits under the same oracle."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .bmp import build_bmp
 
-        from .bmp import build_bmp
+    gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
 
-        gray = np.stack([np.arange(256, dtype=np.uint8)] * 3, axis=1)
+    def bmp(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        td = topdown_every > 0 and media_id % topdown_every == 0
+        if rgb_every > 0 and media_id % rgb_every == 0:
+            px = np.resize(np.frombuffer(raw, np.uint8),
+                           256 * 3).reshape(16, 16, 3)
+            return build_bmp(px, top_down=td)
+        idx = np.resize(np.frombuffer(raw, np.uint8),
+                        256).reshape(16, 16)
+        if rle_every > 0 and media_id % rle_every == 1:
+            return build_bmp(idx, palette=gray, rle=True)
+        return build_bmp(idx, palette=gray, top_down=td)
 
-        def bmp(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            td = topdown_every > 0 and media_id % topdown_every == 0
-            if rgb_every > 0 and media_id % rgb_every == 0:
-                px = np.resize(np.frombuffer(raw, np.uint8),
-                               256 * 3).reshape(16, 16, 3)
-                return build_bmp(px, top_down=td)
-            idx = np.resize(np.frombuffer(raw, np.uint8),
-                            256).reshape(16, 16)
-            if rle_every > 0 and media_id % rle_every == 1:
-                return build_bmp(idx, palette=gray, rle=True)
-            return build_bmp(idx, palette=gray, top_down=td)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [bmp(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/bmp"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, bmp, "image/bmp")
 
 
 def synthesize_tiff(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -427,53 +343,37 @@ def synthesize_tiff(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Every class is lossless, so a SQL oracle re-derives each decoded
     mean from the text bytes."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .tiff import build_tiff
 
-        from .tiff import build_tiff
+    cmap = np.stack([np.arange(256, dtype=np.uint32) * 257] * 3, 1)
 
-        cmap = np.stack([np.arange(256, dtype=np.uint32) * 257] * 3, 1)
+    def tif(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        c = media_id % 5
+        if c == 0:
+            px = np.resize(bts, 256 * 3).reshape(16, 16, 3)
+            return build_tiff(px, photometric=2)
+        g = np.resize(bts, 256).reshape(16, 16)
+        if c == 1:
+            # TILED organization (the GeoTIFF default): same
+            # pixels, so the oracle is untouched while the tile
+            # walk + per-tile predictor sit under the same hash
+            return build_tiff(g, photometric=1, compression=5,
+                              predictor=2, tile_size=(16, 16))
+        if c == 2:
+            return build_tiff(g, photometric=3, colormap=cmap,
+                              compression=32773)
+        if c == 3:
+            return build_tiff(g.astype(np.uint16) * 257,
+                              photometric=1, compression=8,
+                              big_endian=True)
+        return build_tiff(g, photometric=0, big_endian=True,
+                          rows_per_strip=5)
 
-        def tif(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8)
-            c = media_id % 5
-            if c == 0:
-                px = np.resize(bts, 256 * 3).reshape(16, 16, 3)
-                return build_tiff(px, photometric=2)
-            g = np.resize(bts, 256).reshape(16, 16)
-            if c == 1:
-                # TILED organization (the GeoTIFF default): same
-                # pixels, so the oracle is untouched while the tile
-                # walk + per-tile predictor sit under the same hash
-                return build_tiff(g, photometric=1, compression=5,
-                                  predictor=2, tile_size=(16, 16))
-            if c == 2:
-                return build_tiff(g, photometric=3, colormap=cmap,
-                                  compression=32773)
-            if c == 3:
-                return build_tiff(g.astype(np.uint16) * 257,
-                                  photometric=1, compression=8,
-                                  big_endian=True)
-            return build_tiff(g, photometric=0, big_endian=True,
-                              rows_per_strip=5)
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [tif(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/tiff"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, tif, "image/tiff")
 
 
 def synthesize_webp(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -496,54 +396,38 @@ def synthesize_webp(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     VP8L is lossless, so a SQL oracle re-derives every decoded mean
     from the text bytes."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .webp import build_webp, encode_vp8l
 
-        from .webp import build_webp, encode_vp8l
+    pal = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3
+                   + [np.full(16, 255, np.uint8)], axis=1)
 
-        pal = np.stack([np.arange(16, dtype=np.uint8) * 17] * 3
-                       + [np.full(16, 255, np.uint8)], axis=1)
+    def wp(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        g = bts[np.arange(256) % len(bts)].reshape(16, 16)
+        c = media_id % 5
+        if c == 0:
+            px = np.stack([g, g, g, np.full_like(g, 255)], 2)
+            return build_webp(encode_vp8l(px))
+        if c == 1:
+            r = g
+            gg = bts[(1 + np.arange(256)) % len(bts)].reshape(16, 16)
+            b = bts[(2 + np.arange(256)) % len(bts)].reshape(16, 16)
+            px = np.stack([r, gg, b, np.full_like(g, 255)], 2)
+            return build_webp(encode_vp8l(px, subtract_green=True))
+        if c == 2:
+            px = np.stack([g, g, g, np.full_like(g, 255)], 2)
+            return build_webp(encode_vp8l(px, cache_bits=4))
+        if c == 3:
+            return build_webp(encode_vp8l((g % 16).astype(np.uint8),
+                                          palette=pal))
+        dbl = np.repeat(g, 2, axis=0)
+        px = np.stack([dbl, dbl, dbl, np.full_like(dbl, 255)], 2)
+        return build_webp(encode_vp8l(px, lz77_rows=True))
 
-        def wp(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8)
-            g = bts[np.arange(256) % len(bts)].reshape(16, 16)
-            c = media_id % 5
-            if c == 0:
-                px = np.stack([g, g, g, np.full_like(g, 255)], 2)
-                return build_webp(encode_vp8l(px))
-            if c == 1:
-                r = g
-                gg = bts[(1 + np.arange(256)) % len(bts)].reshape(16, 16)
-                b = bts[(2 + np.arange(256)) % len(bts)].reshape(16, 16)
-                px = np.stack([r, gg, b, np.full_like(g, 255)], 2)
-                return build_webp(encode_vp8l(px, subtract_green=True))
-            if c == 2:
-                px = np.stack([g, g, g, np.full_like(g, 255)], 2)
-                return build_webp(encode_vp8l(px, cache_bits=4))
-            if c == 3:
-                return build_webp(encode_vp8l((g % 16).astype(np.uint8),
-                                              palette=pal))
-            dbl = np.repeat(g, 2, axis=0)
-            px = np.stack([dbl, dbl, dbl, np.full_like(dbl, 255)], 2)
-            return build_webp(encode_vp8l(px, lz77_rows=True))
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [wp(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/webp"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, wp, "image/webp")
 
 
 def synthesize_flac(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -563,48 +447,32 @@ def synthesize_flac(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     FLAC is lossless and every CRC is real, so a SQL oracle
     re-derives each clip's RMS from the text bytes exactly."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .flac import build_flac
 
-        from .flac import build_flac
+    def flac(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        c = media_id % 4
+        if c == 0:
+            s = (bts[np.arange(512) % len(bts)] - 128) * 256
+            return build_flac(s, block_size=512, porder=2)
+        if c == 1:
+            left = (bts[np.arange(768) % len(bts)] - 128) * 256
+            right = (bts[(1 + np.arange(768)) % len(bts)]
+                     - 128) * 256
+            return build_flac(np.stack([left, right], 1),
+                              block_size=512, mode="fixed1",
+                              stereo="left_side")
+        if c == 2:
+            s = (bts[np.arange(1024) % len(bts)] - 128) * 256
+            return build_flac(s, block_size=512, mode="lpc2",
+                              porder=1)
+        s = np.full(1280, (int(bts[0]) - 128) * 256, np.int64)
+        return build_flac(s, block_size=512, mode="constant")
 
-        def flac(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            c = media_id % 4
-            if c == 0:
-                s = (bts[np.arange(512) % len(bts)] - 128) * 256
-                return build_flac(s, block_size=512, porder=2)
-            if c == 1:
-                left = (bts[np.arange(768) % len(bts)] - 128) * 256
-                right = (bts[(1 + np.arange(768)) % len(bts)]
-                         - 128) * 256
-                return build_flac(np.stack([left, right], 1),
-                                  block_size=512, mode="fixed1",
-                                  stereo="left_side")
-            if c == 2:
-                s = (bts[np.arange(1024) % len(bts)] - 128) * 256
-                return build_flac(s, block_size=512, mode="lpc2",
-                                  porder=1)
-            s = np.full(1280, (int(bts[0]) - 128) * 256, np.int64)
-            return build_flac(s, block_size=512, mode="constant")
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [flac(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["audio/flac"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, flac, "audio/flac")
 
 
 def synthesize_audio_formats(df: DataFrame, id_col: str,
@@ -623,51 +491,34 @@ def synthesize_audio_formats(df: DataFrame, id_col: str,
 
     Each decode is integer-exact, so a SQL oracle re-derives every
     clip's RMS from the text bytes through the same G.711 formulas."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .audio import build_aiff, build_wav
 
-        from .audio import build_aiff, build_wav
+    def clip(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        c = media_id % 4
+        if c == 0:
+            codes = bts[np.arange(600) % len(bts)]
+            return build_wav(codes.astype(np.uint8).tobytes(),
+                             tag=7, nch=1, rate=8000, bits=8)
+        if c == 1:
+            codes = bts[np.arange(600) % len(bts)]
+            return build_wav(codes.astype(np.uint8).tobytes(),
+                             tag=6, nch=1, rate=8000, bits=8)
+        if c == 2:
+            s = (bts[np.arange(400) % len(bts)] - 128) * 256
+            return build_aiff(s, rate=22050)
+        b = bts[np.arange(400) % len(bts)]
+        v = (b - 128) * 256 + b
+        raw24 = b"".join(int(x & 0xFFFFFF).to_bytes(3, "little")
+                         for x in v)
+        return build_wav(raw24, tag=1, nch=1, rate=44100, bits=24)
 
-        def clip(text: str, media_id: int) -> tuple[bytes, str]:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            c = media_id % 4
-            if c == 0:
-                codes = bts[np.arange(600) % len(bts)]
-                return build_wav(codes.astype(np.uint8).tobytes(),
-                                 tag=7, nch=1, rate=8000,
-                                 bits=8), "audio/wav;codec=ulaw"
-            if c == 1:
-                codes = bts[np.arange(600) % len(bts)]
-                return build_wav(codes.astype(np.uint8).tobytes(),
-                                 tag=6, nch=1, rate=8000,
-                                 bits=8), "audio/wav;codec=alaw"
-            if c == 2:
-                s = (bts[np.arange(400) % len(bts)] - 128) * 256
-                return build_aiff(s, rate=22050), "audio/aiff"
-            b = bts[np.arange(400) % len(bts)]
-            v = (b - 128) * 256 + b
-            raw24 = b"".join(int(x & 0xFFFFFF).to_bytes(3, "little")
-                             for x in v)
-            return build_wav(raw24, tag=1, nch=1, rate=44100,
-                             bits=24), "audio/wav;bits=24"
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            built = [clip(t, i) for t, i in
-                     zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": [t for _, t in built],
-                "payload": [p for p, _ in built],
-                "n_bytes": pd.Series([len(p) for p, _ in built],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, clip,
+                          ["audio/wav;codec=ulaw", "audio/wav;codec=alaw",
+                           "audio/aiff", "audio/wav;bits=24"])
 
 
 def synthesize_ico(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -683,46 +534,30 @@ def synthesize_ico(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     Every class is lossless, so a SQL oracle re-derives the largest
     entry's mean from the text bytes."""
-    out_schema = MEDIA_SCHEMA
+    import numpy as np
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .ico import build_ico
 
-        from .ico import build_ico
+    pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, 1)
 
-        pal = np.stack([np.arange(256, dtype=np.uint8)] * 3, 1)
-
-        def ico(text: str, media_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8)
-            g16 = bts[np.arange(256) % len(bts)].reshape(16, 16)
-            c = media_id % 3
-            if c == 0:
-                return build_ico([{"kind": "dib", "idx": g16,
-                                   "palette": pal}])
-            if c == 1:
-                g32 = bts[np.arange(1024) % len(bts)].reshape(32, 32)
-                return build_ico([{"kind": "png", "px": g32},
-                                  {"kind": "dib", "idx": g16,
-                                   "palette": pal}])
+    def ico(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        g16 = bts[np.arange(256) % len(bts)].reshape(16, 16)
+        c = media_id % 3
+        if c == 0:
             return build_ico([{"kind": "dib", "idx": g16,
-                               "palette": pal,
-                               "mask": (g16 % 5 == 0)}])
+                               "palette": pal}])
+        if c == 1:
+            g32 = bts[np.arange(1024) % len(bts)].reshape(32, 32)
+            return build_ico([{"kind": "png", "px": g32},
+                              {"kind": "dib", "idx": g16,
+                               "palette": pal}])
+        return build_ico([{"kind": "dib", "idx": g16,
+                           "palette": pal,
+                           "mask": (g16 % 5 == 0)}])
 
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [ico(t, i) for t, i in
-                        zip(pdf[text_col].fillna(""), ids)]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": ["image/x-icon"] * len(payloads),
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    return media_payloads(df, id_col, text_col, ico, "image/x-icon")
 
 
 def decode_media_real(df: DataFrame) -> DataFrame:

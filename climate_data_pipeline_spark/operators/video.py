@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._kernel import media_payloads
 from .jpeg import decode_jpeg, encode_jpeg_baseline
 from .mp4 import build_mp4_mjpeg, parse_mp4_mjpeg
 from .text import _spread
@@ -190,59 +191,42 @@ def synthesize_avi_mjpeg(df: DataFrame, id_col: str, text_col: str,
     sample-table validation and the whole JPEG path right."""
     if container not in ("avi", "mp4", "mixed"):
         raise ValueError(f"unknown container {container!r}")
-    out_schema = ("media_id long, media_type string, payload binary, "
-                  "n_bytes long")
+    q = np.ones((8, 8), np.int64)
+    q[0, 0] = 8
+    # the encoder is a pure function of the 4 tile bytes (the
+    # dedup premise: equal tuples → byte-identical JPEG), and
+    # corpus text 4-grams repeat heavily — memoize per task
+    memo: dict[tuple, bytes] = {}
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q = np.ones((8, 8), np.int64)
-        q[0, 0] = 8
-        # the encoder is a pure function of the 4 tile bytes (the
-        # dedup premise: equal tuples → byte-identical JPEG), and
-        # corpus text 4-grams repeat heavily — memoize per executor
-        memo: dict[tuple, bytes] = {}
+    def frame(vals: np.ndarray) -> bytes:
+        key = tuple(vals.tolist())
+        got = memo.get(key)
+        if got is None:
+            px = np.repeat(np.repeat(vals.reshape(2, 2), 8, 0),
+                           8, 1)
+            got = encode_jpeg_baseline(px.astype(np.uint8),
+                                       quant_tables=(q, q))
+            if len(memo) < 200_000:       # ~60 MB cap
+                memo[key] = got
+        return got
 
-        def frame(vals: np.ndarray) -> bytes:
-            key = tuple(vals.tolist())
-            got = memo.get(key)
-            if got is None:
-                px = np.repeat(np.repeat(vals.reshape(2, 2), 8, 0),
-                               8, 1)
-                got = encode_jpeg_baseline(px.astype(np.uint8),
-                                           quant_tables=(q, q))
-                if len(memo) < 200_000:       # ~60 MB cap
-                    memo[key] = got
-            return got
+    def vid(text: str, media_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        frames = []
+        for f in range(n_frames):
+            frames.append(frame(bts[(4 * f + np.arange(4))
+                                    % len(bts)]))
+        use_mp4 = (container == "mp4"
+                   or (container == "mixed" and media_id % 2 == 1))
+        if use_mp4:
+            return build_mp4_mjpeg(frames, 16, 16, fps=fps)
+        return build_avi_mjpeg(frames, 16, 16, fps=fps)
 
-        def vid(text: str, media_id: int) -> tuple[bytes, str]:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8)
-            frames = []
-            for f in range(n_frames):
-                frames.append(frame(bts[(4 * f + np.arange(4))
-                                        % len(bts)]))
-            use_mp4 = (container == "mp4"
-                       or (container == "mixed" and media_id % 2 == 1))
-            if use_mp4:
-                return (build_mp4_mjpeg(frames, 16, 16, fps=fps),
-                        "video/mp4")
-            return (build_avi_mjpeg(frames, 16, 16, fps=fps),
-                    "video/x-msvideo")
-
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            built = [vid(t, i) for t, i in
-                     zip(pdf[text_col].fillna(""), ids)]
-            payloads = [b for b, _ in built]
-            yield pd.DataFrame({
-                "media_id": ids,
-                "media_type": [m for _, m in built],
-                "payload": payloads,
-                "n_bytes": pd.Series([len(p) for p in payloads],
-                                     dtype="int64"),
-            })
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-              .mapInPandas(_synth, schema=out_schema))
+    avi, mp4 = "video/x-msvideo", "video/mp4"
+    return media_payloads(df, id_col, text_col, vid,
+                          {"avi": avi, "mp4": mp4,
+                           "mixed": [avi, mp4]}[container])
 
 
 def decode_video_frames(df: DataFrame, every_n: int = 2) -> DataFrame:

@@ -150,9 +150,12 @@ def convert_netcdf(spark: SparkSession, nc_path: str, output_path: str,
     """The reference's `convert_to_zarr_task` end-to-end
     (`tasks/celery_tasks.py:160-207`): NetCDF in → analysis-ready
     columnar store out, with read-time projection/predicates and a
-    layout preset replacing the chunking strategy. Uses the built-in
-    classic-format parser — no external NetCDF libraries. Row-count
-    parity between the grid and the written store is verified."""
+    layout preset replacing the chunking strategy. Reads through
+    `read_netcdf_long`: classic CDF-1/CDF-2 files with the built-in
+    classic-format parser (`sources/netcdf3.py`), NetCDF4/HDF5 files
+    with the built-in HDF5 parser (`sources/hdf5.py`) — no external
+    NetCDF libraries. Row-count parity between the grid and the
+    written store is verified."""
     from ..sources.netcdf import read_netcdf_long
 
     df = read_netcdf_long(spark, nc_path, variables=variables,

@@ -222,7 +222,8 @@ class Catalog:
         return load_parquet(self.spark, entry.path)
 
     def describe(self, name: str, compute_extents: bool = False) -> dict:
-        """Dataset info — schema, attrs, optional data extents (the
+        """Dataset info — schema, attrs, the format `_open` reads the
+        path as, optional data extents (the
         reference's `get_dataset_info`, `ingest/netcdf_reader.py:159-210`,
         and `/datasets/{id}` endpoint)."""
         entry = self._require(name)
@@ -231,6 +232,7 @@ class Catalog:
             "id": entry.name,
             "title": entry.title,
             "path": entry.path,
+            "format": _format(entry.path),
             "attrs": entry.attrs,
             "variables": {
                 f.name: {"dtype": f.dataType.simpleString(),

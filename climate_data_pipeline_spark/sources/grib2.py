@@ -1302,45 +1302,32 @@ def synthesize_grib2(df, id_col: str, text_col: str):
 
     ``la1`` = (msg_id % 121) − 60 exercises the sign-and-magnitude
     microdegree encoding on both hemispheres."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            la1 = float((msg_id % 121) - 60)
-            c = msg_id % 5
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   la1=la1)
-            if c == 1:
-                return build_grib2((cells * 16).reshape(8, 8),
-                                   nbits=12, la1=la1)
-            if c == 2:
-                return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
-                                   binary_scale=-1, nbits=7, la1=la1)
-            if c == 3:
-                bm = np.zeros(64, bool)
-                bm[::2] = True
-                return build_grib2(cells[::2], nbits=8,
-                                   bitmap=bm.reshape(8, 8), la1=la1)
-            return build_grib2(cells.reshape(8, 8), png_packed=True,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        la1 = float((msg_id % 121) - 60)
+        c = msg_id % 5
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
                                la1=la1)
+        if c == 1:
+            return build_grib2((cells * 16).reshape(8, 8),
+                               nbits=12, la1=la1)
+        if c == 2:
+            return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
+                               binary_scale=-1, nbits=7, la1=la1)
+        if c == 3:
+            bm = np.zeros(64, bool)
+            bm[::2] = True
+            return build_grib2(cells[::2], nbits=8,
+                               bitmap=bm.reshape(8, 8), la1=la1)
+        return build_grib2(cells.reshape(8, 8), png_packed=True,
+                           la1=la1)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_complex(df, id_col: str, text_col: str):
@@ -1359,48 +1346,35 @@ def synthesize_grib2_complex(df, id_col: str, text_col: str):
          halves, order-independent sums
 
     ``la1 = (msg_id % 121) − 60`` again covers both hemispheres."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            la1 = float((msg_id % 121) - 60)
-            c = msg_id % 4
-            if c == 0:
-                bm = np.zeros(64, bool)
-                bm[::2] = True
-                return build_grib2(cells[::2], bitmap=bm.reshape(8, 8),
-                                   complex_packed=True, group_size=5,
-                                   la1=la1)
-            if c == 1:
-                return build_grib2((cells * 17 + 3).reshape(8, 8),
-                                   complex_packed=True, group_size=7,
-                                   la1=la1)
-            if c == 2:
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True,
-                                   spatial_diff_order=1, group_size=8,
-                                   la1=la1)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
-                               binary_scale=-1, complex_packed=True,
-                               spatial_diff_order=2, group_size=6,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        la1 = float((msg_id % 121) - 60)
+        c = msg_id % 4
+        if c == 0:
+            bm = np.zeros(64, bool)
+            bm[::2] = True
+            return build_grib2(cells[::2], bitmap=bm.reshape(8, 8),
+                               complex_packed=True, group_size=5,
                                la1=la1)
+        if c == 1:
+            return build_grib2((cells * 17 + 3).reshape(8, 8),
+                               complex_packed=True, group_size=7,
+                               la1=la1)
+        if c == 2:
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True,
+                               spatial_diff_order=1, group_size=8,
+                               la1=la1)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
+                           binary_scale=-1, complex_packed=True,
+                           spatial_diff_order=2, group_size=6,
+                           la1=la1)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def grib2_long(payload_df, id_col: str = "msg_id",
@@ -1497,40 +1471,27 @@ def synthesize_grib2_interval(df, id_col: str, text_col: str):
     the id; three residue classes of ``msg_id % 3`` pick the data
     representation (8-bit simple / complex 5.2 / 7-bit halves with
     reference 100)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        stat = (msg_id % 4, 1 + msg_id % 96,
+                (2021, 1 + msg_id % 12, 1 + msg_id % 28,
+                 msg_id % 24, 0, 0))
+        c = msg_id % 3
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
+                               stat=stat)
+        if c == 1:
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True, group_size=6,
+                               stat=stat)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
+                           binary_scale=-1, nbits=7, stat=stat)
 
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            stat = (msg_id % 4, 1 + msg_id % 96,
-                    (2021, 1 + msg_id % 12, 1 + msg_id % 28,
-                     msg_id % 24, 0, 0))
-            c = msg_id % 3
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   stat=stat)
-            if c == 1:
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True, group_size=6,
-                                   stat=stat)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
-                               binary_scale=-1, nbits=7, stat=stat)
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def grib2_interval_stats(payload_df, id_col: str = "msg_id",
@@ -1570,36 +1531,23 @@ def synthesize_grib2_reduced(df, id_col: str, text_col: str):
     and values = text bytes cycled over the sum(pl)-point stream;
     even ids pack simple 8-bit, odd ids complex 5.3 order 1 — the
     packing must be transparent to the decoded field."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            pl = np.array([4 + (msg_id + j) % 5 for j in range(8)],
-                          np.int64)
-            n = int(pl.sum())
-            flat = bts[np.arange(n) % len(bts)]
-            if msg_id % 2:
-                return build_grib2(flat, gaussian=True, reduced_pl=pl,
-                                   lo1=0.0, complex_packed=True,
-                                   spatial_diff_order=1, group_size=6)
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        pl = np.array([4 + (msg_id + j) % 5 for j in range(8)],
+                      np.int64)
+        n = int(pl.sum())
+        flat = bts[np.arange(n) % len(bts)]
+        if msg_id % 2:
             return build_grib2(flat, gaussian=True, reduced_pl=pl,
-                               lo1=0.0, nbits=8)
+                               lo1=0.0, complex_packed=True,
+                               spatial_diff_order=1, group_size=6)
+        return build_grib2(flat, gaussian=True, reduced_pl=pl,
+                           lo1=0.0, nbits=8)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_missing(df, id_col: str, text_col: str):
@@ -1617,50 +1565,37 @@ def synthesize_grib2_missing(df, id_col: str, text_col: str):
     - 2: template 5.3 first-order differencing, management 1
     - 3: template 5.3 SECOND-order differencing, management 2,
          reference 50 + binary scale −1 (exact halves)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            idx = np.arange(64)
-            mp = (cells + idx) % 7 == 0
-            ms = ((cells + idx) % 11 == 0) & ~mp
-            c = msg_id % 4
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True, group_size=5,
-                                   missing_primary=mp.reshape(8, 8))
-            if c == 1:
-                return build_grib2((cells * 17 + 3).reshape(8, 8),
-                                   complex_packed=True, group_size=7,
-                                   missing_primary=mp.reshape(8, 8),
-                                   missing_secondary=ms.reshape(8, 8))
-            if c == 2:
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True,
-                                   spatial_diff_order=1, group_size=8,
-                                   missing_primary=mp.reshape(8, 8))
-            return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
-                               binary_scale=-1, complex_packed=True,
-                               spatial_diff_order=2, group_size=6,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        idx = np.arange(64)
+        mp = (cells + idx) % 7 == 0
+        ms = ((cells + idx) % 11 == 0) & ~mp
+        c = msg_id % 4
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True, group_size=5,
+                               missing_primary=mp.reshape(8, 8))
+        if c == 1:
+            return build_grib2((cells * 17 + 3).reshape(8, 8),
+                               complex_packed=True, group_size=7,
                                missing_primary=mp.reshape(8, 8),
                                missing_secondary=ms.reshape(8, 8))
+        if c == 2:
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True,
+                               spatial_diff_order=1, group_size=8,
+                               missing_primary=mp.reshape(8, 8))
+        return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
+                           binary_scale=-1, complex_packed=True,
+                           spatial_diff_order=2, group_size=6,
+                           missing_primary=mp.reshape(8, 8),
+                           missing_secondary=ms.reshape(8, 8))
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_lambert(df, id_col: str, text_col: str):
@@ -1676,47 +1611,34 @@ def synthesize_grib2_lambert(df, id_col: str, text_col: str):
     - 1: secant cone (latin2 = latin1 + 15), complex 5.2
     - 2: secant cone, complex 5.3 order 2, reference 50 + binary
          scale −1 (exact halves)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            c = msg_id % 3
-            latin1 = float(25 + msg_id % 10)
-            lam = dict(lad=latin1, lov=float(250 + msg_id % 20),
-                       latin1=latin1,
-                       latin2=latin1 if c == 0 else latin1 + 15.0,
-                       dx=3000.0 * (1 + msg_id % 3),
-                       dy=3000.0 * (1 + msg_id % 3))
-            la1 = float(18 + msg_id % 12)
-            lo1 = lam["lov"] - 6.0 + float(msg_id % 13)
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   la1=la1, lo1=lo1, lambert=lam)
-            if c == 1:
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True, group_size=5,
-                                   la1=la1, lo1=lo1, lambert=lam)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
-                               binary_scale=-1, complex_packed=True,
-                               spatial_diff_order=2, group_size=6,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        c = msg_id % 3
+        latin1 = float(25 + msg_id % 10)
+        lam = dict(lad=latin1, lov=float(250 + msg_id % 20),
+                   latin1=latin1,
+                   latin2=latin1 if c == 0 else latin1 + 15.0,
+                   dx=3000.0 * (1 + msg_id % 3),
+                   dy=3000.0 * (1 + msg_id % 3))
+        la1 = float(18 + msg_id % 12)
+        lo1 = lam["lov"] - 6.0 + float(msg_id % 13)
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
                                la1=la1, lo1=lo1, lambert=lam)
+        if c == 1:
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True, group_size=5,
+                               la1=la1, lo1=lo1, lambert=lam)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=50.0,
+                           binary_scale=-1, complex_packed=True,
+                           spatial_diff_order=2, group_size=6,
+                           la1=la1, lo1=lo1, lambert=lam)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_jpeg2000(df, id_col: str, text_col: str):
@@ -1731,45 +1653,32 @@ def synthesize_grib2_jpeg2000(df, id_col: str, text_col: str):
     - 2: BITMAP with even cells present — masked fields ride as a
          (1, n_data) image, the g2clib layout
     - 3: 7-bit with reference 100 and binary scale −1 (exact halves)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            la1 = float((msg_id % 121) - 60)
-            c = msg_id % 4
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   jpeg2000_packed=True, la1=la1)
-            if c == 1:
-                return build_grib2((cells * 16 + 7).reshape(8, 8),
-                                   nbits=12, jpeg2000_packed=True,
-                                   la1=la1)
-            if c == 2:
-                bm = np.zeros(64, bool)
-                bm[::2] = True
-                return build_grib2(cells[::2], nbits=8,
-                                   bitmap=bm.reshape(8, 8),
-                                   jpeg2000_packed=True, la1=la1)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
-                               binary_scale=-1, nbits=7,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        la1 = float((msg_id % 121) - 60)
+        c = msg_id % 4
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
                                jpeg2000_packed=True, la1=la1)
+        if c == 1:
+            return build_grib2((cells * 16 + 7).reshape(8, 8),
+                               nbits=12, jpeg2000_packed=True,
+                               la1=la1)
+        if c == 2:
+            bm = np.zeros(64, bool)
+            bm[::2] = True
+            return build_grib2(cells[::2], nbits=8,
+                               bitmap=bm.reshape(8, 8),
+                               jpeg2000_packed=True, la1=la1)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
+                           binary_scale=-1, nbits=7,
+                           jpeg2000_packed=True, la1=la1)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_aec(df, id_col: str, text_col: str):
@@ -1785,45 +1694,32 @@ def synthesize_grib2_aec(df, id_col: str, text_col: str):
          and the per-interval byte alignment)
     - 3: block 8 / RSI 16, 7-bit with reference 100 and binary scale
          −1 (exact halves)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        la1 = float((msg_id % 121) - 60)
+        c = msg_id % 4
+        if c == 0:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
+                               aec_packed=True, la1=la1)
+        if c == 1:
+            return build_grib2((cells * 16 + 3).reshape(8, 8),
+                               nbits=12, aec_packed=True,
+                               aec_block=32, aec_rsi=4, la1=la1)
+        if c == 2:
+            return build_grib2(cells.reshape(8, 8), nbits=8,
+                               aec_packed=True, aec_block=64,
+                               aec_rsi=2, aec_pad_rsi=True,
+                               la1=la1)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
+                           binary_scale=-1, nbits=7,
+                           aec_packed=True, aec_block=8,
+                           aec_rsi=16, la1=la1)
 
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            la1 = float((msg_id % 121) - 60)
-            c = msg_id % 4
-            if c == 0:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   aec_packed=True, la1=la1)
-            if c == 1:
-                return build_grib2((cells * 16 + 3).reshape(8, 8),
-                                   nbits=12, aec_packed=True,
-                                   aec_block=32, aec_rsi=4, la1=la1)
-            if c == 2:
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   aec_packed=True, aec_block=64,
-                                   aec_rsi=2, aec_pad_rsi=True,
-                                   la1=la1)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
-                               binary_scale=-1, nbits=7,
-                               aec_packed=True, aec_block=8,
-                               aec_rsi=16, la1=la1)
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def build_grib2_spectral(x: np.ndarray, j: int, ref: float = 0.0,
@@ -1941,38 +1837,25 @@ def synthesize_grib2_spectral(df, id_col: str, text_col: str):
          floats), reference 100 + binary scale −1 (exact halves;
          packed coefficients decode to Y / (n(n+1)))
     - 2: template 5.51, p = 2, sub-truncation 3, 12-bit X = 16·b + 5"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(72) % len(bts)]
+        c = msg_id % 3
+        if c == 0:
+            return build_grib2_spectral(cells, 7, nbits=8)
+        if c == 1:
+            return build_grib2_spectral(cells, 7, ref=100.0,
+                                        binary_scale=-1, nbits=8,
+                                        laplacian_p=1.0,
+                                        subset_trunc=2)
+        return build_grib2_spectral(cells * 16 + 5, 7, nbits=12,
+                                    laplacian_p=2.0,
+                                    subset_trunc=3)
 
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(72) % len(bts)]
-            c = msg_id % 3
-            if c == 0:
-                return build_grib2_spectral(cells, 7, nbits=8)
-            if c == 1:
-                return build_grib2_spectral(cells, 7, ref=100.0,
-                                            binary_scale=-1, nbits=8,
-                                            laplacian_p=1.0,
-                                            subset_trunc=2)
-            return build_grib2_spectral(cells * 16 + 5, 7, nbits=12,
-                                        laplacian_p=2.0,
-                                        subset_trunc=3)
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def synthesize_grib2_spaceview(df, id_col: str, text_col: str):
@@ -1989,43 +1872,30 @@ def synthesize_grib2_spaceview(df, id_col: str, text_col: str):
     - 1: 140°E, disk 5 grids (21 on-disk), complex 5.2
     - 2: 255°E, disk 7 grids (37 on-disk), 7-bit with reference 100 +
          binary scale −1 (exact halves)"""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
-
-    def _synth(batches):
-        import numpy as np
-
-        def grib(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)]
-            c = msg_id % 3
-            if c == 0:
-                sv = dict(lop=0.0, dx=6, dy=6, xp=3.5, yp=3.5,
-                          nr=6610710)
-                return build_grib2(cells.reshape(8, 8), nbits=8,
-                                   spaceview=sv)
-            if c == 1:
-                sv = dict(lop=140.0, dx=5, dy=5, xp=3.0, yp=3.0,
-                          nr=6610710)
-                return build_grib2(cells.reshape(8, 8),
-                                   complex_packed=True, group_size=5,
-                                   spaceview=sv)
-            sv = dict(lop=255.0, dx=7, dy=7, xp=4.0, yp=4.0,
+    def grib(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)]
+        c = msg_id % 3
+        if c == 0:
+            sv = dict(lop=0.0, dx=6, dy=6, xp=3.5, yp=3.5,
                       nr=6610710)
-            return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
-                               binary_scale=-1, nbits=7, spaceview=sv)
+            return build_grib2(cells.reshape(8, 8), nbits=8,
+                               spaceview=sv)
+        if c == 1:
+            sv = dict(lop=140.0, dx=5, dy=5, xp=3.0, yp=3.0,
+                      nr=6610710)
+            return build_grib2(cells.reshape(8, 8),
+                               complex_packed=True, group_size=5,
+                               spaceview=sv)
+        sv = dict(lop=255.0, dx=7, dy=7, xp=4.0, yp=4.0,
+                  nr=6610710)
+        return build_grib2((cells >> 1).reshape(8, 8), ref=100.0,
+                           binary_scale=-1, nbits=7, spaceview=sv)
 
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [grib(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, grib, "msg_id")
 
 
 def build_grib2_multifield(messages: list[bytes],

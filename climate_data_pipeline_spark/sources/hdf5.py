@@ -2331,41 +2331,29 @@ def synthesize_hdf5_szip(df, id_col: str, text_col: str):
          chunks (4, 4) — 32-bit samples and CF unpacking ON TOP of the
          szip decode (decoded field = byte·65537/2, exact halves)
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def h5(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
+        c = msg_id % 3
+        if c == 0:
+            arr, chunks, attrs = cells.astype(np.uint8), (8, 8), {}
+        elif c == 1:
+            arr, chunks, attrs = \
+                (cells * 127).astype(np.int16), (3, 5), {}
+        else:
+            arr, chunks, attrs = ((cells * 65537).astype(np.uint32),
+                                  (4, 4), {"scale_factor": 0.5})
+        return write_hdf5(None,
+                          {"y": np.arange(8, dtype=np.int32),
+                           "x": np.arange(8, dtype=np.int32)},
+                          {"v": (["y", "x"], arr, attrs)},
+                          chunks={"v": chunks},
+                          compress="szip")
 
-    def _synth(batches):
-        def h5(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
-            c = msg_id % 3
-            if c == 0:
-                arr, chunks, attrs = cells.astype(np.uint8), (8, 8), {}
-            elif c == 1:
-                arr, chunks, attrs = \
-                    (cells * 127).astype(np.int16), (3, 5), {}
-            else:
-                arr, chunks, attrs = ((cells * 65537).astype(np.uint32),
-                                      (4, 4), {"scale_factor": 0.5})
-            return write_hdf5(None,
-                              {"y": np.arange(8, dtype=np.int32),
-                               "x": np.arange(8, dtype=np.int32)},
-                              {"v": (["y", "x"], arr, attrs)},
-                              chunks={"v": chunks},
-                              compress="szip")
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [h5(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    import pandas as pd  # noqa: F811 (closure import for executors)
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, h5, "msg_id")
 
 
 def hdf5_szip_stats(payload_df, id_col: str = "msg_id",
@@ -2414,43 +2402,31 @@ def synthesize_hdf5_so_float(df, id_col: str, text_col: str):
     - 2: float32 CONSTANT field (0.25·(msg_id % 7) + 1.0) — every
          chunk takes the minbits-0 header-only path
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def h5(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
+        c = msg_id % 3
+        if c == 0:
+            arr = (cells.astype(np.float32) * np.float32(0.25)
+                   - np.float32(10.0)).astype(np.float32)
+            kw = dict(chunks={"v": (3, 5)}, so_dscale=2)
+        elif c == 1:
+            arr = cells.astype(np.float64) * 0.125 + 5.0
+            kw = dict(chunks={"v": (4, 4)}, so_dscale=3)
+        else:
+            arr = np.full((8, 8), (msg_id % 7) * 0.25 + 1.0,
+                          np.float32)
+            kw = dict(chunks={"v": (3, 5)}, so_dscale=2)
+        return write_hdf5(None,
+                          {"y": np.arange(8, dtype=np.int32),
+                           "x": np.arange(8, dtype=np.int32)},
+                          {"v": (["y", "x"], arr, {})},
+                          compress="scaleoffset", **kw)
 
-    def _synth(batches):
-        def h5(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
-            c = msg_id % 3
-            if c == 0:
-                arr = (cells.astype(np.float32) * np.float32(0.25)
-                       - np.float32(10.0)).astype(np.float32)
-                kw = dict(chunks={"v": (3, 5)}, so_dscale=2)
-            elif c == 1:
-                arr = cells.astype(np.float64) * 0.125 + 5.0
-                kw = dict(chunks={"v": (4, 4)}, so_dscale=3)
-            else:
-                arr = np.full((8, 8), (msg_id % 7) * 0.25 + 1.0,
-                              np.float32)
-                kw = dict(chunks={"v": (3, 5)}, so_dscale=2)
-            return write_hdf5(None,
-                              {"y": np.arange(8, dtype=np.int32),
-                               "x": np.arange(8, dtype=np.int32)},
-                              {"v": (["y", "x"], arr, {})},
-                              compress="scaleoffset", **kw)
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [h5(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    import pandas as pd  # noqa: F811 (closure import for executors)
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, h5, "msg_id")
 
 
 def synthesize_hdf5_nbit_so(df, id_col: str, text_col: str):
@@ -2466,39 +2442,27 @@ def synthesize_hdf5_nbit_so(df, id_col: str, text_col: str):
     - 2: SCALEOFFSET int32, values = 1000·byte − 50000 — a NEGATIVE
          per-chunk minval exercises the two's-complement header
     """
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def h5(text: str, msg_id: int) -> bytes:
+        raw = (text.encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
+        cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
+        c = msg_id % 3
+        if c == 0:
+            arr, kw = cells.astype(np.int32), dict(
+                compress="nbit", nbit_spec=(8, 0),
+                chunks={"v": (3, 5)})
+        elif c == 1:
+            arr, kw = (cells << 2).astype(np.int32), dict(
+                compress="nbit", nbit_spec=(8, 2),
+                chunks={"v": (4, 4)})
+        else:
+            arr, kw = (cells * 1000 - 50000).astype(np.int32), dict(
+                compress="scaleoffset", chunks={"v": (3, 5)})
+        return write_hdf5(None,
+                          {"y": np.arange(8, dtype=np.int32),
+                           "x": np.arange(8, dtype=np.int32)},
+                          {"v": (["y", "x"], arr, {})}, **kw)
 
-    def _synth(batches):
-        def h5(text: str, msg_id: int) -> bytes:
-            raw = (text.encode("utf-8") or b"\x00")
-            bts = np.frombuffer(raw, dtype=np.uint8).astype(np.int64)
-            cells = bts[np.arange(64) % len(bts)].reshape(8, 8)
-            c = msg_id % 3
-            if c == 0:
-                arr, kw = cells.astype(np.int32), dict(
-                    compress="nbit", nbit_spec=(8, 0),
-                    chunks={"v": (3, 5)})
-            elif c == 1:
-                arr, kw = (cells << 2).astype(np.int32), dict(
-                    compress="nbit", nbit_spec=(8, 2),
-                    chunks={"v": (4, 4)})
-            else:
-                arr, kw = (cells * 1000 - 50000).astype(np.int32), dict(
-                    compress="scaleoffset", chunks={"v": (3, 5)})
-            return write_hdf5(None,
-                              {"y": np.arange(8, dtype=np.int32),
-                               "x": np.arange(8, dtype=np.int32)},
-                              {"v": (["y", "x"], arr, {})}, **kw)
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [h5(t, i) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"msg_id": ids, "payload": payloads})
-
-    import pandas as pd  # noqa: F811 (closure import for executors)
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="msg_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, h5, "msg_id")

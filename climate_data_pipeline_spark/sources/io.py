@@ -235,8 +235,9 @@ def write_parquet(df: DataFrame, path: str, *,
 
 def parquet_info(spark: SparkSession, path: str) -> dict:
     """Store stats — the analogue of the reference's `get_zarr_info`
-    (`ingest/arco_converter.py:214-246`): schema, row count, file count,
-    bytes on disk, compression codec per column chunk (from footers)."""
+    (`ingest/arco_converter.py:214-246`): schema, file count and bytes
+    on disk from a walk of the store's ``.parquet`` files, and the row
+    count from a Spark ``count()`` (one job). No codec is reported."""
     import os
 
     df = spark.read.parquet(path)

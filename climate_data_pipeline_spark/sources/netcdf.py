@@ -12,8 +12,9 @@ NetCDF3 files (CDF-1/CDF-2): ``sources/netcdf3.py`` is a pure-numpy
 parser/writer of the publicly documented format, so no external
 libraries are needed for the reference's primary input path.
 ``read_netcdf3_many`` scales it horizontally (one task per file via
-``binaryFile`` + ``mapInPandas``). Only NetCDF4/HDF5 containers still
-require xarray/netCDF4 (import-try with a clear error). Dimension
+``binaryFile`` + ``mapInPandas``). NetCDF4/HDF5 containers go through
+the pure-numpy HDF5 parser in ``sources/hdf5.py``; a file using an HDF5
+feature it does not cover raises ``NotImplementedError``. Dimension
 detection mirrors the reference's heuristics
 (`ingest/netcdf_reader.py:80-111`): name patterns first, dtype fallback.
 """
@@ -178,9 +179,8 @@ def read_netcdf_long(spark: SparkSession, path: str,
     the built-in HDF5 parser (`sources/hdf5.py` — the libnetcdf
     'earliest' profile: v0 superblock, contiguous/chunked+deflate
     layouts, DIMENSION_LIST semantics). Files using HDF5 features
-    outside that profile fall back to xarray when present and raise a
-    clear feature-naming error otherwise — no external libraries on the
-    common path."""
+    outside that profile raise a ``NotImplementedError`` that names the
+    feature — no external libraries are used."""
     with open(path, "rb") as fh:
         buf = fh.read()
     if buf[:4] == b"\x89HDF":
@@ -189,34 +189,9 @@ def read_netcdf_long(spark: SparkSession, path: str,
             coords, arrays, dim_order, dims = hdf5_to_grid(
                 buf, variables, time_range)
         except H5Unsupported as unsupported:
-            try:
-                import xarray as xr
-            except ImportError:
-                raise NotImplementedError(
-                    f"NetCDF4/HDF5 file uses an unsupported feature "
-                    f"({unsupported}); xarray/netCDF4 fallback not in "
-                    "this environment") from unsupported
-            ds = xr.open_dataset(path, chunks="auto")
-            if variables:
-                missing = [v for v in variables if v not in ds.data_vars]
-                if missing:
-                    raise ValueError(f"variables not found: {missing}")
-                ds = ds[list(variables)]
-            # dim_order must come from the VARIABLE's own axis order —
-            # Dataset.dims is an unordered mapping (often alphabetical),
-            # so using it mislabels axes whenever the array layout is
-            # e.g. (time, lat, lon); coordinate-less dims (bounds
-            # dims like 'nv') get positional indices like the NC3 path
-            first = next(iter(ds.data_vars))
-            dim_order = list(ds[first].dims)
-            coords = {d: (ds[d].values if d in ds.coords
-                          else np.arange(ds.sizes[d])) for d in dim_order}
-            dims = detect_dims(dim_order,
-                               {d: str(coords[d].dtype) for d in dim_order})
-            if time_range and dims["time"]:
-                ds = ds.sel({dims["time"]: slice(*time_range)})
-                coords[dims["time"]] = ds[dims["time"]].values
-            arrays = {v: ds[v].values for v in ds.data_vars}
+            raise NotImplementedError(
+                f"NetCDF4/HDF5 file uses an unsupported feature "
+                f"({unsupported})") from unsupported
     else:
         coords, arrays, dim_order, dims = _grid_from_nc3(
             buf, variables, time_range)

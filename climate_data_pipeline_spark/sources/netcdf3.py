@@ -121,12 +121,13 @@ def _read_attrs(c: _Cursor) -> dict:
 
 def parse_netcdf3(buf: bytes) -> NC3File:
     """Parse a classic-format header. Raises NotImplementedError for
-    NetCDF4/HDF5 containers (needs external libs), ValueError for
-    anything that isn't NetCDF at all."""
+    NetCDF4/HDF5 containers (read by ``sources/hdf5.py``), ValueError
+    for anything that isn't NetCDF at all."""
     if buf[:4] == b"\x89HDF":
         raise NotImplementedError(
-            "NetCDF4/HDF5 container: install netCDF4/xarray to read; the "
-            "built-in reader covers classic CDF-1/CDF-2 files.")
+            "NetCDF4/HDF5 container: read it with sources/hdf5.py "
+            "(hdf5_to_grid); this parser covers classic CDF-1/CDF-2 "
+            "files.")
     if buf[:4] not in (_MAGIC1, _MAGIC2):
         raise ValueError("not a NetCDF file (bad magic)")
     wide = buf[:4] == _MAGIC2

@@ -166,37 +166,26 @@ def synthesize_warc(df, id_col: str, text_col: str):
     response record whose HTML body wraps the ESCAPED text in a
     template with script/style/comment distractors; every odd id's
     archive uses member-per-record gzip."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import payload_stage
 
-    from ..operators.text import _spread
+    def warc(text: str, doc_id: int) -> bytes:
+        html = (f"<html><head><title>Doc {doc_id}</title>"
+                f"<style>p {{ color: #000; }}</style>"
+                f"<script>var x = '<p>not text</p>';</script>"
+                f"</head><!-- crawler comment {doc_id} -->"
+                f"<body><h1>Doc {doc_id}</h1>"
+                f"<p>{html_escape(text)}</p>"
+                f"</body></html>").encode()
+        rec = build_warc_response(
+            uri=f"https://example.org/doc/{doc_id}",
+            html=html,
+            date=(f"2024-{1 + doc_id % 12:02d}-"
+                  f"{1 + doc_id % 28:02d}T00:00:00Z"),
+            record_id=f"{doc_id:032x}",
+            status=200 if doc_id % 7 else 404)
+        return build_warc([rec], gzip_members=bool(doc_id % 2))
 
-    def _synth(batches):
-        def warc(text: str, doc_id: int) -> bytes:
-            html = (f"<html><head><title>Doc {doc_id}</title>"
-                    f"<style>p {{ color: #000; }}</style>"
-                    f"<script>var x = '<p>not text</p>';</script>"
-                    f"</head><!-- crawler comment {doc_id} -->"
-                    f"<body><h1>Doc {doc_id}</h1>"
-                    f"<p>{html_escape(text)}</p>"
-                    f"</body></html>").encode()
-            rec = build_warc_response(
-                uri=f"https://example.org/doc/{doc_id}",
-                html=html,
-                date=(f"2024-{1 + doc_id % 12:02d}-"
-                      f"{1 + doc_id % 28:02d}T00:00:00Z"),
-                record_id=f"{doc_id:032x}",
-                status=200 if doc_id % 7 else 404)
-            return build_warc([rec], gzip_members=bool(doc_id % 2))
-
-        for pdf in batches:
-            ids = pdf.iloc[:, 0].astype("int64")
-            payloads = [warc(t, int(i)) for t, i in
-                        zip(pdf.iloc[:, 1].fillna(""), ids)]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth, schema="doc_id long, payload binary"))
+    return payload_stage(df, id_col, text_col, warc, "doc_id")
 
 
 def warc_extract(payload_df, id_col: str = "doc_id",

@@ -376,3 +376,59 @@ def test_end_date_with_time_component(climate_server):
                     "&east=115&north=25&start_date=2020-01-01"
                     "&end_date=2020-01-31T12:00:00")
     assert st == 200 and body["n"] > 0
+
+
+def test_stats_and_region_malformed_date_is_422(climate_server):
+    """A malformed date bound or slice time answers 422 naming the field,
+    as the point-family routes do, not a 500 from ANSI Spark's
+    CAST_INVALID_INPUT."""
+    url, _rows = climate_server
+    box = "west=95&south=-5&east=115&north=25"
+    for route, q, field in (
+            ("stats", "start_date=2020-01-99", "start_date"),
+            ("stats", "start_date=2020-01-01&end_date=2020-01-99",
+             "end_date"),
+            ("region", "time=2020-01-99", "time")):
+        with pytest.raises(HTTPError) as e:
+            _get(f"{url}/datasets/era5-like/{route}?{box}&{q}")
+        assert e.value.code == 422, (route, q)
+        detail = json.loads(e.value.read())["detail"]
+        assert field in detail and "2020-01-99" in detail, detail
+    # the rejected requests cached nothing: valid ones still answer
+    st, body = _get(f"{url}/datasets/era5-like/stats?{box}"
+                    "&start_date=2020-01-01&end_date=2020-01-31")
+    assert st == 200 and body["n"] > 0
+
+
+def test_dataset_format_is_the_one_the_catalog_reads(spark, tmp_path):
+    """`/datasets` reports the format `Catalog._open` reads a path as:
+    a Zarr store registered without the `.zarr` suffix (found by its
+    `.zmetadata`) is "zarr", a parquet directory without a suffix is
+    "parquet", a classic NetCDF file is "netcdf"."""
+    import numpy as np
+
+    from climate_data_pipeline_spark.sources import netcdf3, zarr2
+
+    store = str(tmp_path / "arco_store")
+    zarr2.write_zarr(store, {"x": np.array([1.0, 2.0])},
+                     {"v": (["x"], np.array([3.0, 4.0]), {})})
+    table = str(tmp_path / "table")
+    spark.range(3).write.parquet(table)
+    nc = str(tmp_path / "grid.nc")
+    netcdf3.write_netcdf3(nc, {"x": 2},
+                          {"x": (["x"], np.array([1.0, 2.0]), {}),
+                           "v": (["x"], np.array([3.0, 4.0]), {})})
+    cat = Catalog(spark)
+    cat.register("z", store, title="Zarr")
+    cat.register("p", table, title="Parquet")
+    cat.register("n", nc, title="NetCDF")
+    srv = ServingHttpServer(cat, data_lake_path="/lake")
+    port = srv.start()
+    try:
+        st, body = _get(f"http://127.0.0.1:{port}/datasets")
+    finally:
+        srv.stop()
+    assert st == 200
+    assert {d["id"]: d["format"] for d in body} == {
+        "z": "zarr", "p": "parquet", "n": "netcdf"}
+    assert cat.load("z").count() == 2
