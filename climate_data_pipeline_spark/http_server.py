@@ -338,23 +338,20 @@ class ServingHttpServer:
             raise ApiError(422, f"invalid value for {field!r}: {text!r}")
         return int(opt.get())
 
-    def _cast_checked(self, run, bounds: list[tuple[str, str]]):
-        """`run()`, with ANSI Spark's CAST_INVALID_INPUT answered as the
-        point routes answer it: 422 naming the first of the (field,
-        string) `bounds` that Spark cannot cast to a timestamp. Spark
-        raises it only when a cache miss runs its query, so a cache hit
-        pays nothing here."""
-        from pyspark.errors import PySparkException
+    def _check_bounds(self, df, tcol: str,
+                      bounds: list[tuple[str, str]]) -> None:
+        """Raise the 422 `_spark_cast` raises for the first (field, string)
+        of `bounds` that ANSI Spark would fail to cast when comparing it
+        with `tcol` (a DATE column casts to a date, any other to a
+        timestamp) — checked before the query, so Spark never plans it
+        and logs no CAST_INVALID_INPUT trace."""
+        from pyspark.sql.types import DateType
 
-        try:
-            return run()
-        except PySparkException as exc:
-            if exc.getCondition() != "CAST_INVALID_INPUT":
-                raise
-            tz = self.catalog.spark.conf.get("spark.sql.session.timeZone")
-            for field, text in bounds:
-                self._spark_cast("timestamp", text, field, tz)
-            raise
+        kind = ("date" if isinstance(df.schema[tcol].dataType, DateType)
+                else "timestamp")
+        tz = self.catalog.spark.conf.get("spark.sql.session.timeZone")
+        for field, text in bounds:
+            self._spark_cast(kind, text, field, tz)
 
     def _z_powers(self, z: float) -> tuple[float, float]:
         """(z ** 3, z ** 5) as Spark's `pow` computes them: the JVM's
@@ -431,11 +428,11 @@ class ServingHttpServer:
                 return str(df.agg(F.max(tcol)).first()[0])
             at = self.api.cached(cache_key("latest", dataset=key), latest)
         sl = (at, at + (" 23:59:59.999999" if len(at) == 10 else ""))
-        pts = self._cast_checked(
-            lambda: self.api.region_grid(df, latc, lonc, var, bbox, at=sl,
-                                         time_col=tcol,
-                                         dataset=f"{key}@{at}"),
-            [("time", sl[0]), ("time", sl[1])])
+        pts = self.api.region_grid(
+            df, latc, lonc, var, bbox, at=sl, time_col=tcol,
+            dataset=f"{key}@{at}",
+            check=lambda: self._check_bounds(
+                df, tcol, [("time", sl[0]), ("time", sl[1])]))
         lats = sorted({p["lat"] for p in pts})
         lons = sorted({p["lon"] for p in pts})
         cell = {(p["lat"], p["lon"]): p["value"] for p in pts}
@@ -453,19 +450,15 @@ class ServingHttpServer:
         """`GET /datasets/{id}/stats` (routes/data.py:172-214)."""
         import datetime as _dt
 
-        from pyspark.sql import functions as F
-
         bbox = tuple(self._q(query, k, float, required=True)
                      for k in ("west", "south", "east", "north"))
         df, tcol, latc, lonc, var, key = self._grid_dataset(name, query)
         tr = self._trange(query)
-        if tr is not None:
-            df = df.where(F.col(tcol).between(*tr))
-        stats = self._cast_checked(
-            lambda: self.api.region_summary(
-                df, latc, lonc, var, bbox,
-                dataset=f"{key}@{tr[0]}:{tr[1]}" if tr else key),
-            list(zip(("start_date", "end_date"), tr or ())))
+        stats = self.api.region_summary(
+            df, latc, lonc, var, bbox, time_range=tr, time_col=tcol,
+            dataset=f"{key}@{tr[0]}:{tr[1]}" if tr else key,
+            check=lambda: self._check_bounds(
+                df, tcol, list(zip(("start_date", "end_date"), tr or ()))))
         return {
             "dataset": name,
             "bbox": {"west": bbox[0], "south": bbox[1],

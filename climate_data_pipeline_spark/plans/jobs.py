@@ -151,22 +151,23 @@ def convert_netcdf(spark: SparkSession, nc_path: str, output_path: str,
     (`tasks/celery_tasks.py:160-207`): NetCDF in → analysis-ready
     columnar store out, with read-time projection/predicates and a
     layout preset replacing the chunking strategy. Reads through
-    `read_netcdf_long`: classic CDF-1/CDF-2 files with the built-in
-    classic-format parser (`sources/netcdf3.py`), NetCDF4/HDF5 files
-    with the built-in HDF5 parser (`sources/hdf5.py`) — no external
-    NetCDF libraries. Row-count parity between the grid and the
-    written store is verified."""
-    from ..sources.netcdf import read_netcdf_long
+    `open_netcdf_long`: NetCDF4/HDF5 files chunk-per-task (each stored
+    chunk decoded by its own task), classic CDF-1/CDF-2 files and the
+    HDF5 files that reader refuses decoded on the driver — no external
+    NetCDF libraries. Verification decodes nothing: the row count of
+    the written store (summed from its parquet footers by
+    `parquet_info`) must equal the cell count the input's header and
+    coordinates give for the selected variables and time range."""
+    from ..sources.netcdf import open_netcdf_long
 
-    df = read_netcdf_long(spark, nc_path, variables=variables,
-                          time_range=time_range)
+    df, in_rows = open_netcdf_long(spark, nc_path, variables=variables,
+                                   time_range=time_range)
     time_col = "time" if "time" in df.columns else None
     entity = [c for c in ("lat", "lon") if c in df.columns]
     write_parquet(df, output_path, layout=layout, entity_cols=entity,
                   time_col=time_col, compression=compression,
                   overwrite=overwrite)
     info = parquet_info(spark, output_path)
-    in_rows = df.count()
     return {
         "status": "completed" if info["num_rows"] == in_rows
         else "verification_failed",

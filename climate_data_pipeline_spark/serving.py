@@ -20,7 +20,7 @@ import hashlib
 import json
 import threading
 import time
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -140,14 +140,18 @@ class ServingApi:
                     bbox: tuple[float, float, float, float],
                     at: tuple[str, str] | None = None,
                     time_col: str | None = None,
-                    dataset: str = "") -> list[dict]:
+                    dataset: str = "",
+                    check: Callable[[], None] | None = None) -> list[dict]:
         """`/datasets/{id}/region` (`api/routes/data.py:130-169`): the
         spatial field inside a bbox, optionally at one time slice (P3+P4),
-        capped at MAX_POINTS."""
+        capped at MAX_POINTS. ``check`` runs first on a cache miss, before
+        any Spark work (a caller's validation of the slice bounds)."""
         key = cache_key("region", dataset=dataset, var=value_col, bbox=bbox,
                         at=at)
 
         def build():
+            if check is not None:
+                check()
             out = bbox_filter(df, lat_col, lon_col, bbox)
             if at is not None and time_col is not None:
                 out = out.where(F.col(time_col).between(*at))
@@ -161,12 +165,24 @@ class ServingApi:
     def region_summary(self, df: DataFrame, lat_col: str, lon_col: str,
                        value_col: str,
                        bbox: tuple[float, float, float, float],
-                       dataset: str = "") -> dict:
-        """`/datasets/{id}/stats` (`api/routes/data.py:172-214`) → A12."""
+                       time_range: tuple[str, str] | None = None,
+                       time_col: str | None = None,
+                       dataset: str = "",
+                       check: Callable[[], None] | None = None) -> dict:
+        """`/datasets/{id}/stats` (`api/routes/data.py:172-214`) → A12,
+        optionally over the rows with ``time_col`` between the
+        ``time_range`` bounds. ``check`` runs first on a cache miss, as in
+        `region_grid`. The cache key does not carry ``time_range``: a
+        caller that passes one names it in ``dataset``."""
         key = cache_key("stats", dataset=dataset, var=value_col, bbox=bbox)
 
         def build():
-            out = bbox_filter(df, lat_col, lon_col, bbox)
+            if check is not None:
+                check()
+            out = df
+            if time_range is not None and time_col is not None:
+                out = out.where(F.col(time_col).between(*time_range))
+            out = bbox_filter(out, lat_col, lon_col, bbox)
             row = region_stats(out, value_col).first()
             return {k: row[k] for k in
                     ("mean", "std", "min", "max", "n", "p10", "p50", "p90")}

@@ -86,8 +86,9 @@ class Catalog:
 
         A DataFrame is an analysed plan that can be reused, so a repeat
         load returns the same object and runs no Spark job (opening a
-        parquet store runs a schema-inference job; NetCDF and Zarr
-        stores decode on the driver). The memo is keyed on the entry's
+        parquet store runs a schema-inference job; a NetCDF4/HDF5 file
+        walks its header and chunk index, and classic NetCDF files and
+        Zarr stores decode on the driver). The memo is keyed on the entry's
         path and a signature of the store's files — relative path, size
         and mtime of every file under the path — recomputed on every
         call (one `os.walk`). A rewritten store, a new path from

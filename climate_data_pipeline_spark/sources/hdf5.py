@@ -195,6 +195,44 @@ def _scaleoffset_decode_fd(raw: bytes, cd_values, info: dict,
     return vals.astype(np.dtype(f"{order}f{size}")).tobytes()
 
 
+def _defilter(raw: bytes, filters, typesize: int, mask: int = 0,
+              dtype_info: dict | None = None,
+              n_elems: int | None = None) -> bytes:
+    """Undo a filter pipeline in reverse — the one defilter of the driver
+    reader, the fractal heap and the executor tasks of
+    `read_hdf5_long_distributed` (module-level, so it pickles into task
+    closures). ``mask`` is the chunk's filter mask: bit i set = pipeline
+    filter i was SKIPPED for this chunk (spec IV.A.2.l) — e.g. an
+    optional deflate that didn't shrink an incompressible chunk — so only
+    unmasked filters are undone. ``dtype_info``/``n_elems`` feed the
+    nbit/scaleoffset decoders (datatype-message precision/offset and
+    chunk element count)."""
+    from .zarr2 import _unshuffle
+    for i in reversed(range(len(filters))):
+        if mask & (1 << i):
+            continue
+        fid, vals = filters[i]
+        if fid == FILTER_FLETCHER32:
+            raw = raw[:-4]
+        elif fid == FILTER_DEFLATE:
+            raw = zlib.decompress(raw)
+        elif fid == FILTER_SHUFFLE:
+            raw = _unshuffle(raw, typesize)
+        elif fid == FILTER_SZIP:
+            from .szip import h5_szip_decode
+            raw = h5_szip_decode(raw, vals)
+        elif fid == FILTER_NBIT:
+            raw = _nbit_decode(raw, dtype_info or {}, n_elems)
+        elif fid == FILTER_SCALEOFFSET:
+            raw = _scaleoffset_decode(raw, vals, dtype_info or {},
+                                      n_elems)
+        else:
+            raise H5Unsupported(
+                f"HDF5 filter {fid} not supported; re-write with "
+                "deflate/shuffle")
+    return raw
+
+
 class H5Unsupported(NotImplementedError):
     """An HDF5 feature outside the libnetcdf 'earliest' profile."""
 
@@ -489,7 +527,7 @@ class H5File:
                     # filtered heap: the WHOLE direct block (header
                     # included) went through the pipeline — undo the
                     # unmasked filters, then index the plain block
-                    blk = _defilter_static(
+                    blk = _defilter(
                         bytes(b[daddr:daddr + stored]),
                         heap["filters"], 1, mask or 0)
                     if blk[:4] != b"FHDB":
@@ -1045,40 +1083,6 @@ class H5File:
             raise H5Unsupported(f"filter pipeline version {version}")
         return out
 
-    def _defilter(self, raw: bytes, filters, typesize: int,
-                  mask: int = 0, dtype_info: dict | None = None,
-                  n_elems: int | None = None) -> bytes:
-        """Undo the pipeline in reverse. ``mask`` is the chunk's filter
-        mask: bit i set = pipeline filter i was SKIPPED for this chunk
-        (spec IV.A.2.l) — e.g. an optional deflate that didn't shrink an
-        incompressible chunk — so only unmasked filters are undone.
-        ``dtype_info``/``n_elems`` feed the nbit/scaleoffset decoders
-        (datatype-message precision/offset and chunk element count)."""
-        from .zarr2 import _unshuffle
-        for i in reversed(range(len(filters))):
-            if mask & (1 << i):
-                continue
-            fid, vals = filters[i]
-            if fid == FILTER_FLETCHER32:
-                raw = raw[:-4]
-            elif fid == FILTER_DEFLATE:
-                raw = zlib.decompress(raw)
-            elif fid == FILTER_SHUFFLE:
-                raw = _unshuffle(raw, typesize)
-            elif fid == FILTER_SZIP:
-                from .szip import h5_szip_decode
-                raw = h5_szip_decode(raw, vals)
-            elif fid == FILTER_NBIT:
-                raw = _nbit_decode(raw, dtype_info or {}, n_elems)
-            elif fid == FILTER_SCALEOFFSET:
-                raw = _scaleoffset_decode(raw, vals, dtype_info or {},
-                                          n_elems)
-            else:
-                raise H5Unsupported(
-                    f"HDF5 filter {fid} not supported; re-write with "
-                    "deflate/shuffle")
-        return raw
-
     def read(self, name: str) -> np.ndarray:
         """Materialize one dataset (contiguous, compact or chunked)."""
         ds = self.datasets[name]
@@ -1426,9 +1430,8 @@ class H5File:
         for offs, size, mask, data_addr in self._chunks(ds):
             raw = self.buf[data_addr:data_addr + size]
             if ds.filters:
-                raw = self._defilter(raw, ds.filters, dtype.itemsize,
-                                     mask, dtype_info=ds.dtype_info,
-                                     n_elems=int(np.prod(chunks)))
+                raw = _defilter(raw, ds.filters, dtype.itemsize, mask,
+                                ds.dtype_info, int(np.prod(chunks)))
             arr = np.frombuffer(raw, dtype=dtype,
                                 count=int(np.prod(chunks)))
             arr = arr.astype(dtype.newbyteorder("=")).reshape(chunks)
@@ -1452,14 +1455,15 @@ def _is_dim_scale(ds: H5Dataset) -> bool:
     return ds.attrs.get("CLASS") == "DIMENSION_SCALE"
 
 
-def hdf5_to_grid(buf: bytes, variables=None, time_range=None):
-    """HDF5/netCDF-4 bytes → (coords, arrays, dim_order, dims) — the
-    container-agnostic grid the ingest pipeline shares with
-    `netcdf._grid_from_nc3` and `zarr2._grid_from_store`."""
+def _netcdf_model(f: H5File, variables=None):
+    """The netCDF-4 reading of an HDF5 header, shared by `hdf5_to_grid`
+    and the chunk-per-task reader → (data variable names, dim_order,
+    coordinates with CF time decoded, detected dims). Dimension scales
+    are the coordinates; a file without any treats its 1-D datasets as
+    coordinates instead."""
     from .netcdf import detect_dims
     from .netcdf3 import decode_cf_time
 
-    f = H5File(buf)
     dim_like = {n for n, d in f.datasets.items() if _is_dim_scale(d)}
     if not dim_like:           # plain HDF5: 1-D datasets act as coords
         # ... except compound-typed ones (a struct per row is an
@@ -1479,9 +1483,8 @@ def hdf5_to_grid(buf: bytes, variables=None, time_range=None):
 
     ref = f.datasets[data_names[0]]
     dim_order = _dim_order_for(f, ref, dim_like)
-
     coords: dict[str, np.ndarray] = {}
-    for i, d in enumerate(dim_order):
+    for d, size in zip(dim_order, ref.shape):
         if d in f.datasets:
             vals = f.read(d)
             units = f.datasets[d].attrs.get("units", "")
@@ -1489,8 +1492,22 @@ def hdf5_to_grid(buf: bytes, variables=None, time_range=None):
                 vals = decode_cf_time(vals, units)
             coords[d] = vals
         else:
-            coords[d] = np.arange(ref.shape[i])
+            coords[d] = np.arange(size)
+    dims = detect_dims(dim_order, {d: str(coords[d].dtype)
+                                   for d in dim_order})
+    return data_names, dim_order, coords, dims
 
+
+def hdf5_to_grid(buf: bytes, variables=None, time_range=None):
+    """HDF5/netCDF-4 bytes → (coords, arrays, dim_order, dims) — the
+    container-agnostic grid the ingest pipeline shares with
+    `netcdf._grid_from_nc3` and `zarr2._grid_from_store`. Decodes every
+    selected variable whole; `read_netcdf_long` uses it only for files
+    the chunk-per-task reader refuses."""
+    from .netcdf import slice_time
+
+    f = H5File(buf)
+    data_names, dim_order, coords, dims = _netcdf_model(f, variables)
     arrays = {}
     for n in data_names:
         a = f.datasets[n].attrs
@@ -1505,19 +1522,8 @@ def hdf5_to_grid(buf: bytes, variables=None, time_range=None):
         arrays[n] = _mask_and_scale(raw, a.get("_FillValue"),
                                     a.get("scale_factor"),
                                     a.get("add_offset"))
-
-    dims = detect_dims(dim_order, {d: str(coords[d].dtype)
-                                   for d in dim_order})
-    if time_range and dims["time"]:
-        t = coords[dims["time"]]
-        conv = (np.datetime64 if np.issubdtype(t.dtype, np.datetime64)
-                else float)
-        keep = np.where((t >= conv(time_range[0]))
-                        & (t <= conv(time_range[1])))[0]
-        axis = dim_order.index(dims["time"])
-        coords[dims["time"]] = t[keep]
-        arrays = {n: np.take(a, keep, axis=axis)
-                  for n, a in arrays.items()}
+    coords, arrays = slice_time(coords, arrays, dim_order, dims,
+                                time_range)
     return coords, arrays, dim_order, dims
 
 
@@ -1574,82 +1580,123 @@ def read_hdf5_long_distributed(spark, path: str, variables=None,
     ``time_range``/``bbox`` prune at the CHUNK INDEX: only chunks whose
     coordinate spans intersect the predicate are ever read or decoded
     (the property that makes point/slice queries on a huge archive
-    cheap); exact row-level predicates apply after decode. All selected
-    data variables must share one chunk grid (what libnetcdf emits for
-    same-shaped variables); select a subset via ``variables`` if not.
+    cheap). Inside a task the time axis is cut with the same inclusive
+    mask as `hdf5_to_grid` (`netcdf.time_mask`); the exact bbox applies
+    after decode. All selected data variables must share one chunk grid
+    (what libnetcdf emits for same-shaped variables) and a numeric
+    datatype; files that break either raise `H5Unsupported` before any
+    job runs (`read_netcdf_long` then decodes them on the driver).
 
     Executors open ``path`` directly — a shared filesystem in cluster
     mode (for object stores, swap the ``open``/seek for a ranged GET in
-    ``fetch``)."""
-    import pandas as pd
+    ``gen``)."""
+    return open_hdf5_long(spark, path, variables, time_range, bbox)[0]
 
-    from .netcdf import _chunk_frames, detect_dims
-    from .netcdf3 import decode_cf_time
 
-    import mmap
+# filters `_defilter` undoes; any other id is refused at plan time
+_KNOWN_FILTERS = frozenset((FILTER_DEFLATE, FILTER_SHUFFLE,
+                            FILTER_FLETCHER32, FILTER_SZIP, FILTER_NBIT,
+                            FILTER_SCALEOFFSET))
 
-    fh_meta = open(path, "rb")
-    # mmap: the driver's metadata walk pages in only the headers/btrees
-    # it touches — a multi-TB archive file never loads driver-side
-    buf = mmap.mmap(fh_meta.fileno(), 0, access=mmap.ACCESS_READ)
-    f = H5File(buf)
-    dim_like = {n for n, d in f.datasets.items() if _is_dim_scale(d)}
-    if not dim_like:
-        dim_like = {n for n, d in f.datasets.items()
-                    if len(d.shape) == 1}
-    data_names = [n for n, d in f.datasets.items()
-                  if n not in dim_like and d.shape]
-    if variables:
-        missing = [v for v in variables if v not in data_names]
-        if missing:
-            raise ValueError(f"variables not found: {missing}")
-        data_names = list(variables)
-    if not data_names:
-        raise ValueError("no data variables in HDF5 file")
 
-    ref = f.datasets[data_names[0]]
-    dim_order = _dim_order_for(f, ref, dim_like)
-    shape = tuple(ref.shape)
-
-    # one shared chunk grid across selected variables
-    if ref.layout.get("class") == "chunked":
-        chunks = tuple(ref.layout["chunks"])
-    else:
-        # contiguous: synthesize leading-dim row blocks (~4 MB each)
-        row_bytes = int(np.prod(shape[1:]) or 1) * ref.dtype.itemsize
-        lead = max(1, min(shape[0], (4 << 20) // max(1, row_bytes)))
-        chunks = (lead,) + shape[1:]
-    for n in data_names[1:]:
+def _task_grid(f: H5File, data_names: list[str]) -> tuple[tuple, tuple]:
+    """(shape, chunk shape) of the task grid the selected variables
+    share. Chunked variables bring their chunk shape; contiguous ones
+    are cut into leading-dimension row blocks of ~4 MB, which fit any
+    grid whose trailing chunk dims span the whole variable. Raises
+    `H5Unsupported` for what a task cannot decode alone: compound or
+    string variables, compact layouts, unknown filters and variables
+    on different chunk grids."""
+    shape = tuple(f.datasets[data_names[0]].shape)
+    chunks = None
+    for n in data_names:
         d = f.datasets[n]
+        if d.dtype is None or d.dtype.names:
+            raise H5Unsupported(
+                f"variable {n!r} has a "
+                f"{d.dtype_info.get('kind') or 'compound'} datatype")
         if tuple(d.shape) != shape:
             raise ValueError("data variables must share one shape; "
                              f"{n!r} differs — pass variables=[...]")
-        ch = (tuple(d.layout["chunks"])
-              if d.layout.get("class") == "chunked" else chunks)
-        if ch != chunks:
-            raise ValueError("data variables must share one chunk grid")
+        cls = d.layout.get("class")
+        if cls not in ("chunked", "contiguous"):
+            raise H5Unsupported(f"variable {n!r} has a {cls} layout")
+        unknown = sorted({fid for fid, _ in d.filters} - _KNOWN_FILTERS)
+        if unknown:
+            raise H5Unsupported(f"HDF5 filter {unknown[0]} not supported")
+        if cls == "chunked":
+            if chunks not in (None, tuple(d.layout["chunks"])):
+                raise H5Unsupported(
+                    "data variables on different chunk grids")
+            chunks = tuple(d.layout["chunks"])
+    if chunks is None:
+        row_bytes = int(np.prod(shape[1:]) or 1) * max(
+            f.datasets[n].dtype.itemsize for n in data_names)
+        chunks = (max(1, min(shape[0], (4 << 20) // row_bytes)),) \
+            + shape[1:]
+    elif chunks[1:] != shape[1:] and any(
+            f.datasets[n].layout["class"] == "contiguous"
+            for n in data_names):
+        raise H5Unsupported("contiguous and chunked data variables on "
+                            "different grids")
+    return shape, chunks
 
-    # coordinates (small, driver-side) + CF decode
-    coords = {}
-    for i, d in enumerate(dim_order):
-        if d in f.datasets:
-            vals = f.read(d)
-            units = f.datasets[d].attrs.get("units", "")
-            if isinstance(units, str) and " since " in units:
-                vals = decode_cf_time(vals, units)
-            coords[d] = vals
-        else:
-            coords[d] = np.arange(shape[i])
-    dims = detect_dims(dim_order, {d: str(coords[d].dtype)
-                                   for d in dim_order})
+
+def _task_meta(f: H5File, name: str, shape: tuple, chunks: tuple) -> dict:
+    """What a task needs to decode its block of variable ``name``:
+    datatype, filters, CF attributes and the (file addr, stored size,
+    filter mask) of each stored chunk keyed by chunk offsets."""
+    d = f.datasets[name]
+    if d.layout["class"] == "chunked":
+        locs = {offs: (addr, size, mask) for offs, addr, size, mask
+                in dataset_chunk_index(f, name)}
+    elif d.layout["addr"] == UNDEF:
+        # never-allocated contiguous dataset: no byte ranges exist;
+        # every chunk takes the fill path
+        locs = {}
+    else:
+        base = d.layout["addr"]
+        row_bytes = int(np.prod(shape[1:]) or 1) * d.dtype.itemsize
+        locs = {(r,) + (0,) * (len(shape) - 1):
+                (base + r * row_bytes,
+                 min(chunks[0], shape[0] - r) * row_bytes, 0)
+                for r in range(0, shape[0], chunks[0])}
+    return {"dtype": str(d.dtype), "dtype_info": d.dtype_info,
+            "filters": d.filters,
+            "fill": d.attrs.get("_FillValue"),
+            "scale": d.attrs.get("scale_factor"),
+            "offset": d.attrs.get("add_offset"),
+            "chunked": d.layout["class"] == "chunked", "locs": locs}
+
+
+def open_hdf5_long(spark, path: str, variables=None, time_range=None,
+                   bbox=None):
+    """`read_hdf5_long_distributed`'s frame and the number of grid cells
+    it selects by ``variables`` and ``time_range`` — its row count when
+    ``bbox`` is None — taken from the header and coordinates alone."""
+    import mmap
+
+    import pandas as pd
+
+    from .netcdf import _chunk_frames, time_mask
+
+    # mmap: the driver's metadata walk pages in only the headers and
+    # chunk indexes it touches — a multi-TB archive file never loads
+    # driver-side
+    with open(path, "rb") as fh, \
+            mmap.mmap(fh.fileno(), 0, access=mmap.ACCESS_READ) as buf:
+        f = H5File(buf)
+        data_names, dim_order, coords, dims = _netcdf_model(f, variables)
+        shape, chunks = _task_grid(f, data_names)
+        meta = {n: _task_meta(f, n, shape, chunks) for n in data_names}
+
+    tdim = dims["time"] if time_range else None
+    keep = time_mask(coords[tdim], time_range) if tdim else None
+    sizes = [int(keep.sum()) if d == tdim else len(coords[d])
+             for d in dim_order]
+    n_cells = int(np.prod(sizes))
 
     intervals: dict[str, tuple] = {}
-    if time_range and dims["time"]:
-        t = coords[dims["time"]]
-        conv = (np.datetime64 if np.issubdtype(t.dtype, np.datetime64)
-                else float)
-        intervals[dims["time"]] = (conv(time_range[0]),
-                                   conv(time_range[1]))
     if bbox and dims["lat"] and dims["lon"]:
         w, s, e, n_ = bbox
         intervals[dims["lat"]] = (s, n_)
@@ -1658,6 +1705,9 @@ def read_hdf5_long_distributed(spark, path: str, variables=None,
 
     def chunk_ok(offs) -> bool:
         for axis, d in enumerate(dim_order):
+            if d == tdim and not keep[offs[axis]:offs[axis]
+                                      + chunks[axis]].any():
+                return False
             if d not in intervals:
                 continue
             lo, hi = intervals[d]
@@ -1666,84 +1716,61 @@ def read_hdf5_long_distributed(spark, path: str, variables=None,
                 return False
         return True
 
-    # per-variable chunk location maps keyed by chunk offsets
-    per_var: dict[str, dict] = {}
-    for n in data_names:
-        d = f.datasets[n]
-        if d.layout.get("class") == "chunked":
-            per_var[n] = {offs: (addr, size, mask) for offs, addr, size,
-                          mask in dataset_chunk_index(f, n)}
-        elif d.layout["addr"] == UNDEF:
-            # never-allocated contiguous dataset: no byte ranges exist;
-            # every chunk takes the loc-None fill path below
-            per_var[n] = {}
-        else:
-            base = d.layout["addr"]
-            row_bytes = int(np.prod(shape[1:]) or 1) * d.dtype.itemsize
-            per_var[n] = {
-                (r,) + (0,) * (len(shape) - 1):
-                    (base + r * row_bytes,
-                     min(chunks[0], shape[0] - r) * row_bytes, 0)
-                for r in range(0, shape[0], chunks[0])}
-
     grid = [range(0, s, c) for s, c in zip(shape, chunks)]
     keys = [offs for offs in iproduct(*grid) if chunk_ok(offs)]
     keys_df = spark.createDataFrame(
         pd.DataFrame({"cid": [",".join(map(str, k)) for k in keys]}),
         schema="cid string")
+    taxis = dim_order.index(tdim) if tdim else None
 
-    meta = {n: {"dtype": str(f.datasets[n].dtype),
-                "filters": f.datasets[n].filters,
-                "fill": f.datasets[n].attrs.get("_FillValue"),
-                "scale": f.datasets[n].attrs.get("scale_factor"),
-                "offset": f.datasets[n].attrs.get("add_offset"),
-                "chunked": f.datasets[n].layout.get("class") == "chunked",
-                "locs": per_var[n]} for n in data_names}
+    def block(fh, offs):
+        """The block at chunk offsets ``offs`` → (coords, arrays): each
+        variable's chunk read from ``fh`` and defiltered (a never-written
+        chunk takes the fill value), cropped to the variable's extent,
+        CF-unpacked, then cut to the kept time steps."""
+        sel = tuple(slice(o, min(o + c, s))
+                    for o, c, s in zip(offs, chunks, shape))
+        crop = tuple(slice(0, sl.stop - sl.start) for sl in sel)
+        local_coords = {d: coords[d][sl] for d, sl in zip(dim_order, sel)}
+        arrays = {}
+        for n, m in meta.items():
+            dtype = np.dtype(m["dtype"])
+            loc = m["locs"].get(offs)
+            if loc is None:                    # never-written chunk
+                fill = m["fill"]
+                if fill is None:
+                    fill = np.nan if dtype.kind == "f" else 0
+                arr = np.full(chunks, fill, dtype=dtype.newbyteorder("="))
+            else:
+                addr, size, mask = loc
+                fh.seek(addr)
+                raw = fh.read(size)
+                if m["chunked"]:
+                    n_elems = int(np.prod(chunks))
+                    raw = _defilter(raw, m["filters"], dtype.itemsize,
+                                    mask, m["dtype_info"], n_elems)
+                    arr = np.frombuffer(raw, dtype=dtype, count=n_elems) \
+                        .reshape(chunks)
+                else:
+                    arr = np.frombuffer(raw, dtype=dtype).reshape(
+                        (-1,) + chunks[1:])
+                arr = arr.astype(dtype.newbyteorder("="))
+            arrays[n] = _mask_and_scale(arr[crop], m["fill"], m["scale"],
+                                        m["offset"])
+        if keep is not None:
+            k = keep[sel[taxis]]
+            local_coords[tdim] = local_coords[tdim][k]
+            arrays = {n: np.compress(k, a, axis=taxis)
+                      for n, a in arrays.items()}
+        return local_coords, arrays
 
     def gen(batches):
-        fh = open(path, "rb")
-        for pdf in batches:
-            for cid in pdf["cid"]:
-                offs = tuple(int(x) for x in cid.split(","))
-                sel = tuple(slice(o, min(o + c, s))
-                            for o, c, s in zip(offs, chunks, shape))
-                local_coords = {d: coords[d][sl]
-                                for d, sl in zip(dim_order, sel)}
-                arrays = {}
-                for n in data_names:
-                    m = meta[n]
-                    dtype = np.dtype(m["dtype"])
-                    loc = m["locs"].get(offs)
-                    if loc is None:            # never-written chunk
-                        fill = m["fill"]
-                        if fill is None:
-                            fill = np.nan if dtype.kind == "f" else 0
-                        arr = np.full(chunks, fill,
-                                      dtype=dtype.newbyteorder("="))
-                    else:
-                        addr, size, mask = loc
-                        fh.seek(addr)
-                        raw = fh.read(size)
-                        if m["chunked"] and m["filters"]:
-                            raw = _defilter_static(raw, m["filters"],
-                                                   dtype.itemsize, mask)
-                        count = (int(np.prod(chunks)) if m["chunked"]
-                                 else len(raw) // dtype.itemsize)
-                        arr = np.frombuffer(raw, dtype=dtype, count=count)
-                        arr = arr.astype(dtype.newbyteorder("="))
-                        if m["chunked"]:
-                            arr = arr.reshape(chunks)
-                        else:
-                            arr = arr.reshape(
-                                (count // int(np.prod(chunks[1:]) or 1),)
-                                + chunks[1:])
-                    crop = tuple(slice(0, sl.stop - sl.start)
-                                 for sl in sel)
-                    arrays[n] = _mask_and_scale(
-                        arr[crop], m["fill"], m["scale"], m["offset"])
-                yield from _chunk_frames(
-                    local_coords, arrays, dim_order,
-                    time_chunk=len(local_coords[dim_order[0]]))
+        with open(path, "rb") as fh:
+            for pdf in batches:
+                for cid in pdf["cid"]:
+                    offs = tuple(int(x) for x in cid.split(","))
+                    yield from _chunk_frames(*block(fh, offs), dim_order,
+                                             time_chunk=chunks[0])
 
     sample_coords = {d: coords[d][:1] for d in dim_order}
 
@@ -1762,44 +1789,10 @@ def read_hdf5_long_distributed(spark, path: str, variables=None,
         next(_chunk_frames(sample_coords, sample_arrays,
                            dim_order))).schema
     out = keys_df.mapInPandas(gen, schema=schema)
-
-    from pyspark.sql import functions as F
-    if time_range and dims["time"]:
-        tcol = dims["time"]
-        is_dt = np.issubdtype(coords[tcol].dtype, np.datetime64)
-        lo = (F.lit(time_range[0]).cast("timestamp") if is_dt
-              else F.lit(float(time_range[0])))
-        hi = (F.lit(time_range[1]).cast("timestamp") if is_dt
-              else F.lit(float(time_range[1])))
-        out = out.where(F.col(tcol).between(lo, hi))
     if bbox and dims["lat"] and dims["lon"]:
         from .io import bbox_filter
         out = bbox_filter(out, dims["lat"], dims["lon"], bbox)
-    return out
-
-
-def _defilter_static(raw: bytes, filters, typesize: int,
-                     mask: int = 0) -> bytes:
-    """Module-level defilter (picklable for executor closures). ``mask``
-    bit i set = pipeline filter i was skipped for this chunk — undo
-    only the unmasked ones (mirrors `H5File._defilter`)."""
-    from .zarr2 import _unshuffle
-    for i in reversed(range(len(filters))):
-        if mask & (1 << i):
-            continue
-        fid, vals = filters[i]
-        if fid == FILTER_FLETCHER32:
-            raw = raw[:-4]
-        elif fid == FILTER_DEFLATE:
-            raw = zlib.decompress(raw)
-        elif fid == FILTER_SHUFFLE:
-            raw = _unshuffle(raw, typesize)
-        elif fid == FILTER_SZIP:
-            from .szip import h5_szip_decode
-            raw = h5_szip_decode(raw, vals)
-        else:
-            raise H5Unsupported(f"HDF5 filter {fid} not supported")
-    return raw
+    return out, n_cells
 
 
 def _mask_and_scale(arr: np.ndarray, fill, scale, offset) -> np.ndarray:

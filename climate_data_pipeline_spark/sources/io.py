@@ -233,25 +233,64 @@ def write_parquet(df: DataFrame, path: str, *,
     return path
 
 
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def parquet_info(spark: SparkSession, path: str) -> dict:
     """Store stats — the analogue of the reference's `get_zarr_info`
-    (`ingest/arco_converter.py:214-246`): schema, file count and bytes
-    on disk from a walk of the store's ``.parquet`` files, and the row
-    count from a Spark ``count()`` (one job). No codec is reported."""
+    (`ingest/arco_converter.py:214-246`) — read from the store's files
+    and footers, with no Spark job on a Spark-written store: file count
+    and bytes on disk from a walk of the data files Spark would read,
+    the row count as the sum of the footers' ``num_rows``, and the
+    schema as ``spark.read.parquet(path)`` reports it. That schema is
+    the row schema Spark wrote into the first footer, handed to
+    ``spark.read.schema`` so that Spark's file index still adds and
+    types the hive partition columns (e.g. ``t_bucket: date``); a store
+    whose footer lacks it (written by another tool) has its schema
+    inferred by Spark (one job). No codec is reported."""
+    import json
     import os
 
-    df = spark.read.parquet(path)
-    files = []
-    for root, _dirs, names in os.walk(path):
-        files += [os.path.join(root, f) for f in names if f.endswith(".parquet")]
-    size = sum(os.path.getsize(f) for f in files)
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    files = _data_files(path)
+    footers = [pq.read_metadata(f) for f in files]
+    row_schema = footers[0].metadata.get(_SPARK_ROW_SCHEMA) \
+        if footers and footers[0].metadata else None
+    reader = spark.read
+    if row_schema is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(row_schema)))
+    schema = reader.parquet(path).schema
     return {
         "path": path,
-        "schema": {f.name: f.dataType.simpleString() for f in df.schema.fields},
+        "schema": {f.name: f.dataType.simpleString() for f in schema.fields},
         "num_files": len(files),
-        "bytes_stored": size,
-        "num_rows": df.count(),
+        "bytes_stored": sum(os.path.getsize(f) for f in files),
+        "num_rows": sum(m.num_rows for m in footers),
     }
+
+
+def _data_files(path: str) -> list[str]:
+    """The ``.parquet`` files of a store that Spark's file index lists:
+    names starting with ``_`` or ``.`` are hidden, except ``_`` in a
+    ``key=value`` partition directory. Sorted; a file path lists itself."""
+    import os
+
+    if os.path.isfile(path):
+        return [path]
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_")
+                                        and "=" not in name)
+
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        files += [os.path.join(root, f) for f in names
+                  if f.endswith(".parquet") and not hidden(f)]
+    return sorted(files)
 
 
 def _hive_partition_keys(path: str) -> list[str]:

@@ -1,22 +1,26 @@
 """NetCDF ingest (SURVEY.md S1/S2): dense labeled N-D grids → the engine's
-long/tall row model.
+long/tall row model, with no external NetCDF libraries.
 
-The conversion core (``grid_to_long``) is real and tested: it takes
-coordinate vectors + dense numpy variable arrays (exactly what
-``xr.open_dataset`` exposes) and produces the long DataFrame, chunked
-along the leading (time) axis so each chunk becomes one Arrow batch —
-the ingest never materializes the full cross product driver-side.
+`read_netcdf_long` (and `open_netcdf_long`, which also returns the
+header-derived cell count `plans.jobs.convert_netcdf` verifies against)
+routes by container:
 
-The file-format seam (``read_netcdf_long``) is REAL for classic
-NetCDF3 files (CDF-1/CDF-2): ``sources/netcdf3.py`` is a pure-numpy
-parser/writer of the publicly documented format, so no external
-libraries are needed for the reference's primary input path.
-``read_netcdf3_many`` scales it horizontally (one task per file via
-``binaryFile`` + ``mapInPandas``). NetCDF4/HDF5 containers go through
-the pure-numpy HDF5 parser in ``sources/hdf5.py``; a file using an HDF5
-feature it does not cover raises ``NotImplementedError``. Dimension
-detection mirrors the reference's heuristics
-(`ingest/netcdf_reader.py:80-111`): name patterns first, dtype fallback.
+- NetCDF4/HDF5 files go through the chunk-per-task reader
+  `hdf5.open_hdf5_long`: the driver mmaps only the header and chunk
+  index, and each stored chunk is read and decoded by its own Spark
+  task.
+- Files that reader refuses at plan time (compound or string
+  variables, variables on different chunk grids, compact layouts) and
+  classic CDF-1/CDF-2 files (`sources/netcdf3.py`, a pure-numpy parser
+  of the public format) are decoded whole on the driver and handed to
+  `grid_to_long`.
+
+`read_netcdf3_many` scales the driver decoder horizontally (one task
+per file via ``binaryFile`` + ``mapInPandas``). A file using a feature
+no reader covers raises ``NotImplementedError``. Dimension detection
+mirrors the reference's heuristics (`ingest/netcdf_reader.py:80-111`):
+name patterns first, dtype fallback; every reader cuts ``time_range``
+with the same inclusive mask (`time_mask`).
 """
 
 from __future__ import annotations
@@ -53,6 +57,29 @@ def detect_dims(dim_names: Sequence[str],
     return {"time": time_dim, "lat": find(LAT_NAMES), "lon": find(LON_NAMES)}
 
 
+def time_mask(t: np.ndarray, time_range: tuple[str, str]) -> np.ndarray:
+    """Which values of time coordinate ``t`` lie inside the inclusive
+    ``time_range`` — bounds parsed as datetime64 on a datetime axis,
+    as floats otherwise. The one read-time time predicate of the
+    driver and chunk-per-task readers."""
+    conv = (np.datetime64 if np.issubdtype(t.dtype, np.datetime64)
+            else float)
+    return (t >= conv(time_range[0])) & (t <= conv(time_range[1]))
+
+
+def slice_time(coords: dict, arrays: dict, dim_order: Sequence[str],
+               dims: dict, time_range: tuple[str, str] | None):
+    """(coords, arrays) cut to the time steps `time_mask` keeps; unchanged
+    without a ``time_range`` or a detected time dimension."""
+    if not (time_range and dims["time"]):
+        return coords, arrays
+    tdim = dims["time"]
+    keep = np.flatnonzero(time_mask(coords[tdim], time_range))
+    axis = list(dim_order).index(tdim)
+    return ({**coords, tdim: coords[tdim][keep]},
+            {n: np.take(a, keep, axis=axis) for n, a in arrays.items()})
+
+
 def grid_to_long(spark: SparkSession,
                  coords: dict[str, np.ndarray],
                  variables: dict[str, np.ndarray],
@@ -62,14 +89,14 @@ def grid_to_long(spark: SparkSession,
     cell and one column per variable (the §1.5 mapping decision).
 
     Chunked along the leading dimension: each chunk is flattened and
-    Arrow-encoded separately, then unioned — this avoids holding a
-    SECOND full long-table pandas copy next to the dense grid (the old
-    single pd.concat doubled peak driver memory). The dense grid itself
-    is driver-resident by this function's contract; for stores too big
-    for that, use the distributed readers (`read_netcdf3_many`,
-    `hdf5.read_hdf5_long_distributed`, `zarr2.read_zarr_long_distributed`)
-    whose executors decode their own chunks. (With xarray present, pass
-    ``ds[v].values`` per chunk — identical code path.)
+    Arrow-encoded separately, then unioned, so no second full long-table
+    pandas copy sits next to the dense grid. The dense grid itself is
+    driver-resident by this function's contract: it serves the driver
+    decoders (classic NetCDF, the NetCDF4/HDF5 files the chunk-per-task
+    reader refuses, `zarr2.read_zarr_long`). Large inputs belong in the
+    distributed readers (`hdf5.read_hdf5_long_distributed`,
+    `zarr2.read_zarr_long_distributed`, `read_netcdf3_many`), whose
+    executors decode their own chunks.
     """
     out = None
     for chunk in _chunk_frames(coords, variables, dim_order, time_chunk):
@@ -152,16 +179,7 @@ def _grid_from_nc3(buf: bytes,
 
     dims = detect_dims(dim_order,
                        {d: str(coords[d].dtype) for d in dim_order})
-    if time_range and dims["time"]:
-        t = coords[dims["time"]]
-        lo = np.datetime64(time_range[0]) if np.issubdtype(
-            t.dtype, np.datetime64) else float(time_range[0])
-        hi = np.datetime64(time_range[1]) if np.issubdtype(
-            t.dtype, np.datetime64) else float(time_range[1])
-        keep = np.where((t >= lo) & (t <= hi))[0]
-        axis = dim_order.index(dims["time"])
-        coords[dims["time"]] = t[keep]
-        arrays = {n: np.take(a, keep, axis=axis) for n, a in arrays.items()}
+    coords, arrays = slice_time(coords, arrays, dim_order, dims, time_range)
     return coords, arrays, dim_order, dims
 
 
@@ -172,19 +190,39 @@ def read_netcdf_long(spark: SparkSession, path: str,
                      ) -> DataFrame:
     """Open a NetCDF file and convert to the long row model with
     read-time projection/predicates (the reference's `read_netcdf_lazy`,
-    `ingest/netcdf_reader.py:34-77`).
+    `ingest/netcdf_reader.py:34-77`) — `open_netcdf_long`'s frame."""
+    return open_netcdf_long(spark, path, variables, time_range, bbox)[0]
 
-    Classic-format files (CDF-1/CDF-2) are read by the built-in
-    pure-numpy parser (`sources/netcdf3.py`); NetCDF4/HDF5 containers by
-    the built-in HDF5 parser (`sources/hdf5.py` — the libnetcdf
-    'earliest' profile: v0 superblock, contiguous/chunked+deflate
-    layouts, DIMENSION_LIST semantics). Files using HDF5 features
-    outside that profile raise a ``NotImplementedError`` that names the
-    feature — no external libraries are used."""
+
+def open_netcdf_long(spark: SparkSession, path: str,
+                     variables: Sequence[str] | None = None,
+                     time_range: tuple[str, str] | None = None,
+                     bbox: tuple[float, float, float, float] | None = None
+                     ) -> tuple[DataFrame, int]:
+    """(long frame, grid cells selected by ``variables`` and
+    ``time_range``) — the cell count is the frame's row count when
+    ``bbox`` is None, taken from the coordinates, never from a pass over
+    the frame.
+
+    NetCDF4/HDF5 containers are read chunk-per-task by
+    `hdf5.open_hdf5_long` (the libnetcdf 'earliest' and the 1.10+
+    'latest' profiles: contiguous/chunked layouts, deflate, shuffle,
+    szip, nbit, scaleoffset, DIMENSION_LIST semantics). Where it refuses
+    at plan time (`hdf5.H5Unsupported`), the file is decoded whole on
+    the driver by `hdf5.hdf5_to_grid`; classic CDF-1/CDF-2 files always
+    are, by `sources/netcdf3.py`. A feature neither HDF5 reader covers
+    raises a ``NotImplementedError`` that names it."""
+    with open(path, "rb") as fh:
+        is_hdf5 = fh.read(4) == b"\x89HDF"
+    if is_hdf5:
+        from .hdf5 import H5Unsupported, hdf5_to_grid, open_hdf5_long
+        try:
+            return open_hdf5_long(spark, path, variables, time_range, bbox)
+        except H5Unsupported:
+            pass                    # decoded on the driver below
     with open(path, "rb") as fh:
         buf = fh.read()
-    if buf[:4] == b"\x89HDF":
-        from .hdf5 import H5Unsupported, hdf5_to_grid
+    if is_hdf5:
         try:
             coords, arrays, dim_order, dims = hdf5_to_grid(
                 buf, variables, time_range)
@@ -199,7 +237,7 @@ def read_netcdf_long(spark: SparkSession, path: str,
     if bbox and dims["lat"] and dims["lon"]:
         from .io import bbox_filter
         df = bbox_filter(df, dims["lat"], dims["lon"], bbox)
-    return df
+    return df, int(np.prod([len(coords[d]) for d in dim_order]))
 
 
 def _grid_from_bytes(buf: bytes, variables=None, time_range=None):

@@ -746,17 +746,10 @@ def _grid_from_store(path: str, variables=None, time_range=None):
 
     coords, dims = _store_coords(path, meta, dim_order,
                                  meta[data_names[0]]["zarray"]["shape"])
+    from .netcdf import slice_time
+
     arrays = {n: read_zarr_array(path, n, meta[n]) for n in data_names}
-    if time_range and dims["time"]:
-        t = coords[dims["time"]]
-        conv = (np.datetime64 if np.issubdtype(t.dtype, np.datetime64)
-                else float)
-        keep = np.where((t >= conv(time_range[0]))
-                        & (t <= conv(time_range[1])))[0]
-        axis = dim_order.index(dims["time"])
-        coords[dims["time"]] = t[keep]
-        arrays = {n: np.take(a, keep, axis=axis)
-                  for n, a in arrays.items()}
+    coords, arrays = slice_time(coords, arrays, dim_order, dims, time_range)
     return coords, arrays, dim_order, dims
 
 

@@ -279,19 +279,19 @@ def test_defilter_honors_filter_mask():
     from climate_data_pipeline_spark.sources.hdf5 import (
         FILTER_DEFLATE,
         FILTER_SHUFFLE,
-        _defilter_static,
+        _defilter,
     )
     from climate_data_pipeline_spark.sources.zarr2 import _shuffle
 
     data = np.arange(16, dtype="<f4").tobytes()
     filters = [(FILTER_SHUFFLE, ()), (FILTER_DEFLATE, ())]
     both = zlib.compress(_shuffle(data, 4))
-    assert _defilter_static(both, filters, 4) == data
+    assert _defilter(both, filters, 4) == data
     # deflate (pipeline index 1) skipped for this chunk → mask 0b10
     shuffled_only = _shuffle(data, 4)
-    assert _defilter_static(shuffled_only, filters, 4, mask=0b10) == data
+    assert _defilter(shuffled_only, filters, 4, mask=0b10) == data
     # both skipped → raw passthrough
-    assert _defilter_static(data, filters, 4, mask=0b11) == data
+    assert _defilter(data, filters, 4, mask=0b11) == data
 
 
 def test_writer_float_sign_bit_location():
@@ -1427,11 +1427,11 @@ def test_v2btree_depth2_chunk_index():
     np.testing.assert_array_equal(f.read("v"), vals)
 
 
-def test_compound_datatype_read_and_grid_split():
-    """Compound (class 6) datasets — the station-observation shape —
-    read as numpy structured arrays (v3 member encoding, explicit
-    offsets with padding gaps honored) and split into one long-model
-    variable per member in hdf5_to_grid."""
+def _compound_obs_hdf5():
+    """A hand-assembled 'latest'-profile file with one compound
+    observation dataset ``obs`` (temp <f8 @0, count <i4 @12, padding
+    between) on a 1-D float ``time`` → (file bytes, the structured
+    array)."""
     import struct
 
     UNDEF = 0xFFFFFFFFFFFFFFFF
@@ -1488,8 +1488,15 @@ def test_compound_datatype_read_and_grid_split():
                       + [(0x0006, lk) for lk in links]))
     sb = (MAGIC_SIG + bytes([3, 8, 8, 0])
           + struct.pack("<QQQQ", 0, UNDEF, cur[0], root) + bytes(4))
-    buf = sb + b"".join(alloc)
+    return sb + b"".join(alloc), obs
 
+
+def test_compound_datatype_read_and_grid_split():
+    """Compound (class 6) datasets — the station-observation shape —
+    read as numpy structured arrays (v3 member encoding, explicit
+    offsets with padding gaps honored) and split into one long-model
+    variable per member in hdf5_to_grid."""
+    buf, obs = _compound_obs_hdf5()
     f = H5File(buf)
     got = f.read("obs")
     assert got.dtype.names == ("temp", "count")

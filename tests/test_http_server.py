@@ -378,22 +378,29 @@ def test_end_date_with_time_component(climate_server):
     assert st == 200 and body["n"] > 0
 
 
-def test_stats_and_region_malformed_date_is_422(climate_server):
+def test_stats_and_region_malformed_date_is_422(climate_server,
+                                                 spark_jobs_of, capfd):
     """A malformed date bound or slice time answers 422 naming the field,
     as the point-family routes do, not a 500 from ANSI Spark's
-    CAST_INVALID_INPUT."""
+    CAST_INVALID_INPUT — checked before the query, so no Spark job runs
+    and Spark logs no CAST_INVALID_INPUT error trace."""
     url, _rows = climate_server
     box = "west=95&south=-5&east=115&north=25"
+    _get(f"{url}/datasets/era5-like/stats?{box}")    # the store is loaded
     for route, q, field in (
             ("stats", "start_date=2020-01-99", "start_date"),
             ("stats", "start_date=2020-01-01&end_date=2020-01-99",
              "end_date"),
             ("region", "time=2020-01-99", "time")):
-        with pytest.raises(HTTPError) as e:
-            _get(f"{url}/datasets/era5-like/{route}?{box}&{q}")
-        assert e.value.code == 422, (route, q)
+        def get():
+            with pytest.raises(HTTPError) as e:
+                _get(f"{url}/datasets/era5-like/{route}?{box}&{q}")
+            return e
+        e, n_jobs = spark_jobs_of(get)
+        assert e.value.code == 422 and n_jobs == 0, (route, q, n_jobs)
         detail = json.loads(e.value.read())["detail"]
         assert field in detail and "2020-01-99" in detail, detail
+    assert "CAST_INVALID_INPUT" not in capfd.readouterr().err
     # the rejected requests cached nothing: valid ones still answer
     st, body = _get(f"{url}/datasets/era5-like/stats?{box}"
                     "&start_date=2020-01-01&end_date=2020-01-31")

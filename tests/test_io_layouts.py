@@ -227,3 +227,49 @@ def test_layout_advisor(spark, sf_small):
     ts = suggest_grid_chunks({"time": 10_000, "lat": 721, "lon": 1440},
                              ["point extract"], dtype_bytes=4)
     assert ts["chunks"]["lat"] == 10 and ts["chunks"]["time"] > 1000
+
+
+@pytest.mark.parametrize("layout", ["timeseries", "balanced", "spatial"])
+def test_parquet_info_reads_footers_without_a_job(spark, tmp_path, layout,
+                                                   spark_jobs_of):
+    """`parquet_info` reports the schema and row count
+    `spark.read.parquet` sees — hive partition columns typed, as the
+    spatial layout's `t_bucket: date` — from footers alone: no Spark
+    job on a Spark-written store."""
+    df = spark.range(500).select(
+        (F.col("id") % 7).alias("user_id"),
+        F.timestamp_seconds(F.col("id") * 7200).alias("ts"),
+        (F.col("id") * 0.5).alias("value"))
+    path = str(tmp_path / layout)
+    write_parquet(df, path, layout=layout, entity_cols=["user_id"],
+                  time_col="ts", target_files=3)
+    info, n_jobs = spark_jobs_of(lambda: parquet_info(spark, path))
+    back = spark.read.parquet(path)
+    assert info["schema"] == {f.name: f.dataType.simpleString()
+                              for f in back.schema.fields}
+    assert info["num_rows"] == back.count() == 500
+    assert n_jobs == 0
+    if layout == "spatial":
+        assert info["schema"]["t_bucket"] == "date"
+
+
+def test_parquet_info_on_a_pyarrow_file(spark, tmp_path):
+    """A file without Spark's row-schema footer key (written by pyarrow)
+    still reports Spark's schema and the footers' row count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "arrow")
+    import os
+    os.makedirs(path)
+    table = pa.table({"k": pa.array(range(40), pa.int32()),
+                      "t": pa.array(range(40), pa.timestamp("us", "UTC")),
+                      "v": pa.array([i / 4 for i in range(40)])})
+    pq.write_table(table, f"{path}/part-0.parquet", row_group_size=16)
+    pq.write_table(table.slice(0, 5), f"{path}/part-1.parquet")
+    info = parquet_info(spark, path)
+    back = spark.read.parquet(path)
+    assert info["schema"] == {f.name: f.dataType.simpleString()
+                              for f in back.schema.fields}
+    assert info["num_rows"] == back.count() == 45
+    assert info["num_files"] == 2

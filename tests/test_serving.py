@@ -169,6 +169,55 @@ def test_region_grid_and_summary(api, grid):
     assert summary["n"] > 0
 
 
+class _NoFrame:
+    """Stands for a DataFrame that must not be touched."""
+
+    def __getattr__(self, name):
+        raise AssertionError(f"the frame was used ({name})")
+
+
+def test_region_summary_time_range_on_miss_only(api, grid):
+    """`region_summary` applies its time range inside the cached build,
+    after `check`: the answer equals the summary of the pre-filtered
+    frame, and a cache hit touches neither the frame nor `check`."""
+    from pyspark.sql import functions as F
+
+    bbox = (-20.0, -10.0, 20.0, 10.0)
+    tr = ("2020-01-10", "2020-01-20 23:59:59.999999")
+    want = api.region_summary(grid.where(F.col("ts").between(*tr)),
+                              "lat", "lon", "temperature", bbox,
+                              dataset="grid-prefiltered")
+    checks = []
+    got = api.region_summary(grid, "lat", "lon", "temperature", bbox,
+                             time_range=tr, time_col="ts",
+                             dataset="grid@tr", check=lambda: checks.append(1))
+    assert got == want and checks == [1]
+    again = api.region_summary(_NoFrame(), "lat", "lon", "temperature",
+                               bbox, time_range=tr, time_col="ts",
+                               dataset="grid@tr",
+                               check=lambda: checks.append(2))
+    assert again == got and checks == [1]
+
+
+def test_region_check_runs_before_the_frame(api):
+    """A failing `check` stops a miss before any use of the frame, and
+    the failed build caches nothing."""
+    def bad():
+        raise ValueError("bad bound")
+
+    for call in (
+            lambda: api.region_summary(_NoFrame(), "lat", "lon", "t",
+                                       (0.0, 0.0, 1.0, 1.0),
+                                       dataset="never", check=bad),
+            lambda: api.region_grid(_NoFrame(), "lat", "lon", "t",
+                                    (0.0, 0.0, 1.0, 1.0), at=("x", "x"),
+                                    time_col="ts", dataset="never",
+                                    check=bad)):
+        for _ in range(2):
+            with pytest.raises(ValueError, match="bad bound"):
+                call()
+
+
 def test_metric_endpoint(api, grid):
     rows = api.metric(grid, "climatology", "ts", "temperature",
                       keys=["lat"], dataset="grid")
