@@ -233,6 +233,20 @@ def _defilter(raw: bytes, filters, typesize: int, mask: int = 0,
     return raw
 
 
+def _decode_chunk(raw: bytes, dtype: np.dtype, shape, filters=(),
+                  mask: int = 0, dtype_info: dict | None = None
+                  ) -> np.ndarray:
+    """One stored chunk's bytes → a native-byte-order array of ``shape``:
+    defilter, ``frombuffer``, byte order, reshape — the chunk decode of
+    both `H5File._read_chunked` and the chunk-per-task reader."""
+    n_elems = int(np.prod(shape))
+    if filters:
+        raw = _defilter(raw, filters, dtype.itemsize, mask, dtype_info,
+                        n_elems)
+    return (np.frombuffer(raw, dtype=dtype, count=n_elems)
+            .astype(dtype.newbyteorder("=")).reshape(shape))
+
+
 class H5Unsupported(NotImplementedError):
     """An HDF5 feature outside the libnetcdf 'earliest' profile."""
 
@@ -1423,18 +1437,13 @@ class H5File:
     def _read_chunked(self, ds: H5Dataset) -> np.ndarray:
         dtype = ds.dtype
         chunks = ds.layout["chunks"]
-        fill = ds.attrs.get("_FillValue")
-        if fill is None:
-            fill = np.nan if dtype.kind == "f" else 0
-        out = np.full(ds.shape, fill, dtype=dtype.newbyteorder("="))
+        from .zarr2 import _fill_for
+        out = np.full(ds.shape, _fill_for(ds.attrs.get("_FillValue"), dtype),
+                      dtype=dtype.newbyteorder("="))
         for offs, size, mask, data_addr in self._chunks(ds):
-            raw = self.buf[data_addr:data_addr + size]
-            if ds.filters:
-                raw = _defilter(raw, ds.filters, dtype.itemsize, mask,
-                                ds.dtype_info, int(np.prod(chunks)))
-            arr = np.frombuffer(raw, dtype=dtype,
-                                count=int(np.prod(chunks)))
-            arr = arr.astype(dtype.newbyteorder("=")).reshape(chunks)
+            arr = _decode_chunk(self.buf[data_addr:data_addr + size],
+                                dtype, chunks, ds.filters, mask,
+                                ds.dtype_info)
             sel = tuple(slice(o, min(o + c, s))
                         for o, c, s in zip(offs, chunks, ds.shape))
             crop = tuple(slice(0, sl.stop - sl.start) for sl in sel)
@@ -1569,27 +1578,25 @@ def dataset_chunk_index(f: H5File, name: str) -> list[tuple]:
 
 def read_hdf5_long_distributed(spark, path: str, variables=None,
                                time_range=None, bbox=None):
-    """Chunk ↔ task for a single (large) NetCDF4/HDF5 file — the HDF5
-    analogue of `zarr2.read_zarr_long_distributed`: every stored chunk
-    becomes one Spark task that seeks, reads and defilters its own
+    """Chunk ↔ task for a single (large) NetCDF4/HDF5 file: every stored
+    chunk becomes one Spark task that seeks, reads and defilters its own
     bytes executor-side, so a multi-TB archive file never materializes
     on the driver. Contiguous (unfiltered) datasets are split into
     leading-dimension row blocks by byte range — same chunk-per-task
-    plan, synthesized.
+    plan, synthesized. The tasks, the chunk-index pruning by
+    ``time_range``/``bbox`` and the row filters are
+    `netcdf.chunk_tasks_long`'s, shared with
+    `zarr2.read_zarr_long_distributed`: ``time_range`` is cut with the
+    same inclusive mask as `hdf5_to_grid` (`netcdf.time_mask`).
 
-    ``time_range``/``bbox`` prune at the CHUNK INDEX: only chunks whose
-    coordinate spans intersect the predicate are ever read or decoded
-    (the property that makes point/slice queries on a huge archive
-    cheap). Inside a task the time axis is cut with the same inclusive
-    mask as `hdf5_to_grid` (`netcdf.time_mask`); the exact bbox applies
-    after decode. All selected data variables must share one chunk grid
-    (what libnetcdf emits for same-shaped variables) and a numeric
-    datatype; files that break either raise `H5Unsupported` before any
-    job runs (`read_netcdf_long` then decodes them on the driver).
+    All selected data variables must share one chunk grid (what
+    libnetcdf emits for same-shaped variables) and a numeric datatype;
+    files that break either raise `H5Unsupported` before any job runs
+    (`read_netcdf_long` then decodes them on the driver).
 
     Executors open ``path`` directly — a shared filesystem in cluster
     mode (for object stores, swap the ``open``/seek for a ranged GET in
-    ``gen``)."""
+    `_task_chunk`)."""
     return open_hdf5_long(spark, path, variables, time_range, bbox)[0]
 
 
@@ -1669,6 +1676,27 @@ def _task_meta(f: H5File, name: str, shape: tuple, chunks: tuple) -> dict:
             "chunked": d.layout["class"] == "chunked", "locs": locs}
 
 
+def _task_chunk(fh, m: dict, offs: tuple, shape: tuple,
+                chunks: tuple) -> np.ndarray:
+    """One variable's chunk at offsets ``offs`` read from the open file
+    ``fh`` (the fill value where the chunk was never written), then
+    CF-unpacked. ``m`` is the variable's `_task_meta`."""
+    dtype = np.dtype(m["dtype"])
+    loc = m["locs"].get(offs)
+    if loc is None:                            # never-written chunk
+        from .zarr2 import _fill_for
+        arr = np.full(chunks, _fill_for(m["fill"], dtype),
+                      dtype=dtype.newbyteorder("="))
+    else:
+        addr, size, mask = loc
+        fh.seek(addr)
+        block = chunks if m["chunked"] else \
+            (min(chunks[0], shape[0] - offs[0]),) + chunks[1:]
+        arr = _decode_chunk(fh.read(size), dtype, block, m["filters"],
+                            mask, m["dtype_info"])
+    return _mask_and_scale(arr, m["fill"], m["scale"], m["offset"])
+
+
 def open_hdf5_long(spark, path: str, variables=None, time_range=None,
                    bbox=None):
     """`read_hdf5_long_distributed`'s frame and the number of grid cells
@@ -1676,9 +1704,7 @@ def open_hdf5_long(spark, path: str, variables=None, time_range=None,
     ``bbox`` is None — taken from the header and coordinates alone."""
     import mmap
 
-    import pandas as pd
-
-    from .netcdf import _chunk_frames, time_mask
+    from .netcdf import chunk_tasks_long
 
     # mmap: the driver's metadata walk pages in only the headers and
     # chunk indexes it touches — a multi-TB archive file never loads
@@ -1690,109 +1716,20 @@ def open_hdf5_long(spark, path: str, variables=None, time_range=None,
         shape, chunks = _task_grid(f, data_names)
         meta = {n: _task_meta(f, n, shape, chunks) for n in data_names}
 
-    tdim = dims["time"] if time_range else None
-    keep = time_mask(coords[tdim], time_range) if tdim else None
-    sizes = [int(keep.sum()) if d == tdim else len(coords[d])
-             for d in dim_order]
-    n_cells = int(np.prod(sizes))
-
-    intervals: dict[str, tuple] = {}
-    if bbox and dims["lat"] and dims["lon"]:
-        w, s, e, n_ = bbox
-        intervals[dims["lat"]] = (s, n_)
-        if w <= e:
-            intervals[dims["lon"]] = (w, e)
-
-    def chunk_ok(offs) -> bool:
-        for axis, d in enumerate(dim_order):
-            if d == tdim and not keep[offs[axis]:offs[axis]
-                                      + chunks[axis]].any():
-                return False
-            if d not in intervals:
-                continue
-            lo, hi = intervals[d]
-            span = coords[d][offs[axis]:offs[axis] + chunks[axis]]
-            if len(span) == 0 or span.max() < lo or span.min() > hi:
-                return False
-        return True
-
-    grid = [range(0, s, c) for s, c in zip(shape, chunks)]
-    keys = [offs for offs in iproduct(*grid) if chunk_ok(offs)]
-    keys_df = spark.createDataFrame(
-        pd.DataFrame({"cid": [",".join(map(str, k)) for k in keys]}),
-        schema="cid string")
-    taxis = dim_order.index(tdim) if tdim else None
-
-    def block(fh, offs):
-        """The block at chunk offsets ``offs`` → (coords, arrays): each
-        variable's chunk read from ``fh`` and defiltered (a never-written
-        chunk takes the fill value), cropped to the variable's extent,
-        CF-unpacked, then cut to the kept time steps."""
-        sel = tuple(slice(o, min(o + c, s))
-                    for o, c, s in zip(offs, chunks, shape))
-        crop = tuple(slice(0, sl.stop - sl.start) for sl in sel)
-        local_coords = {d: coords[d][sl] for d, sl in zip(dim_order, sel)}
-        arrays = {}
-        for n, m in meta.items():
-            dtype = np.dtype(m["dtype"])
-            loc = m["locs"].get(offs)
-            if loc is None:                    # never-written chunk
-                fill = m["fill"]
-                if fill is None:
-                    fill = np.nan if dtype.kind == "f" else 0
-                arr = np.full(chunks, fill, dtype=dtype.newbyteorder("="))
-            else:
-                addr, size, mask = loc
-                fh.seek(addr)
-                raw = fh.read(size)
-                if m["chunked"]:
-                    n_elems = int(np.prod(chunks))
-                    raw = _defilter(raw, m["filters"], dtype.itemsize,
-                                    mask, m["dtype_info"], n_elems)
-                    arr = np.frombuffer(raw, dtype=dtype, count=n_elems) \
-                        .reshape(chunks)
-                else:
-                    arr = np.frombuffer(raw, dtype=dtype).reshape(
-                        (-1,) + chunks[1:])
-                arr = arr.astype(dtype.newbyteorder("="))
-            arrays[n] = _mask_and_scale(arr[crop], m["fill"], m["scale"],
-                                        m["offset"])
-        if keep is not None:
-            k = keep[sel[taxis]]
-            local_coords[tdim] = local_coords[tdim][k]
-            arrays = {n: np.compress(k, a, axis=taxis)
-                      for n, a in arrays.items()}
-        return local_coords, arrays
-
-    def gen(batches):
+    def decode(offsets):
         with open(path, "rb") as fh:
-            for pdf in batches:
-                for cid in pdf["cid"]:
-                    offs = tuple(int(x) for x in cid.split(","))
-                    yield from _chunk_frames(*block(fh, offs), dim_order,
-                                             time_chunk=chunks[0])
+            for offs in offsets:
+                yield {n: _task_chunk(fh, m, offs, shape, chunks)
+                       for n, m in meta.items()}
 
-    sample_coords = {d: coords[d][:1] for d in dim_order}
-
-    def _out_dtype(m):
-        # mirror _mask_and_scale: a present fill OR any packing attr
-        # promotes to float64 (static per variable)
-        if m["scale"] is not None or m["offset"] is not None \
-                or m["fill"] is not None:
-            return np.dtype("float64")
-        return np.dtype(m["dtype"]).newbyteorder("=")
-
-    sample_arrays = {n: np.zeros([1] * len(dim_order),
-                                 dtype=_out_dtype(meta[n]))
-                     for n in data_names}
-    schema = spark.createDataFrame(
-        next(_chunk_frames(sample_coords, sample_arrays,
-                           dim_order))).schema
-    out = keys_df.mapInPandas(gen, schema=schema)
-    if bbox and dims["lat"] and dims["lon"]:
-        from .io import bbox_filter
-        out = bbox_filter(out, dims["lat"], dims["lon"], bbox)
-    return out, n_cells
+    # mirror _mask_and_scale: a present fill OR any packing attr
+    # promotes to float64 (static per variable)
+    dtypes = {n: np.dtype("float64")
+              if any(m[k] is not None for k in ("fill", "scale", "offset"))
+              else np.dtype(m["dtype"]).newbyteorder("=")
+              for n, m in meta.items()}
+    return chunk_tasks_long(spark, coords, dim_order, dims, shape, chunks,
+                            dtypes, decode, time_range, bbox)
 
 
 def _mask_and_scale(arr: np.ndarray, fill, scale, offset) -> np.ndarray:

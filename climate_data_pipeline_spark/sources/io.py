@@ -62,21 +62,15 @@ def _load_parquet_ns(spark: SparkSession, path: str,
 def ntz_timestamp_columns(path: str) -> tuple[str, ...]:
     """Columns a parquet store encodes as tz-naive timestamps
     (isAdjustedToUTC=false — Spark surfaces them as TIMESTAMP_NTZ, and
-    the NANOS unit needs the legacy conf) — read from ONE data file's
-    footer (pyarrow, driver-side metadata only). Lets arbitrary
-    registrations normalize event time exactly like the named testdata
-    tables, instead of keying on file names."""
-    import glob
-    import os
-
+    the NANOS unit needs the legacy conf) — read from the footer of ONE
+    of the data files Spark reads (`_data_files`; pyarrow, driver-side
+    metadata only). Lets arbitrary registrations normalize event time
+    exactly like the named testdata tables, instead of keying on file
+    names."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
-                                 recursive=True))
+    files = _data_files(path)
     if not files:
         return ()
     schema = pq.read_schema(files[0])
@@ -376,16 +370,12 @@ def pruning_report(path: str, column: str, lo, hi) -> dict:
     ``write_parquet(layout='timeseries')`` a time-range predicate should
     skip most row groups (footer min/max disjoint from [lo, hi]); if the
     skipped fraction is ~0 the sort order didn't survive the write and
-    the layout needs fixing. Pure footer metadata — no data read."""
-    import os
-
+    the layout needs fixing. Pure footer metadata of the data files
+    Spark reads (`_data_files`) — no data read."""
     import pyarrow.parquet as pq
 
-    files = []
-    for root, _dirs, names in os.walk(path):
-        files += [os.path.join(root, f) for f in names if f.endswith(".parquet")]
     total = kept = no_stats = 0
-    for f in files:
+    for f in _data_files(path):
         md = pq.ParquetFile(f).metadata
         try:
             ci = [md.schema.column(i).name for i in range(md.num_columns)].index(column)

@@ -1,19 +1,22 @@
 """NetCDF ingest (SURVEY.md S1/S2): dense labeled N-D grids → the engine's
 long/tall row model, with no external NetCDF libraries.
 
+Two ways turn a grid into rows, shared by every container:
+
+- `chunk_tasks_long`, the chunk-per-task reader core: one stored chunk
+  becomes one Spark task that decodes its own bytes. The containers
+  bring their coordinate model and a chunk decoder
+  (`hdf5.open_hdf5_long`, `zarr2.read_zarr_long_distributed`); the
+  core prunes chunks, runs the tasks and filters the rows.
+- `grid_to_long`, for grids decoded whole on the driver.
+
 `read_netcdf_long` (and `open_netcdf_long`, which also returns the
 header-derived cell count `plans.jobs.convert_netcdf` verifies against)
-routes by container:
-
-- NetCDF4/HDF5 files go through the chunk-per-task reader
-  `hdf5.open_hdf5_long`: the driver mmaps only the header and chunk
-  index, and each stored chunk is read and decoded by its own Spark
-  task.
-- Files that reader refuses at plan time (compound or string
-  variables, variables on different chunk grids, compact layouts) and
-  classic CDF-1/CDF-2 files (`sources/netcdf3.py`, a pure-numpy parser
-  of the public format) are decoded whole on the driver and handed to
-  `grid_to_long`.
+routes NetCDF4/HDF5 files to `hdf5.open_hdf5_long`. Files that reader
+refuses at plan time (compound or string variables, variables on
+different chunk grids, compact layouts) and classic CDF-1/CDF-2 files
+(`sources/netcdf3.py`, a pure-numpy parser of the public format) are
+decoded whole on the driver and handed to `grid_to_long`.
 
 `read_netcdf3_many` scales the driver decoder horizontally (one task
 per file via ``binaryFile`` + ``mapInPandas``). A file using a feature
@@ -25,7 +28,8 @@ with the same inclusive mask (`time_mask`).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
+from itertools import product as iproduct
 
 import numpy as np
 import pandas as pd
@@ -93,10 +97,10 @@ def grid_to_long(spark: SparkSession,
     pandas copy sits next to the dense grid. The dense grid itself is
     driver-resident by this function's contract: it serves the driver
     decoders (classic NetCDF, the NetCDF4/HDF5 files the chunk-per-task
-    reader refuses, `zarr2.read_zarr_long`). Large inputs belong in the
-    distributed readers (`hdf5.read_hdf5_long_distributed`,
-    `zarr2.read_zarr_long_distributed`, `read_netcdf3_many`), whose
-    executors decode their own chunks.
+    reader refuses, `zarr2.read_zarr_long`). Large inputs belong in
+    `chunk_tasks_long` (behind `hdf5.read_hdf5_long_distributed` and
+    `zarr2.read_zarr_long_distributed`) or `read_netcdf3_many`, whose
+    executors decode their own chunks or files.
     """
     out = None
     for chunk in _chunk_frames(coords, variables, dim_order, time_chunk):
@@ -139,6 +143,107 @@ def _chunk_frames(coords: dict[str, np.ndarray],
         for v, arr in variables.items():
             data[v] = arr[start:stop].reshape(n)
         yield pd.DataFrame(data)
+
+
+def chunk_tasks_long(spark: SparkSession,
+                     coords: dict[str, np.ndarray],
+                     dim_order: Sequence[str],
+                     dims: dict[str, str | None],
+                     shape: Sequence[int],
+                     chunks: Sequence[int],
+                     dtypes: dict[str, np.dtype],
+                     decode: Callable[[list[tuple[int, ...]]],
+                                      Iterable[dict[str, np.ndarray]]],
+                     time_range: tuple[str, str] | None = None,
+                     bbox: tuple[float, float, float, float] | None = None,
+                     ) -> tuple[DataFrame, int]:
+    """Chunk ↔ task: the one chunk-per-task reader core — the Spark shape
+    of the reference's lazy Dask chunk graph (`processing/chunking.py`).
+    Every stored chunk the predicates keep becomes one Spark task that
+    decodes its own bytes, so no data variable is decoded on the driver.
+
+    The container brings its coordinate model — ``coords`` (CF time
+    decoded), ``dim_order``, detected ``dims``, the variables' common
+    ``shape`` and ``chunks``, and each variable's output dtype in
+    ``dtypes`` — and ``decode``, a picklable callable that a task calls
+    once with the element offsets of its chunks. It yields, per offset
+    in order, ``{variable: array}`` at full chunk shape (an edge block
+    may already stop at the array's extent), with the fill value for a
+    chunk that was never written. One call per task lets a container
+    open its file once per task, not once per chunk.
+
+    The core does the rest, the same way for every container:
+
+    - ``time_range`` keeps time steps by `time_mask`, the predicate of
+      the driver readers, so the rows equal theirs by construction;
+    - a chunk is read only if it holds a kept time step and its lat/lon
+      span meets ``bbox`` (a box that crosses the antimeridian prunes
+      on latitude only);
+    - a task crops each chunk to the array's extent, cuts it to the
+      kept time steps and emits rows through `_chunk_frames`;
+    - the exact ``bbox`` applies after decode (`io.bbox_filter`).
+
+    Returns (frame, grid cells selected by ``time_range``) — the frame's
+    row count when ``bbox`` is None, taken from the coordinates alone."""
+    dim_order = list(dim_order)
+    tdim = dims["time"] if time_range else None
+    keep = time_mask(coords[tdim], time_range) if tdim else None
+    n_cells = int(np.prod([int(keep.sum()) if d == tdim else len(coords[d])
+                           for d in dim_order]))
+
+    intervals: dict[str, tuple] = {}
+    if bbox and dims["lat"] and dims["lon"]:
+        west, south, east, north = bbox
+        intervals[dims["lat"]] = (south, north)
+        if west <= east:
+            intervals[dims["lon"]] = (west, east)
+
+    def chunk_ok(offs) -> bool:
+        for axis, d in enumerate(dim_order):
+            span = slice(offs[axis], offs[axis] + chunks[axis])
+            if d == tdim and not keep[span].any():
+                return False
+            if d in intervals:
+                lo, hi = intervals[d]
+                vals = coords[d][span]
+                if len(vals) == 0 or vals.max() < lo or vals.min() > hi:
+                    return False
+        return True
+
+    grid = [range(0, s, c) for s, c in zip(shape, chunks)]
+    keys_df = spark.createDataFrame(
+        pd.DataFrame({"cid": [",".join(map(str, offs))
+                              for offs in iproduct(*grid)
+                              if chunk_ok(offs)]}),
+        schema="cid string")
+    taxis = dim_order.index(tdim) if tdim else None
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        offsets = [tuple(int(x) for x in cid.split(","))
+                   for pdf in batches for cid in pdf["cid"]]
+        for offs, arrays in zip(offsets, decode(offsets)):
+            sel = tuple(slice(o, min(o + c, s))
+                        for o, c, s in zip(offs, chunks, shape))
+            crop = tuple(slice(0, sl.stop - sl.start) for sl in sel)
+            local = {d: coords[d][sl] for d, sl in zip(dim_order, sel)}
+            arrays = {n: a[crop] for n, a in arrays.items()}
+            if keep is not None:
+                k = keep[sel[taxis]]
+                local[tdim] = local[tdim][k]
+                arrays = {n: np.compress(k, a, axis=taxis)
+                          for n, a in arrays.items()}
+            yield from _chunk_frames(local, arrays, dim_order,
+                                     time_chunk=chunks[0])
+
+    sample = _chunk_frames({d: coords[d][:1] for d in dim_order},
+                           {n: np.zeros([1] * len(dim_order), dtype=dt)
+                            for n, dt in dtypes.items()}, dim_order)
+    out = keys_df.mapInPandas(
+        gen, schema=spark.createDataFrame(next(sample)).schema)
+    if bbox and dims["lat"] and dims["lon"]:
+        from .io import bbox_filter
+        out = bbox_filter(out, dims["lat"], dims["lon"], bbox)
+    return out, n_cells
 
 
 def _grid_from_nc3(buf: bytes,

@@ -26,9 +26,11 @@ Codec support (what the reference writes by default is covered):
   public pure-python decoder here) and are refused loudly.
 
 Chunks ↔ tasks: ``read_zarr_long_distributed`` hands each chunk of the
-store to a Spark task (`mapInPandas` over the chunk-key list with
-broadcast coordinates) — the Spark shape of the reference's Dask
-chunk graph (`processing/chunking.py`).
+store to a Spark task through `netcdf.chunk_tasks_long`, the
+chunk-per-task reader core it shares with the NetCDF4/HDF5 reader —
+the Spark shape of the reference's Dask chunk graph
+(`processing/chunking.py`). This module brings the store model
+(`_store_model`) and the chunk decode (`_read_chunk`).
 """
 
 from __future__ import annotations
@@ -368,8 +370,9 @@ def _decode_chunk_file(raw: bytes, za: dict, dtype: np.dtype,
 
 
 def _fill_for(fill, dtype: np.dtype):
-    """Zarr v2 ``fill_value: null`` → NaN for floats, 0 for other
-    dtypes (zarr's conventional default; NaN would crash an int full)."""
+    """Zarr v2 ``fill_value: null`` (or an HDF5 variable without
+    ``_FillValue``) → NaN for floats, 0 for other dtypes (zarr's
+    conventional default; NaN would crash an int full)."""
     if fill is not None:
         return fill
     return np.nan if dtype.kind == "f" else 0
@@ -576,27 +579,32 @@ def _chunk_grid(shape, chunks):
     return [math.ceil(s / c) for s, c in zip(shape, chunks)]
 
 
+def _read_chunk(path: str, name: str, za: dict, idx: tuple) -> np.ndarray:
+    """Chunk ``idx`` of array ``name`` at full chunk shape, decoded, or
+    ``fill_value`` everywhere when the chunk was never written — the
+    chunk read of `read_zarr_array` and the chunk-per-task reader."""
+    dtype = np.dtype(za["dtype"])
+    chunks = tuple(za["chunks"])
+    fname = _chunk_path(path, name, za, idx)
+    if not os.path.exists(fname):
+        return np.full(chunks, _fill_for(za.get("fill_value"), dtype),
+                       dtype=dtype)
+    with open(fname, "rb") as fh:
+        return _decode_chunk_file(fh.read(), za, dtype, chunks,
+                                  za.get("order", "C"))
+
+
 def read_zarr_array(path: str, name: str, meta: dict) -> np.ndarray:
     """Materialize one array: decode every chunk file, crop edge chunks,
     fill missing chunks with fill_value."""
     za = meta["zarray"]
     shape, chunks = za["shape"], za["chunks"]
-    dtype = np.dtype(za["dtype"])
-    order = za.get("order", "C")
-    fill = _fill_for(za.get("fill_value"), dtype)
-    out = np.full(shape, fill, dtype=dtype) \
-        if shape else np.zeros((), dtype=dtype)
+    out = np.empty(shape, dtype=np.dtype(za["dtype"]))
     for idx in iproduct(*[range(n) for n in _chunk_grid(shape, chunks)]):
-        fname = _chunk_path(path, name, za, idx)
-        if not os.path.exists(fname):
-            continue
-        with open(fname, "rb") as fh:
-            arr = _decode_chunk_file(fh.read(), za, dtype,
-                                     tuple(chunks), order)
         sel = tuple(slice(i * c, min((i + 1) * c, s))
                     for i, c, s in zip(idx, chunks, shape))
         crop = tuple(slice(0, sl.stop - sl.start) for sl in sel)
-        out[sel] = arr[crop]
+        out[sel] = _read_chunk(path, name, za, idx)[crop]
     return out
 
 
@@ -705,31 +713,16 @@ def zarr_info(path: str) -> dict:
     return out
 
 
-def _store_coords(path: str, meta: dict, dim_order, ref_shape):
-    """Decode ONLY the (small, 1-D) coordinate arrays of a store plus
-    CF time, and detect dim roles — never touches a data variable, so
-    it is safe to call driver-side on a multi-TB store."""
+def _store_model(path: str, variables=None):
+    """The xarray reading of a store's metadata, shared by
+    `_grid_from_store` and the chunk-per-task reader → (metadata, data
+    variable names, dim_order, coordinates with CF time decoded,
+    detected dims) — the Zarr counterpart of `hdf5._netcdf_model`.
+    Arrays whose ``_ARRAY_DIMENSIONS`` name only themselves are the
+    coordinates. Decodes only those small 1-D arrays, never a data
+    variable, so it is safe to call driver-side on a multi-TB store."""
     from .netcdf import detect_dims
-
-    coords = {}
-    for i, d in enumerate(dim_order):
-        if d in meta:
-            vals = read_zarr_array(path, d, meta[d])
-            units = meta[d].get("attrs", {}).get("units", "")
-            if isinstance(units, str) and " since " in units:
-                from .netcdf3 import decode_cf_time
-                vals = decode_cf_time(vals, units)
-            coords[d] = vals
-        else:
-            coords[d] = np.arange(ref_shape[i])
-    dims = detect_dims(dim_order, {d: str(coords[d].dtype)
-                                   for d in dim_order})
-    return coords, dims
-
-
-def _grid_from_store(path: str, variables=None, time_range=None):
-    """Store → (coords, arrays, dim_order, detected dims) with CF time
-    decode and read-time slicing — mirrors `netcdf._grid_from_nc3`."""
+    from .netcdf3 import decode_cf_time
 
     meta = open_zarr_store(path)
     dim_like = {n for n, m in meta.items()
@@ -742,12 +735,29 @@ def _grid_from_store(path: str, variables=None, time_range=None):
         data_names = list(variables)
     if not data_names:
         raise ValueError("no data variables in store")
-    dim_order = meta[data_names[0]]["attrs"]["_ARRAY_DIMENSIONS"]
+    ref = meta[data_names[0]]
+    dim_order = ref["attrs"]["_ARRAY_DIMENSIONS"]
+    coords = {}
+    for d, size in zip(dim_order, ref["zarray"]["shape"]):
+        if d in meta:
+            vals = read_zarr_array(path, d, meta[d])
+            units = meta[d].get("attrs", {}).get("units", "")
+            if isinstance(units, str) and " since " in units:
+                vals = decode_cf_time(vals, units)
+            coords[d] = vals
+        else:
+            coords[d] = np.arange(size)
+    dims = detect_dims(dim_order, {d: str(coords[d].dtype)
+                                   for d in dim_order})
+    return meta, data_names, dim_order, coords, dims
 
-    coords, dims = _store_coords(path, meta, dim_order,
-                                 meta[data_names[0]]["zarray"]["shape"])
+
+def _grid_from_store(path: str, variables=None, time_range=None):
+    """Store → (coords, arrays, dim_order, detected dims) with CF time
+    decode and read-time slicing — mirrors `netcdf._grid_from_nc3`."""
     from .netcdf import slice_time
 
+    meta, data_names, dim_order, coords, dims = _store_model(path, variables)
     arrays = {n: read_zarr_array(path, n, meta[n]) for n in data_names}
     coords, arrays = slice_time(coords, arrays, dim_order, dims, time_range)
     return coords, arrays, dim_order, dims
@@ -772,130 +782,39 @@ def read_zarr_long(spark, path: str, variables=None, time_range=None,
 def read_zarr_long_distributed(spark, path: str, variables=None,
                                time_range=None, bbox=None):
     """Chunk ↔ task: every store chunk becomes one Spark task that
-    decodes its own compressed bytes executor-side (`mapInPandas` over
-    the chunk-key list; the small coordinate vectors ride along in the
-    task closure). This is the Spark shape of the reference's Dask
-    chunk graph — horizontal scale without a central decode step.
-    Requires all data variables to share one chunk grid (the layout the
-    reference's converter produces).
+    decodes its own compressed bytes executor-side — the Spark shape of
+    the reference's Dask chunk graph, horizontal scale without a
+    central decode step. Requires all data variables to share one chunk
+    grid (the layout the reference's converter produces).
 
-    ``time_range``/``bbox`` prune at the CHUNK INDEX: only chunks whose
-    coordinate spans intersect the predicate are ever read or decoded —
-    the engine-side equivalent of xarray's lazy chunk selection
-    (`ingest/netcdf_reader.py:67-75` narrowing the Dask graph), and the
-    property that makes point/slice queries on a huge store cheap. The
-    exact row-level predicate is applied after decode."""
-    import pandas as pd
+    The tasks, the chunk-index pruning by ``time_range``/``bbox`` (the
+    engine-side equivalent of xarray's lazy chunk selection,
+    `ingest/netcdf_reader.py:67-75` narrowing the Dask graph) and the
+    row filters are `netcdf.chunk_tasks_long`'s, so the rows equal
+    `read_zarr_long`'s by construction."""
+    from .netcdf import chunk_tasks_long
 
-    meta = open_zarr_store(path)
-    dim_like = {n for n, m in meta.items()
-                if m.get("attrs", {}).get("_ARRAY_DIMENSIONS") == [n]}
-    data_names = [n for n in meta if n not in dim_like]
-    if variables:
-        missing = [v for v in variables if v not in data_names]
-        if missing:                    # loud, like every other read path
-            raise ValueError(f"variables not found: {missing}")
-        data_names = list(variables)
-    if not data_names:
-        raise ValueError("no data variables in store")
-    dim_order = meta[data_names[0]]["attrs"]["_ARRAY_DIMENSIONS"]
+    # coords only — decoding a full data variable driver-side would
+    # defeat this function's no-central-decode contract
+    meta, data_names, dim_order, coords, dims = _store_model(path, variables)
     za0 = meta[data_names[0]]["zarray"]
     for n in data_names[1:]:
         if meta[n]["zarray"]["chunks"] != za0["chunks"] \
                 or meta[n]["zarray"]["shape"] != za0["shape"]:
             raise ValueError("data variables must share one chunk grid")
+    chunks = tuple(za0["chunks"])
+    zarrays = {n: meta[n]["zarray"] for n in data_names}
 
-    # coords only — decoding a full data variable driver-side would
-    # defeat this function's no-central-decode contract
-    coords, dims = _store_coords(path, meta, dim_order, za0["shape"])
-    shape, chunks = za0["shape"], za0["chunks"]
-    grid = _chunk_grid(shape, chunks)
+    def decode(offsets):
+        for offs in offsets:
+            idx = tuple(o // c for o, c in zip(offs, chunks))
+            yield {n: _read_chunk(path, n, za, idx)
+                   for n, za in zarrays.items()}
 
-    # chunk-index pruning: per-dimension coordinate interval constraints
-    intervals: dict[str, tuple] = {}
-    if time_range and dims["time"]:
-        t = coords[dims["time"]]
-        conv = (np.datetime64 if np.issubdtype(t.dtype, np.datetime64)
-                else float)
-        intervals[dims["time"]] = (conv(time_range[0]), conv(time_range[1]))
-    if bbox and dims["lat"] and dims["lon"]:
-        w, s, e, n = bbox
-        intervals[dims["lat"]] = (s, n)
-        if w <= e:               # antimeridian crossings skip lon pruning
-            intervals[dims["lon"]] = (w, e)
-
-    def chunk_ok(idx) -> bool:
-        for axis, (d, i) in enumerate(zip(dim_order, idx)):
-            if d not in intervals:
-                continue
-            lo, hi = intervals[d]
-            span = coords[d][i * chunks[axis]:(i + 1) * chunks[axis]]
-            if len(span) == 0 or span.max() < lo or span.min() > hi:
-                return False
-        return True
-
-    keys = [list(idx) for idx in iproduct(*[range(n) for n in grid])
-            if chunk_ok(idx)]
-    if not keys:
-        keys = []            # empty selection still yields an empty frame
-    keys_df = spark.createDataFrame(
-        pd.DataFrame({"cid": [".".join(map(str, k)) for k in keys]}),
-        schema="cid string")
-
-    metas = {n: meta[n] for n in data_names}
-
-    def gen(batches):
-        from .netcdf import _chunk_frames
-        for pdf in batches:
-            for cid in pdf["cid"]:
-                idx = tuple(int(x) for x in cid.split("."))
-                sel = tuple(slice(i * c, min((i + 1) * c, s))
-                            for i, c, s in zip(idx, chunks, shape))
-                local_coords = {d: coords[d][sl]
-                                for d, sl in zip(dim_order, sel)}
-                arrays = {}
-                for n in data_names:
-                    za = metas[n]["zarray"]
-                    fname = _chunk_path(path, n, za, idx)
-                    if os.path.exists(fname):
-                        with open(fname, "rb") as fh:
-                            arr = _decode_chunk_file(
-                                fh.read(), za, np.dtype(za["dtype"]),
-                                tuple(chunks), za.get("order", "C"))
-                        crop = tuple(slice(0, sl.stop - sl.start)
-                                     for sl in sel)
-                        arrays[n] = arr[crop]
-                    else:
-                        dt = np.dtype(za["dtype"])
-                        arrays[n] = np.full(
-                            [sl.stop - sl.start for sl in sel],
-                            _fill_for(za.get("fill_value"), dt), dtype=dt)
-                yield from _chunk_frames(local_coords, arrays, dim_order,
-                                         time_chunk=len(
-                                             local_coords[dim_order[0]]))
-
-    sample_coords = {d: coords[d][:1] for d in dim_order}
-    sample_arrays = {n: np.zeros([1] * len(dim_order),
-                                 dtype=np.dtype(metas[n]["zarray"]["dtype"]))
-                     for n in data_names}
-    from .netcdf import _chunk_frames as _cf
-    schema = spark.createDataFrame(
-        next(_cf(sample_coords, sample_arrays, dim_order))).schema
-    out = keys_df.mapInPandas(gen, schema=schema)
-    # exact row-level predicates on top of the chunk-level pruning
-    from pyspark.sql import functions as F
-    if time_range and dims["time"]:
-        out = out.where(F.col(dims["time"]).between(
-            F.lit(time_range[0]).cast("timestamp")
-            if np.issubdtype(coords[dims["time"]].dtype, np.datetime64)
-            else F.lit(float(time_range[0])),
-            F.lit(time_range[1]).cast("timestamp")
-            if np.issubdtype(coords[dims["time"]].dtype, np.datetime64)
-            else F.lit(float(time_range[1]))))
-    if bbox and dims["lat"] and dims["lon"]:
-        from .io import bbox_filter
-        out = bbox_filter(out, dims["lat"], dims["lon"], bbox)
-    return out
+    return chunk_tasks_long(
+        spark, coords, dim_order, dims, za0["shape"], chunks,
+        {n: np.dtype(za["dtype"]) for n, za in zarrays.items()}, decode,
+        time_range, bbox)[0]
 
 
 _V3_DTYPE_NAMES = {v: k for k, v in _V3_DTYPES.items()}

@@ -273,3 +273,29 @@ def test_parquet_info_on_a_pyarrow_file(spark, tmp_path):
                               for f in back.schema.fields}
     assert info["num_rows"] == back.count() == 45
     assert info["num_files"] == 2
+
+
+def test_footer_helpers_skip_files_spark_ignores(spark, tmp_path):
+    """A leftover `_temporary/` file of a failed write (tz-naive ``ts``)
+    next to the live part file (UTC ``ts``): `ntz_timestamp_columns`
+    and `pruning_report` read only the file Spark reads."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from climate_data_pipeline_spark.sources.io import (
+        ntz_timestamp_columns,
+        pruning_report,
+    )
+
+    path = str(tmp_path / "store")
+    os.makedirs(f"{path}/_temporary/0")
+    for sub, tz in (("", "UTC"), ("_temporary/0/", None)):
+        pq.write_table(
+            pa.table({"ts": pa.array(range(4), pa.timestamp("us", tz)),
+                      "v": pa.array(range(4), pa.int32())}),
+            f"{path}/{sub}part-00000.parquet")
+    assert dict(spark.read.parquet(path).dtypes)["ts"] == "timestamp"
+    assert ntz_timestamp_columns(path) == ()
+    assert pruning_report(path, "v", 0, 10)["row_groups"] == 1
