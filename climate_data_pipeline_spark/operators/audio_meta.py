@@ -332,34 +332,22 @@ def audio_container_meta(media_df, id_col: str = "media_id",
                          payload_col: str = "payload"):
     """MP3/Ogg screening projection: container, unit count, rate,
     channels, duration — zero decode, dispatched on magic bytes."""
-    import pandas as pd
+    from ._kernel import row_stage
 
-    out_schema = ("media_id long, container string, n_units long, "
-                  "sample_rate int, channels int, duration_s double")
+    def extract(p, _id) -> list[tuple]:
+        b = bytes(p)
+        if b[:4] == b"OggS":
+            m = parse_ogg_meta(b)
+            return [("ogg", m["n_pages"], m["sample_rate"],
+                     m["channels"], m["duration_s"])]
+        if b[:3] == b"ID3" or (len(b) >= 2 and b[0] == 0xFF
+                               and b[1] & 0xE0 == 0xE0):
+            m = parse_mp3_meta(b)
+            return [("mp3", m["n_frames"], m["sample_rate"],
+                     m["channels"], m["duration_s"])]
+        raise NotImplementedError(
+            f"no container walker for magic {b[:4]!r}")
 
-    def _extract(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf[id_col].astype("int64"),
-                            pdf[payload_col]):
-                b = bytes(p)
-                if b[:4] == b"OggS":
-                    m = parse_ogg_meta(b)
-                    rows.append((int(i), "ogg", m["n_pages"],
-                                 m["sample_rate"], m["channels"],
-                                 m["duration_s"]))
-                elif b[:3] == b"ID3" or (len(b) >= 2
-                                         and b[0] == 0xFF
-                                         and b[1] & 0xE0 == 0xE0):
-                    m = parse_mp3_meta(b)
-                    rows.append((int(i), "mp3", m["n_frames"],
-                                 m["sample_rate"], m["channels"],
-                                 m["duration_s"]))
-                else:
-                    raise NotImplementedError(
-                        f"no container walker for magic {b[:4]!r}")
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "container", "n_units", "sample_rate",
-                "channels", "duration_s"])
-
-    return media_df.mapInPandas(_extract, schema=out_schema)
+    return row_stage(media_df, id_col, payload_col, extract,
+                     "container string, n_units long, sample_rate int, "
+                     "channels int, duration_s double")

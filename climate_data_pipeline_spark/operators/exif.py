@@ -19,11 +19,11 @@ re-derive every field from the row id.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
+from ._kernel import row_stage
 from .tiff import read_ifd_at
 
 TAG_ORIENTATION = 0x0112
@@ -268,7 +268,7 @@ def exif_jpeg_post(payload: bytes, i: int) -> bytes:
     """Per-payload EXIF insertion (every odd id BIG-endian "MM" — both
     wild byte orders in one corpus), shaped as a ``post=`` hook for
     ``multimodal.synthesize_jpeg`` so render + attach run in ONE
-    mapInPandas kernel: payload bytes cross the JVM↔Python boundary
+    Arrow stage: payload bytes cross the JVM↔Python boundary
     once instead of three times (guide §4 — at sf0.1 the EXIF query's
     cost is the per-Python-stage framework floor, not kernel CPU)."""
     return build_exif_jpeg(payload, exif_fields_for_id(i),
@@ -280,78 +280,38 @@ def attach_exif(media_df: DataFrame, id_col: str = "media_id",
     """Insert deterministic EXIF metadata into JPEG payloads (the
     standalone two-stage composition; `exif_jpeg_post` is the fused
     one-kernel equivalent — byte-identical output, pinned by
-    test_exif_fused_synthesis_matches_two_stage)."""
-    out_schema = media_df.schema
-
-    def _attach(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            pdf = pdf.copy()
-            pdf[payload_col] = [
-                exif_jpeg_post(bytes(p), int(i))
-                for p, i in zip(pdf[payload_col], ids)]
-            pdf["n_bytes"] = pdf[payload_col].map(len).astype("int64")
-            yield pdf
-
-    return media_df.mapInPandas(_attach, schema=out_schema)
+    test_exif_fused_synthesis_matches_two_stage). Every other column
+    passes through; ``n_bytes`` is recomputed from the new payload."""
+    cols = media_df.columns
+    keep = [c for c in cols if c not in (id_col, payload_col, "n_bytes")]
+    out = row_stage(media_df, id_col, payload_col,
+                    lambda p, i: [(exif_jpeg_post(bytes(p), i),)],
+                    f"{payload_col} binary", id_name=id_col, keep=keep)
+    return out.select(*(F.length(payload_col).cast("long").alias(c)
+                        if c == "n_bytes" else c for c in cols))
 
 
 def exif_metadata(media_df: DataFrame, id_col: str = "media_id",
                   payload_col: str = "payload") -> DataFrame:
     """Extract EXIF without decoding pixels — the curation screening
     projection. Payloads without EXIF yield nulls."""
-    out_schema = ("media_id long, byte_order string, orientation int, "
-                  "make string, model string, datetime string, "
-                  "iso int, exposure_s double, pixel_x int, "
-                  "pixel_y int, lat double, lon double")
+    def extract(p, _id) -> list[tuple]:
+        meta = parse_jpeg_exif(bytes(p))
+        if meta is None:
+            return [(None,) * 11]
+        exp = None
+        if meta["exposure_num"] is not None:
+            exp = meta["exposure_num"] / meta["exposure_den"]
+        return [(meta["byte_order"], meta["orientation"], meta["make"],
+                 meta["model"], meta["datetime"], meta["iso"], exp,
+                 meta["pixel_x"], meta["pixel_y"], meta["lat"],
+                 meta["lon"])]
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf[id_col].astype("int64"),
-                            pdf[payload_col]):
-                meta = parse_jpeg_exif(bytes(p))
-                if meta is None:
-                    # FULL null row: a batch of all-EXIF-less payloads
-                    # must still produce every schema column, or the
-                    # Arrow conversion dies on the missing names
-                    rows.append({
-                        "media_id": int(i), "byte_order": None,
-                        "orientation": None, "make": None,
-                        "model": None, "datetime": None, "iso": None,
-                        "exposure_s": None, "pixel_x": None,
-                        "pixel_y": None, "lat": None, "lon": None})
-                    continue
-                exp = None
-                if meta["exposure_num"] is not None:
-                    exp = meta["exposure_num"] / meta["exposure_den"]
-                rows.append({
-                    "media_id": int(i),
-                    "byte_order": meta["byte_order"],
-                    "orientation": meta["orientation"],
-                    "make": meta["make"], "model": meta["model"],
-                    "datetime": meta["datetime"], "iso": meta["iso"],
-                    "exposure_s": exp,
-                    "pixel_x": meta["pixel_x"],
-                    "pixel_y": meta["pixel_y"],
-                    "lat": meta["lat"], "lon": meta["lon"],
-                })
-            out = pd.DataFrame(rows)
-            for col, dt in (("byte_order", "object"),
-                            ("orientation", "Int32"), ("iso", "Int32"),
-                            ("pixel_x", "Int32"), ("pixel_y", "Int32")):
-                if col not in out:
-                    out[col] = pd.Series([None] * len(out), dtype=dt)
-                elif dt != "object":
-                    out[col] = out[col].astype(dt)
-            yield out
-
-    # project to just (id, payload): mapInPandas is opaque to Spark's
-    # column pruning, so without the select every other media column
-    # (media_type, n_bytes) is serialized across the Python boundary
-    # for nothing (guide §4.1)
-    return (media_df.select(id_col, payload_col)
-                    .mapInPandas(_extract, schema=out_schema))
+    return row_stage(media_df, id_col, payload_col, extract,
+                     "byte_order string, orientation int, make string, "
+                     "model string, datetime string, iso int, "
+                     "exposure_s double, pixel_x int, pixel_y int, "
+                     "lat double, lon double")
 
 
 __all__ = ["parse_exif_tiff", "parse_jpeg_exif", "build_exif_blob",

@@ -859,61 +859,31 @@ def synthesize_mp3(df, id_col: str, text_col: str):
 def mp3_mdct_features(media_df, id_col: str = "media_id",
                       payload_col: str = "payload"):
     """Decode MP3 payloads executor-side through the full MDCT chain
-    (one Arrow ``mapInPandas``, zero payload shuffles) → per-stream
+    (one Arrow row stage, zero payload shuffles) → per-stream
     (sample_rate, channels, n_frames, n_sub_samples, rms, peak) over
     the time-domain subband samples."""
-    import pandas as pd
+    from ._kernel import byte_memo, row_stage
 
-    def _decode(batches):
-        # content-addressed decode dedup: features are a pure function
-        # of the payload bytes, and real corpora (and the fixtures)
-        # carry byte-identical streams many times over — decode each
-        # distinct payload once per task and reuse the feature tuple.
-        # Bounded by ACCUMULATED KEY BYTES (r12, per r11 ADVICE): the
-        # memo keys on the full payload, so an entry-count cap alone
-        # scales worst-case memory with payload size — real-world
-        # multi-MB streams would blow the old "50k entries ≈ 150 MB"
-        # estimate. 128 MB of keys ≈ the old budget at fixture sizes;
-        # oversized payloads just decode without memoizing. Within one
-        # task of one run, never across runs.
-        memo: dict[bytes, tuple] = {}
-        memo_bytes = 0
-        MEMO_BYTES_MAX = 128 * 1024 * 1024
+    def _feats(payload: bytes) -> tuple:
+        s, info = decode_mp3(payload)
+        return (int(info["sample_rate"]), int(info["channels"]),
+                int(info["n_frames"]), int(s.size),
+                # fsum: exactly rounded sum (order-independent),
+                # so the rms never depends on numpy reductions
+                math.sqrt(math.fsum((s * s).ravel()) / s.size)
+                if s.size else 0.0,
+                float(np.abs(s).max()) if s.size else 0.0)
 
-        def feats(payload: bytes) -> tuple:
-            nonlocal memo_bytes
-            got = memo.get(payload)
-            if got is None:
-                s, info = decode_mp3(payload)
-                got = (int(info["sample_rate"]), int(info["channels"]),
-                       int(info["n_frames"]), int(s.size),
-                       # fsum: exactly rounded sum (order-independent),
-                       # so the rms never depends on numpy reductions
-                       math.sqrt(math.fsum((s * s).ravel()) / s.size)
-                       if s.size else 0.0,
-                       float(np.abs(s).max()) if s.size else 0.0)
-                if memo_bytes + len(payload) <= MEMO_BYTES_MAX:
-                    memo[payload] = got
-                    memo_bytes += len(payload)
-            return got
-
-        for pdf in batches:
-            rows = {"media_id": [], "sample_rate": [], "channels": [],
-                    "n_frames": [], "n_sub_samples": [], "rms": [],
-                    "peak": []}
-            for mid, payload in zip(pdf[id_col].astype("int64"),
-                                    pdf[payload_col]):
-                sr, ch, nf, ns, rms, peak = feats(bytes(payload))
-                rows["media_id"].append(int(mid))
-                rows["sample_rate"].append(sr)
-                rows["channels"].append(ch)
-                rows["n_frames"].append(nf)
-                rows["n_sub_samples"].append(ns)
-                rows["rms"].append(rms)
-                rows["peak"].append(peak)
-            yield pd.DataFrame(rows)
-
-    return media_df.mapInPandas(
-        _decode, schema=("media_id long, sample_rate int, channels int, "
-                         "n_frames long, n_sub_samples long, "
-                         "rms double, peak double"))
+    # content-addressed decode dedup: features are a pure function
+    # of the payload bytes, and real corpora (and the fixtures)
+    # carry byte-identical streams many times over — decode each
+    # distinct payload once per task and reuse the feature tuple.
+    # Bounded by ACCUMULATED KEY BYTES: the memo keys on the full
+    # payload, so an entry-count cap alone would scale worst-case
+    # memory with payload size. Oversized payloads just decode
+    # without memoizing.
+    feats = byte_memo(_feats, 128 * 1024 * 1024)
+    return row_stage(media_df, id_col, payload_col,
+                     lambda p, _id: [feats(bytes(p))],
+                     "sample_rate int, channels int, n_frames long, "
+                     "n_sub_samples long, rms double, peak double")

@@ -1,7 +1,7 @@
 """Multimodal (image/audio/video) column plumbing (beyond-reference
 extension): opaque ``binary`` payloads + typed metadata, with
-decode / feature-extract / frame-sample operators over Arrow-batched
-``mapInPandas``.
+decode / feature-extract / frame-sample operators, each a per-row
+function run by the one Arrow row stage ``_kernel.row_stage``.
 
 The Spark-side plumbing — schemas, batch iteration, partition-parallel
 UDF shape, row-multiplying frame sampling — is real and tested, and so
@@ -21,13 +21,10 @@ cheap plumbing-demo twin.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._kernel import media_frame, media_payloads
+from ._kernel import media_frame, media_payloads, row_stage
 from .jpeg import (decode_jpeg, encode_jpeg_baseline,
                    encode_jpeg_progressive)
 from .png import png_pixels
@@ -560,254 +557,214 @@ def synthesize_ico(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return media_payloads(df, id_col, text_col, ico, "image/x-icon")
 
 
+def _netpbm_header(p: bytes) -> tuple[int, int, int]:
+    """Binary netpbm (P5 gray / P6 rgb) → (width, height, pixel offset):
+    whitespace-separated header tokens, optional comments, one
+    whitespace byte after maxval."""
+    toks, i = [], 2
+    while len(toks) < 3 and i < len(p):
+        while i < len(p) and p[i:i + 1].isspace():
+            i += 1
+        if p[i:i + 1] == b"#":
+            while i < len(p) and p[i:i + 1] != b"\n":
+                i += 1
+            continue
+        j = i
+        while j < len(p) and not p[j:j + 1].isspace():
+            j += 1
+        toks.append(int(p[i:j]))
+        i = j
+    return toks[0], toks[1], i + 1
+
+
 def decode_media_real(df: DataFrame) -> DataFrame:
     """REAL codec path — pure-python decoders for every container the
     suite synthesizes (binary netpbm P5/P6 images; PNG with full
     scanline unfiltering at every legal bit depth, zlib is stdlib;
     baseline AND progressive JPEG with the full Huffman/DCT path in
     ``operators/jpeg.py``; RIFF/WAVE PCM audio), dispatched on magic
-    bytes inside the same Arrow ``mapInPandas`` plan as the fake
+    bytes inside the same Arrow row stage as the fake
     decoder. Image rows fill (width, height, mean_value from actual
     pixels); audio rows fill (n_channels, sample_rate, n_samples,
     mean_value = RMS amplitude from actual samples). Anything else
     (arithmetic-coded JPEG, non-MJPEG video codecs, …) raises a clear
     per-payload error; swapping in PIL/ffmpeg extends the dispatch,
     not the plan."""
-    out_schema = ("media_id long, media_type string, n_bytes long, "
-                  "kind string, width int, height int, n_channels int, "
+    out_schema = ("kind string, width int, height int, n_channels int, "
                   "sample_rate int, n_samples long, mean_value double")
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    import numpy as np
 
-        import numpy as np
+    from .audio import parse_aiff, parse_wav
+    from .flac import decode_flac
 
-        def decode_pgm(p: bytes) -> dict:
-            # binary netpbm: P5 (gray) / P6 (rgb); whitespace-separated
-            # header tokens, optional comments
-            toks, i, ntok = [], 2, 0
-            while ntok < 3 and i < len(p):
-                while i < len(p) and p[i:i + 1].isspace():
-                    i += 1
-                if p[i:i + 1] == b"#":
-                    while i < len(p) and p[i:i + 1] != b"\n":
-                        i += 1
-                    continue
-                j = i
-                while j < len(p) and not p[j:j + 1].isspace():
-                    j += 1
-                toks.append(int(p[i:j]))
-                ntok += 1
-                i = j
-            i += 1  # single whitespace after maxval
-            w, h, _maxval = toks
-            ch = 3 if p[:2] == b"P6" else 1
-            px = np.frombuffer(p, dtype=np.uint8,
-                               count=w * h * ch, offset=i)
-            return {"kind": "image", "width": w, "height": h,
-                    "n_channels": ch, "sample_rate": None,
-                    "n_samples": None,
-                    "mean_value": float(px.mean())}
+    def decode_pgm(p: bytes) -> dict:
+        w, h, i = _netpbm_header(p)
+        ch = 3 if p[:2] == b"P6" else 1
+        px = np.frombuffer(p, dtype=np.uint8,
+                           count=w * h * ch, offset=i)
+        return {"kind": "image", "width": w, "height": h,
+                "n_channels": ch, "sample_rate": None,
+                "n_samples": None,
+                "mean_value": float(px.mean())}
 
-        def decode_png(p: bytes) -> dict:
-            # shared spec decoder (operators/png.py): depths 8/16,
-            # color types 0/2/3/4/6, non-interlaced + Adam7. Palette
-            # arrives already expanded to RGB.
-            px, ctype = png_pixels(p)
-            h, w, ch = px.shape
-            # mean_value is the mean over COLOR samples only: for
-            # gray+alpha (type 4) and RGBA (6) the alpha plane is
-            # coverage, not intensity — folding it in would shift the
-            # mean of any real-world transparent PNG
-            color = px[:, :, :ch - 1] if ctype in (4, 6) else px
-            return {"kind": "image", "width": int(w), "height": int(h),
-                    "n_channels": ch, "sample_rate": None,
-                    "n_samples": None,
-                    "mean_value": float(color.mean())}
+    def decode_png(p: bytes) -> dict:
+        # shared spec decoder (operators/png.py): depths 8/16,
+        # color types 0/2/3/4/6, non-interlaced + Adam7. Palette
+        # arrives already expanded to RGB.
+        px, ctype = png_pixels(p)
+        h, w, ch = px.shape
+        # mean_value is the mean over COLOR samples only: for
+        # gray+alpha (type 4) and RGBA (6) the alpha plane is
+        # coverage, not intensity — folding it in would shift the
+        # mean of any real-world transparent PNG
+        color = px[:, :, :ch - 1] if ctype in (4, 6) else px
+        return {"kind": "image", "width": int(w), "height": int(h),
+                "n_channels": ch, "sample_rate": None,
+                "n_samples": None,
+                "mean_value": float(color.mean())}
 
-        def decode_jpg(p: bytes) -> dict:
-            # general entry: baseline AND progressive (SOF2) — web
-            # corpora are majority-progressive
-            px = decode_jpeg(p)
-            h, w = px.shape[:2]
-            ch = 1 if px.ndim == 2 else px.shape[2]
-            return {"kind": "image", "width": int(w), "height": int(h),
-                    "n_channels": ch, "sample_rate": None,
-                    "n_samples": None,
-                    "mean_value": float(px.astype(np.float64).mean())}
+    def decode_jpg(p: bytes) -> dict:
+        # general entry: baseline AND progressive (SOF2) — web
+        # corpora are majority-progressive
+        px = decode_jpeg(p)
+        h, w = px.shape[:2]
+        ch = 1 if px.ndim == 2 else px.shape[2]
+        return {"kind": "image", "width": int(w), "height": int(h),
+                "n_channels": ch, "sample_rate": None,
+                "n_samples": None,
+                "mean_value": float(px.astype(np.float64).mean())}
 
-        def decode_video(p: bytes) -> dict:
-            # AVI/RIFF or MP4/ISO-BMFF, dispatched inside parse_video
-            from .video import parse_video
-            meta = parse_video(p)
-            means = [decode_jpeg(f).astype(np.float64).mean()
-                     for f in meta["frames"]]
-            return {"kind": "video", "width": meta["width"],
-                    "height": meta["height"], "n_channels": None,
-                    "sample_rate": meta["fps"],
-                    "n_samples": len(meta["frames"]),
-                    "mean_value": float(np.mean(means)) if means else 0.0}
+    def decode_video(p: bytes) -> dict:
+        # AVI/RIFF or MP4/ISO-BMFF, dispatched inside parse_video
+        from .video import parse_video
+        meta = parse_video(p)
+        means = [decode_jpeg(f).astype(np.float64).mean()
+                 for f in meta["frames"]]
+        return {"kind": "video", "width": meta["width"],
+                "height": meta["height"], "n_channels": None,
+                "sample_rate": meta["fps"],
+                "n_samples": len(meta["frames"]),
+                "mean_value": float(np.mean(means)) if means else 0.0}
 
-        def decode_gif(p: bytes) -> dict:
-            from .gif import parse_gif
-            meta = parse_gif(p)
-            frames = meta["frames"]
-            if len(frames) == 1:
-                px = frames[0]["px"]
-                return {"kind": "image", "width": meta["width"],
-                        "height": meta["height"], "n_channels": 3,
-                        "sample_rate": None, "n_samples": None,
-                        "mean_value": float(px.astype(np.float64)
-                                            .mean())}
-            # animated GIF: the video contract — per-frame means
-            # averaged, frame count + rate exposed
-            means = [f["px"].astype(np.float64).mean() for f in frames]
-            delay = frames[0]["delay_cs"]
-            return {"kind": "video", "width": meta["width"],
-                    "height": meta["height"], "n_channels": None,
-                    "sample_rate": round(100 / delay) if delay else 0,
-                    "n_samples": len(frames),
-                    "mean_value": float(np.mean(means))}
-
-        def decode_bmp(p: bytes) -> dict:
-            from .bmp import parse_bmp
-            px = parse_bmp(p)
-            return {"kind": "image", "width": int(px.shape[1]),
-                    "height": int(px.shape[0]), "n_channels": 3,
-                    "sample_rate": None, "n_samples": None,
-                    "mean_value": float(px.astype(np.float64).mean())}
-
-        def decode_tiff(p: bytes) -> dict:
-            from .tiff import parse_tiff
-            meta = parse_tiff(p)
-            px = meta["px"]
-            ch = 1 if px.ndim == 2 else px.shape[2]
-            # n_samples carries the PAGE count (multi-page scans):
-            # page one's stats, the chain length reported — the same
-            # contract decode_ico uses for its entry count
+    def decode_gif(p: bytes) -> dict:
+        from .gif import parse_gif
+        meta = parse_gif(p)
+        frames = meta["frames"]
+        if len(frames) == 1:
+            px = frames[0]["px"]
             return {"kind": "image", "width": meta["width"],
-                    "height": meta["height"], "n_channels": ch,
-                    "sample_rate": None,
-                    "n_samples": int(meta["n_pages"]),
-                    "mean_value": float(px.astype(np.float64).mean())}
-
-        def decode_ico(p: bytes) -> dict:
-            from .ico import parse_ico
-            imgs = parse_ico(p)
-            big = max(imgs, key=lambda m: m["width"] * m["height"])
-            return {"kind": "image", "width": big["width"],
-                    "height": big["height"], "n_channels": 4,
-                    "sample_rate": None, "n_samples": len(imgs),
-                    "mean_value": float(big["px"][:, :, :3]
-                                        .astype(np.float64).mean())}
-
-        def decode_webp(p: bytes) -> dict:
-            from .webp import parse_webp
-            meta = parse_webp(p)
-            px = meta["px"]
-            # VP8L is inherently ARGB; alpha is coverage, not
-            # intensity — the mean is over RGB only (PNG convention)
-            return {"kind": "image", "width": meta["width"],
-                    "height": meta["height"], "n_channels": 4,
+                    "height": meta["height"], "n_channels": 3,
                     "sample_rate": None, "n_samples": None,
-                    "mean_value": float(px[:, :, :3]
-                                        .astype(np.float64).mean())}
+                    "mean_value": float(px.astype(np.float64)
+                                        .mean())}
+        # animated GIF: the video contract — per-frame means
+        # averaged, frame count + rate exposed
+        means = [f["px"].astype(np.float64).mean() for f in frames]
+        delay = frames[0]["delay_cs"]
+        return {"kind": "video", "width": meta["width"],
+                "height": meta["height"], "n_channels": None,
+                "sample_rate": round(100 / delay) if delay else 0,
+                "n_samples": len(frames),
+                "mean_value": float(np.mean(means))}
 
-        def decode_aiff(p: bytes) -> dict:
-            from .audio import parse_aiff
-            meta = parse_aiff(p)
-            s = meta["samples"].astype(np.float64)
-            rms = float(np.sqrt((s * s).mean())) if s.size else 0.0
-            return {"kind": "audio", "width": None, "height": None,
-                    "n_channels": meta["n_channels"],
-                    "sample_rate": meta["sample_rate"],
-                    "n_samples": int(meta["samples"].shape[0]),
-                    "mean_value": rms}
+    def decode_bmp(p: bytes) -> dict:
+        from .bmp import parse_bmp
+        px = parse_bmp(p)
+        return {"kind": "image", "width": int(px.shape[1]),
+                "height": int(px.shape[0]), "n_channels": 3,
+                "sample_rate": None, "n_samples": None,
+                "mean_value": float(px.astype(np.float64).mean())}
 
-        def decode_flac(p: bytes) -> dict:
-            from .flac import decode_flac as _flac
-            meta = _flac(p)
-            s = meta["samples"].astype(np.float64)
-            rms = float(np.sqrt((s * s).mean())) if s.size else 0.0
-            return {"kind": "audio", "width": None, "height": None,
-                    "n_channels": meta["n_channels"],
-                    "sample_rate": meta["sample_rate"],
-                    "n_samples": int(meta["samples"].shape[0]),
-                    "mean_value": rms}
+    def decode_tiff(p: bytes) -> dict:
+        from .tiff import parse_tiff
+        meta = parse_tiff(p)
+        px = meta["px"]
+        ch = 1 if px.ndim == 2 else px.shape[2]
+        # n_samples carries the PAGE count (multi-page scans):
+        # page one's stats, the chain length reported — the same
+        # contract decode_ico uses for its entry count
+        return {"kind": "image", "width": meta["width"],
+                "height": meta["height"], "n_channels": ch,
+                "sample_rate": None,
+                "n_samples": int(meta["n_pages"]),
+                "mean_value": float(px.astype(np.float64).mean())}
 
-        def decode_wav(p: bytes) -> dict:
-            # operators/audio.py: PCM 8/16/24/32 AND G.711 mu-law /
-            # A-law (stdlib wave refuses the companded tags). Decoded
-            # samples are ints for every format, so the RMS below is
-            # the same integer-exact quantity the PCM path always had
-            from .audio import parse_wav
-            meta = parse_wav(p)
-            nch, rate = meta["n_channels"], meta["sample_rate"]
-            nfr = int(meta["samples"].shape[0])
-            s = meta["samples"].astype(np.float64)
-            rms = float(np.sqrt((s * s).mean())) if s.size else 0.0
-            return {"kind": "audio", "width": None, "height": None,
-                    "n_channels": nch, "sample_rate": rate,
-                    "n_samples": nfr, "mean_value": rms}
+    def decode_ico(p: bytes) -> dict:
+        from .ico import parse_ico
+        imgs = parse_ico(p)
+        big = max(imgs, key=lambda m: m["width"] * m["height"])
+        return {"kind": "image", "width": big["width"],
+                "height": big["height"], "n_channels": 4,
+                "sample_rate": None, "n_samples": len(imgs),
+                "mean_value": float(big["px"][:, :, :3]
+                                    .astype(np.float64).mean())}
 
-        for pdf in batches:
-            metas = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if b[:2] in (b"P5", b"P6"):
-                    metas.append(decode_pgm(b))
-                elif b[:8] == b"\x89PNG\r\n\x1a\n":
-                    metas.append(decode_png(b))
-                elif b[:3] == b"\xFF\xD8\xFF":
-                    metas.append(decode_jpg(b))
-                elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
-                    metas.append(decode_wav(b))
-                elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
-                    metas.append(decode_video(b))
-                elif b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-                    metas.append(decode_webp(b))
-                elif b[:4] == b"fLaC":
-                    metas.append(decode_flac(b))
-                elif b[:4] == b"FORM" and b[8:12] == b"AIFF":
-                    metas.append(decode_aiff(b))
-                elif len(b) >= 12 and b[4:8] == b"ftyp":
-                    metas.append(decode_video(b))
-                elif b[:6] in (b"GIF87a", b"GIF89a"):
-                    metas.append(decode_gif(b))
-                elif b[:2] == b"BM":
-                    metas.append(decode_bmp(b))
-                elif b[:4] in (b"\x00\x00\x01\x00",
-                               b"\x00\x00\x02\x00"):
-                    metas.append(decode_ico(b))
-                elif b[:4] in (b"II\x2a\x00", b"MM\x00\x2a",
-                               b"II\x2b\x00", b"MM\x00\x2b"):
-                    # classic TIFF both byte orders (BigTIFF magics
-                    # dispatch too so their loud seam names the format)
-                    metas.append(decode_tiff(b))
-                else:
-                    raise NotImplementedError(
-                        f"no pure-python codec for payload magic "
-                        f"{b[:4]!r}; extend decode_media_real's dispatch")
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype("int64"),
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"].astype("int64"),
-                "kind": [m["kind"] for m in metas],
-                "width": pd.Series([m["width"] for m in metas],
-                                   dtype="Int32"),
-                "height": pd.Series([m["height"] for m in metas],
-                                    dtype="Int32"),
-                "n_channels": pd.Series([m["n_channels"] for m in metas],
-                                        dtype="Int32"),
-                "sample_rate": pd.Series([m["sample_rate"] for m in metas],
-                                         dtype="Int32"),
-                "n_samples": pd.Series([m["n_samples"] for m in metas],
-                                       dtype="Int64"),
-                "mean_value": [m["mean_value"] for m in metas],
-            })
+    def decode_webp(p: bytes) -> dict:
+        from .webp import parse_webp
+        meta = parse_webp(p)
+        px = meta["px"]
+        # VP8L is inherently ARGB; alpha is coverage, not
+        # intensity — the mean is over RGB only (PNG convention)
+        return {"kind": "image", "width": meta["width"],
+                "height": meta["height"], "n_channels": 4,
+                "sample_rate": None, "n_samples": None,
+                "mean_value": float(px[:, :, :3]
+                                    .astype(np.float64).mean())}
 
-    return df.mapInPandas(_decode, schema=out_schema)
+    def decode_audio(meta: dict) -> dict:
+        # AIFF, FLAC and WAV (operators/audio.py: PCM 8/16/24/32 AND
+        # G.711 mu-law / A-law, which stdlib wave refuses) all decode
+        # to int samples, so the RMS is the same integer-exact
+        # quantity for every format
+        s = meta["samples"].astype(np.float64)
+        rms = float(np.sqrt((s * s).mean())) if s.size else 0.0
+        return {"kind": "audio", "width": None, "height": None,
+                "n_channels": meta["n_channels"],
+                "sample_rate": meta["sample_rate"],
+                "n_samples": int(meta["samples"].shape[0]),
+                "mean_value": rms}
+
+    def decode(p, _id) -> list[tuple]:
+        b = bytes(p)
+        if b[:2] in (b"P5", b"P6"):
+            m = decode_pgm(b)
+        elif b[:8] == b"\x89PNG\r\n\x1a\n":
+            m = decode_png(b)
+        elif b[:3] == b"\xFF\xD8\xFF":
+            m = decode_jpg(b)
+        elif b[:4] == b"RIFF" and b[8:12] == b"WAVE":
+            m = decode_audio(parse_wav(b))
+        elif b[:4] == b"RIFF" and b[8:12] == b"AVI ":
+            m = decode_video(b)
+        elif b[:4] == b"RIFF" and b[8:12] == b"WEBP":
+            m = decode_webp(b)
+        elif b[:4] == b"fLaC":
+            m = decode_audio(decode_flac(b))
+        elif b[:4] == b"FORM" and b[8:12] == b"AIFF":
+            m = decode_audio(parse_aiff(b))
+        elif len(b) >= 12 and b[4:8] == b"ftyp":
+            m = decode_video(b)
+        elif b[:6] in (b"GIF87a", b"GIF89a"):
+            m = decode_gif(b)
+        elif b[:2] == b"BM":
+            m = decode_bmp(b)
+        elif b[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
+            m = decode_ico(b)
+        elif b[:4] in (b"II\x2a\x00", b"MM\x00\x2a",
+                       b"II\x2b\x00", b"MM\x00\x2b"):
+            # classic TIFF both byte orders (BigTIFF magics
+            # dispatch too so their loud seam names the format)
+            m = decode_tiff(b)
+        else:
+            raise NotImplementedError(
+                f"no pure-python codec for payload magic "
+                f"{b[:4]!r}; extend decode_media_real's dispatch")
+        return [(m["kind"], m["width"], m["height"], m["n_channels"],
+                 m["sample_rate"], m["n_samples"], m["mean_value"])]
+
+    return row_stage(df, "media_id", "payload", decode, out_schema,
+                     keep=("media_type", "n_bytes"))
 
 
 def audio_features(df: DataFrame) -> DataFrame:
@@ -825,68 +782,56 @@ def audio_features(df: DataFrame) -> DataFrame:
     compares L against R), 8-bit PCM is centered on its unsigned
     midpoint 128 before any stat (else silence reads as RMS 128 and
     ZCR is identically 0), and ``n_samples`` counts FRAMES, agreeing
-    with ``decode_media_real``'s count for the same payload. 32-bit
-    clips whose exact energy exceeds int64 raise loudly rather than
-    wrap. Non-WAV payloads raise — this is an audio op."""
-    out_schema = ("media_id long, n_samples long, zero_crossings long, "
-                  "peak long, energy long, rms double")
+    with ``decode_media_real``'s count for the same payload. Samples
+    come from ``operators/audio.parse_wav``, the WAV decoder
+    ``decode_media_real`` uses: PCM 8/16/24/32-bit, G.711 μ-law /
+    A-law and WAVE_FORMAT_EXTENSIBLE. 24- and 32-bit energies are
+    exact Python-int sums, and a clip whose energy exceeds int64
+    raises loudly rather than wrap. IEEE-float clips raise (their
+    stats are not integer-exact), and so do non-WAV payloads — this
+    is an audio op."""
+    import numpy as np
 
-    def _feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-        import wave
+    from .audio import parse_wav
 
-        import numpy as np
+    def feats(p, _id) -> list[tuple[int, int, int, int, float]]:
+        p = bytes(p)
+        if not (p[:4] == b"RIFF" and p[8:12] == b"WAVE"):
+            raise NotImplementedError(
+                "audio_features takes WAV payloads; magic "
+                f"{p[:4]!r} is not")
+        meta = parse_wav(p)
+        if meta["format"] == "float32":
+            raise NotImplementedError(
+                "audio_features takes integer WAV samples; an "
+                "IEEE-float clip has no integer-exact stats")
+        fr = meta["samples"].astype(np.int64)
+        nfr = int(fr.shape[0])
+        if fr.size == 0:
+            return [(0, 0, 0, 0, 0.0)]
+        # sign flips frame-to-frame WITHIN each channel (interleaved
+        # L,R,... — comparing adjacent flat samples would count the
+        # L/R jump of every stereo frame), summed across channels
+        nonneg = fr >= 0
+        zc = int((nonneg[1:] != nonneg[:-1]).sum())
+        if meta["bits"] > 16:
+            # 24/32-bit squares overflow int64 after 2^17 / 2
+            # full-scale samples — exact python-int sum, then a loud
+            # guard on the int64 output column
+            energy = int((fr.astype(object) ** 2).sum())
+            if energy > 2 ** 63 - 1:
+                raise ValueError(
+                    "exact integer energy exceeds int64 for this "
+                    f"{meta['bits']}-bit clip; widen the energy column "
+                    "before screening such material")
+        else:
+            energy = int((fr * fr).sum())
+        rms = float(np.sqrt(energy / fr.size))
+        return [(nfr, zc, int(np.abs(fr).max()), energy, rms)]
 
-        def feats(p: bytes) -> tuple[int, int, int, int, float]:
-            if not (p[:4] == b"RIFF" and p[8:12] == b"WAVE"):
-                raise NotImplementedError(
-                    "audio_features takes WAV payloads; magic "
-                    f"{p[:4]!r} is not")
-            with wave.open(io.BytesIO(p), "rb") as f:
-                nch, sw, nfr = (f.getnchannels(), f.getsampwidth(),
-                                f.getnframes())
-                raw = f.readframes(nfr)
-            dt = {1: np.uint8, 2: "<i2", 4: "<i4"}[sw]
-            s = np.frombuffer(raw, dtype=dt).astype(np.int64)
-            if sw == 1:
-                s = s - 128   # WAV stores 8-bit PCM unsigned, midpoint 128
-            if s.size == 0:
-                return 0, 0, 0, 0, 0.0
-            # sign flips frame-to-frame WITHIN each channel (interleaved
-            # L,R,... — comparing adjacent flat samples would count the
-            # L/R jump of every stereo frame), summed across channels
-            fr = s.reshape(-1, nch)
-            nonneg = fr >= 0
-            zc = int((nonneg[1:] != nonneg[:-1]).sum())
-            if sw == 4:
-                # 32-bit squares overflow int64 after ~2 full-scale
-                # samples — exact python-int sum, then a loud guard on
-                # the int64 output column
-                energy = int((s.astype(object) ** 2).sum())
-                if energy > 2 ** 63 - 1:
-                    raise ValueError(
-                        "exact integer energy exceeds int64 for this "
-                        "32-bit clip; widen the energy column before "
-                        "screening such material")
-            else:
-                energy = int((s * s).sum())
-            rms = float(np.sqrt(energy / s.size))
-            return nfr, zc, int(np.abs(s).max()), energy, rms
-
-        for pdf in batches:
-            rows = [feats(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype("int64"),
-                "n_samples": pd.Series([r[0] for r in rows],
-                                       dtype="int64"),
-                "zero_crossings": pd.Series([r[1] for r in rows],
-                                            dtype="int64"),
-                "peak": pd.Series([r[2] for r in rows], dtype="int64"),
-                "energy": pd.Series([r[3] for r in rows], dtype="int64"),
-                "rms": [r[4] for r in rows],
-            })
-
-    return df.mapInPandas(_feats, schema=out_schema)
+    return row_stage(df, "media_id", "payload", feats,
+                     "n_samples long, zero_crossings long, peak long, "
+                     "energy long, rms double")
 
 
 def resize_image_area(df: DataFrame, factor: int = 2) -> DataFrame:
@@ -897,115 +842,66 @@ def resize_image_area(df: DataFrame, factor: int = 2) -> DataFrame:
     ``(media_id, y, x, value)`` so a value-level oracle checks every
     output pixel, not a summary. The kernel is one vectorized
     ``reshape(h/f, f, w/f, f).mean((1, 3))`` per image inside the same
-    Arrow ``mapInPandas`` plan as the decoders; each mean of f²
+    Arrow row stage as the decoders; each mean of f²
     uint8s is an exact multiple of 1/f², so engines agree bit-for-bit.
     Color/audio payloads raise — resize is an image op."""
-    out_schema = "media_id long, y int, x int, value double"
+    import numpy as np
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def gray_pixels(p: bytes) -> np.ndarray:
+        if p[:2] == b"P5":
+            w, h, i = _netpbm_header(p)
+            return np.frombuffer(p, np.uint8, w * h, i).reshape(h, w)
+        if p[:8] == b"\x89PNG\r\n\x1a\n":
+            # shared spec decoder (operators/png.py) — the resize
+            # kernel is grayscale-only, but the container support
+            # (filters, 16-bit, Adam7, palette parse) rides along
+            px, ctype = png_pixels(p)
+            if ctype != 0:
+                raise NotImplementedError(
+                    "resize_image_area takes grayscale payloads; "
+                    f"PNG color type {ctype} is not")
+            return px[:, :, 0]
+        if p[:3] == b"\xFF\xD8\xFF":
+            px = decode_jpeg(p)
+            if px.ndim != 2:
+                raise NotImplementedError(
+                    "resize_image_area takes grayscale payloads; "
+                    f"{px.shape[2]}-channel JPEG is not")
+            return px.astype(np.int32)
+        raise NotImplementedError(
+            f"resize_image_area: no grayscale decoder for magic "
+            f"{p[:4]!r}")
 
-        def gray_pixels(p: bytes) -> np.ndarray:
-            if p[:2] == b"P5":
-                toks, i, ntok = [], 2, 0
-                while ntok < 3 and i < len(p):
-                    while i < len(p) and p[i:i + 1].isspace():
-                        i += 1
-                    if p[i:i + 1] == b"#":
-                        while i < len(p) and p[i:i + 1] != b"\n":
-                            i += 1
-                        continue
-                    j = i
-                    while j < len(p) and not p[j:j + 1].isspace():
-                        j += 1
-                    toks.append(int(p[i:j]))
-                    ntok += 1
-                    i = j
-                i += 1
-                w, h, _ = toks
-                return np.frombuffer(p, np.uint8, w * h, i).reshape(h, w)
-            if p[:8] == b"\x89PNG\r\n\x1a\n":
-                # shared spec decoder (operators/png.py) — the resize
-                # kernel is grayscale-only, but the container support
-                # (filters, 16-bit, Adam7, palette parse) rides along
-                px, ctype = png_pixels(p)
-                if ctype != 0:
-                    raise NotImplementedError(
-                        "resize_image_area takes grayscale payloads; "
-                        f"PNG color type {ctype} is not")
-                return px[:, :, 0]
-            if p[:3] == b"\xFF\xD8\xFF":
-                px = decode_jpeg(p)
-                if px.ndim != 2:
-                    raise NotImplementedError(
-                        "resize_image_area takes grayscale payloads; "
-                        f"{px.shape[2]}-channel JPEG is not")
-                return px.astype(np.int32)
-            raise NotImplementedError(
-                f"resize_image_area: no grayscale decoder for magic "
-                f"{p[:4]!r}")
+    def resize(p, _id):
+        px = gray_pixels(bytes(p)).astype(np.float64)
+        h, w = px.shape
+        if h % factor or w % factor:
+            raise ValueError(
+                f"image {h}x{w} not divisible by factor {factor}")
+        small = px.reshape(h // factor, factor,
+                           w // factor, factor).mean((1, 3))
+        oh, ow = small.shape
+        yy, xx = np.meshgrid(np.arange(oh), np.arange(ow), indexing="ij")
+        return zip(yy.ravel().tolist(), xx.ravel().tolist(),
+                   small.ravel().tolist())
 
-        for pdf in batches:
-            ids, ys, xs, vals = [], [], [], []
-            for mid, p in zip(pdf["media_id"].astype("int64"),
-                              pdf["payload"]):
-                px = gray_pixels(bytes(p)).astype(np.float64)
-                h, w = px.shape
-                if h % factor or w % factor:
-                    raise ValueError(
-                        f"image {h}x{w} not divisible by factor {factor}")
-                small = px.reshape(h // factor, factor,
-                                   w // factor, factor).mean((1, 3))
-                oh, ow = small.shape
-                ids.extend([int(mid)] * (oh * ow))
-                yy, xx = np.meshgrid(np.arange(oh), np.arange(ow),
-                                     indexing="ij")
-                ys.extend(yy.ravel())
-                xs.extend(xx.ravel())
-                vals.extend(small.ravel())
-            yield pd.DataFrame({
-                "media_id": pd.Series(ids, dtype="int64"),
-                "y": pd.Series(ys, dtype="int32"),
-                "x": pd.Series(xs, dtype="int32"),
-                "value": pd.Series(vals, dtype="float64"),
-            })
-
-    return df.mapInPandas(_resize, schema=out_schema)
+    return row_stage(df, "media_id", "payload", resize,
+                     "y int, x int, value double")
 
 
-def decode_media(df: DataFrame, real: bool = False) -> DataFrame:
-    """Decode payloads to typed metadata via ``mapInPandas`` (per-partition
-    Arrow batches — the multimodal hot path never serializes row-at-a-time).
-    ``real=True`` dispatches the pure-python codecs (netpbm/WAV —
-    `decode_media_real`); formats needing PIL/ffmpeg raise per payload."""
-    if real:
-        return decode_media_real(df)
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode payloads to typed metadata through one Arrow row stage
+    (per-partition batches — the multimodal hot path never serializes
+    row-at-a-time). This is the byte-statistics fake; the pure-python
+    codecs are `decode_media_real`."""
+    def fake_decode(payload, _id) -> list[tuple]:
+        n = len(payload)
+        mean = float(sum(payload)) / n if n else 0.0
+        return [(16 + n % 64, 16 + (n // 64) % 64, mean)]
 
-    out_schema = ("media_id long, media_type string, n_bytes long, "
-                  "width int, height int, mean_intensity double")
-
-    def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # NOTE: everything this closure touches must be defined inside it
-        # (or be an installed module) — cloudpickle ships it by value to
-        # Python workers that cannot import this package.
-        def fake_decode(payload: bytes) -> dict:
-            n = len(payload)
-            mean = float(sum(payload)) / n if n else 0.0
-            return {"width": 16 + n % 64, "height": 16 + (n // 64) % 64,
-                    "mean_intensity": mean}
-
-        for pdf in batches:
-            meta = [fake_decode(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"].astype("int64"),
-                "media_type": pdf["media_type"],
-                "n_bytes": pdf["n_bytes"].astype("int64"),
-                "width": pd.Series([m["width"] for m in meta], dtype="int32"),
-                "height": pd.Series([m["height"] for m in meta], dtype="int32"),
-                "mean_intensity": [m["mean_intensity"] for m in meta],
-            })
-
-    return df.mapInPandas(_decode_batch, schema=out_schema)
+    return row_stage(df, "media_id", "payload", fake_decode,
+                     "width int, height int, mean_intensity double",
+                     keep=("media_type", "n_bytes"))
 
 
 def byte_histogram_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
@@ -1017,45 +913,26 @@ def byte_histogram_features(df: DataFrame, n_bins: int = 16) -> DataFrame:
     downstream cosine/kNN consumer), so it is rejected loudly."""
     if not 1 <= n_bins <= 256 or 256 % n_bins:
         raise ValueError(f"n_bins must be a divisor of 256, got {n_bins}")
-    out_schema = "media_id long, features array<double>"
+    import numpy as np
 
-    def _featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                arr = np.frombuffer(p, dtype=np.uint8)
-                hist = np.bincount(arr // (256 // n_bins), minlength=n_bins)
-                total = hist.sum() or 1
-                feats.append((hist / total).tolist())
-            yield pd.DataFrame({"media_id": pdf["media_id"].astype("int64"),
-                                "features": feats})
+    def featurize(p, _id) -> list[tuple]:
+        arr = np.frombuffer(p, dtype=np.uint8)
+        hist = np.bincount(arr // (256 // n_bins), minlength=n_bins)
+        total = hist.sum() or 1
+        return [((hist / total).tolist(),)]
 
-    return df.mapInPandas(_featurize, schema=out_schema)
+    return row_stage(df, "media_id", "payload", featurize,
+                     "features array<double>")
 
 
 def frame_sample(df: DataFrame, every_n: int = 64) -> DataFrame:
     """Frame sampling for 'video' payloads: emit one row per sampled frame
     (row-multiplying map — the UDTF shape). Fake frames are byte windows;
     a real implementation would emit decoded keyframes."""
-    out_schema = "media_id long, frame_idx int, frame_offset long, frame_checksum long"
+    def sample(p, _id):
+        return [(idx, off, int(sum(p[off:off + every_n])))
+                for idx, off in enumerate(range(0, len(p), every_n))]
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_offset": [],
-                    "frame_checksum": []}
-            for mid, p in zip(pdf["media_id"], pdf["payload"]):
-                for idx, off in enumerate(range(0, len(p), every_n)):
-                    window = p[off:off + every_n]
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(idx)
-                    rows["frame_offset"].append(off)
-                    rows["frame_checksum"].append(int(sum(window)))
-            yield pd.DataFrame({
-                "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "frame_offset": pd.Series(rows["frame_offset"], dtype="int64"),
-                "frame_checksum": pd.Series(rows["frame_checksum"], dtype="int64"),
-            })
-
-    return df.mapInPandas(_sample, schema=out_schema)
+    return row_stage(df, "media_id", "payload", sample,
+                     "frame_idx int, frame_offset long, "
+                     "frame_checksum long")

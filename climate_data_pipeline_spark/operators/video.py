@@ -15,7 +15,7 @@ needing a real video decoder — H.264/H.265/VP9, interleaved audio,
 OpenDML extensions — raises loudly per payload, same contract as the
 image/audio decoders in ``multimodal.py``.
 
-Spark shape: frame decode is a row-MULTIPLYING ``mapInPandas`` (one
+Spark shape: frame decode is a row-MULTIPLYING Arrow row stage (one
 output row per sampled frame), the UDTF pattern — partition-parallel
 across payloads, Arrow-batched, no driver involvement. At 100 TB the
 payload column is the dominant I/O; frame sampling drops the decode
@@ -25,14 +25,12 @@ cost by the sampling factor before any pixel work happens.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._kernel import media_payloads
+from ._kernel import byte_memo, media_payloads, row_stage
 from .jpeg import decode_jpeg, encode_jpeg_baseline
 from .mp4 import build_mp4_mjpeg, parse_mp4_mjpeg
 from .text import _spread
@@ -233,62 +231,32 @@ def decode_video_frames(df: DataFrame, every_n: int = 2) -> DataFrame:
     """REAL frame sampling + decode: walk each AVI's movi list, keep
     every ``every_n``-th frame, decode it through the baseline-JPEG
     path, and emit one row per sampled frame (media_id, frame_idx,
-    width, height, frame_mean). Row-multiplying Arrow ``mapInPandas``;
+    width, height, frame_mean). Row-multiplying Arrow row stage;
     skipped frames are never entropy-decoded — at scale the sampling
     factor divides the decode cost, not just the output size."""
-    out_schema = ("media_id long, frame_idx int, width int, height int, "
-                  "frame_mean double")
+    def _frame_stats(fb: bytes) -> tuple:
+        px = decode_jpeg(fb)
+        return (int(px.shape[1]), int(px.shape[0]),
+                float(px.astype(np.float64).mean()))
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # content-addressed frame-decode dedup (the mp3_mdct_features
-        # pattern): (width, height, mean) is a pure function of the
-        # frame's JPEG bytes, and MJPEG corpora repeat frames heavily
-        # (shared intro/outro cards, block-constant synthetics — the
-        # sf0.1 fixture set has 911 distinct frames, 306,966 key bytes,
-        # across 15k sampled decodes). Bounded by accumulated key bytes
-        # like the mp3 memo; within one task of one run, never across
-        # runs. The cap is per task, so N concurrent tasks pin up to
-        # N × 32 MB: below the ~60 MB sibling memos, and still ~100×
-        # the sf0.1 key bytes.
-        memo: dict[bytes, tuple] = {}
-        memo_bytes = 0
-        MEMO_BYTES_MAX = 32 * 1024 * 1024
+    # content-addressed frame-decode dedup (the mp3_mdct_features
+    # pattern): (width, height, mean) is a pure function of the
+    # frame's JPEG bytes, and MJPEG corpora repeat frames heavily
+    # (shared intro/outro cards, block-constant synthetics — the
+    # sf0.1 fixture set has 911 distinct frames, 306,966 key bytes,
+    # across 15k sampled decodes). The cap is per task, so N
+    # concurrent tasks pin up to N × 32 MB: below the ~60 MB sibling
+    # memos, and still ~100× the sf0.1 key bytes.
+    frame_stats = byte_memo(_frame_stats, 32 * 1024 * 1024)
 
-        def frame_stats(fb: bytes) -> tuple:
-            nonlocal memo_bytes
-            got = memo.get(fb)
-            if got is None:
-                px = decode_jpeg(fb)
-                got = (int(px.shape[1]), int(px.shape[0]),
-                       float(px.astype(np.float64).mean()))
-                if memo_bytes + len(fb) <= MEMO_BYTES_MAX:
-                    memo[fb] = got
-                    memo_bytes += len(fb)
-            return got
+    def decode(p, _id):
+        frames = parse_video(bytes(p))["frames"]
+        return [(idx, *frame_stats(bytes(frames[idx])))
+                for idx in range(0, len(frames), every_n)]
 
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "width": [],
-                    "height": [], "frame_mean": []}
-            for mid, p in zip(pdf["media_id"].astype("int64"),
-                              pdf["payload"]):
-                meta = parse_video(bytes(p))
-                for idx in range(0, len(meta["frames"]), every_n):
-                    w_, h_, mean_ = frame_stats(
-                        bytes(meta["frames"][idx]))
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(idx)
-                    rows["width"].append(w_)
-                    rows["height"].append(h_)
-                    rows["frame_mean"].append(mean_)
-            yield pd.DataFrame({
-                "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "width": pd.Series(rows["width"], dtype="int32"),
-                "height": pd.Series(rows["height"], dtype="int32"),
-                "frame_mean": rows["frame_mean"],
-            })
-
-    return df.mapInPandas(_decode, schema=out_schema)
+    return row_stage(df, "media_id", "payload", decode,
+                     "frame_idx int, width int, height int, "
+                     "frame_mean double")
 
 
 def video_frame_hashes(df: DataFrame) -> DataFrame:
@@ -303,39 +271,20 @@ def video_frame_hashes(df: DataFrame) -> DataFrame:
     encoder settings, same content) belongs to the decode path; this
     operator is the cheap first cut, exactly like byte-level payload
     dedup in `curate_media_corpus` runs before any codec work."""
-    out_schema = ("media_id long, frame_idx int, frame_md5 string, "
-                  "frame_bytes long")
+    import hashlib
 
-    def _hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def hashes(p, _id):
+        return [(idx, hashlib.md5(fr).hexdigest(), len(fr))
+                for idx, fr in enumerate(parse_video(bytes(p))["frames"])]
 
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_md5": [],
-                    "frame_bytes": []}
-            for mid, p in zip(pdf["media_id"].astype("int64"),
-                              pdf["payload"]):
-                meta = parse_video(bytes(p))
-                for idx, fr in enumerate(meta["frames"]):
-                    rows["media_id"].append(int(mid))
-                    rows["frame_idx"].append(idx)
-                    rows["frame_md5"].append(
-                        hashlib.md5(fr).hexdigest())
-                    rows["frame_bytes"].append(len(fr))
-            yield pd.DataFrame({
-                "media_id": pd.Series(rows["media_id"], dtype="int64"),
-                "frame_idx": pd.Series(rows["frame_idx"], dtype="int32"),
-                "frame_md5": rows["frame_md5"],
-                "frame_bytes": pd.Series(rows["frame_bytes"],
-                                         dtype="int64"),
-            })
-
-    return df.mapInPandas(_hashes, schema=out_schema)
+    return row_stage(df, "media_id", "payload", hashes,
+                     "frame_idx int, frame_md5 string, frame_bytes long")
 
 
 def synthesize_frame_hashes(df: DataFrame, id_col: str, text_col: str,
                             n_frames: int = 6) -> DataFrame:
     """Fused synthesize→fingerprint for the frame-dedup bench path:
-    one ``mapInPandas`` builds each document's MJPEG frames and emits
+    one row stage builds each document's MJPEG frames and emits
     ``(media_id, frame_md5)`` directly — the frame BYTES never cross
     an Arrow boundary (the generic ``synthesize_avi_mjpeg`` →
     ``video_frame_hashes`` chain pays two Python worker stages and a
@@ -345,41 +294,29 @@ def synthesize_frame_hashes(df: DataFrame, id_col: str, text_col: str,
     computed per DISTINCT tuple and memoized."""
     import hashlib
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        q = np.ones((8, 8), np.int64)
-        q[0, 0] = 8
-        memo: dict[tuple, str] = {}
+    q = np.ones((8, 8), np.int64)
+    q[0, 0] = 8
+    memo: dict[tuple, str] = {}
 
-        def fhash(vals: np.ndarray) -> str:
-            key = tuple(vals.tolist())
-            got = memo.get(key)
-            if got is None:
-                px = np.repeat(np.repeat(vals.reshape(2, 2), 8, 0),
-                               8, 1)
-                got = hashlib.md5(encode_jpeg_baseline(
-                    px.astype(np.uint8),
-                    quant_tables=(q, q))).hexdigest()
-                if len(memo) < 500_000:
-                    memo[key] = got
-            return got
+    def fhash(vals: np.ndarray) -> str:
+        key = tuple(vals.tolist())
+        got = memo.get(key)
+        if got is None:
+            px = np.repeat(np.repeat(vals.reshape(2, 2), 8, 0), 8, 1)
+            got = hashlib.md5(encode_jpeg_baseline(
+                px.astype(np.uint8), quant_tables=(q, q))).hexdigest()
+            if len(memo) < 500_000:
+                memo[key] = got
+        return got
 
-        for pdf in batches:
-            out_ids, out_md5 = [], []
-            for mid, text in zip(pdf.iloc[:, 0].astype("int64"),
-                                 pdf.iloc[:, 1].fillna("")):
-                raw = (text.encode("utf-8") or b"\x00")
-                bts = np.frombuffer(raw, dtype=np.uint8)
-                for f in range(n_frames):
-                    out_ids.append(int(mid))
-                    out_md5.append(fhash(
-                        bts[(4 * f + np.arange(4)) % len(bts)]))
-            yield pd.DataFrame({
-                "media_id": pd.Series(out_ids, dtype="int64"),
-                "frame_md5": out_md5})
+    def synth(text, _id):
+        raw = ((text or "").encode("utf-8") or b"\x00")
+        bts = np.frombuffer(raw, dtype=np.uint8)
+        return [(fhash(bts[(4 * f + np.arange(4)) % len(bts)]),)
+                for f in range(n_frames)]
 
-    return (_spread(df).select(F.col(id_col), F.col(text_col))
-            .mapInPandas(_synth,
-                         schema="media_id long, frame_md5 string"))
+    return row_stage(_spread(df), id_col, text_col, synth,
+                     "frame_md5 string")
 
 
 def frame_dedup_report(df: DataFrame,

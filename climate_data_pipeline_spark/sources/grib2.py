@@ -1280,11 +1280,6 @@ def build_grib2(values: np.ndarray, ref: float = 0.0,
 # Spark integration
 # ---------------------------------------------------------------------------
 
-GRIB_LONG_SCHEMA = ("msg_id long, template string, ref_time string, "
-                    "param_category int, param_number int, "
-                    "lat double, lon double, value double")
-
-
 def synthesize_grib2(df, id_col: str, text_col: str):
     """Build REAL GRIB2 messages deterministically from text rows:
     8×8 regular lat/lon grids whose packed values derive from the
@@ -1381,73 +1376,64 @@ def grib2_long(payload_df, id_col: str = "msg_id",
                payload_col: str = "payload"):
     """Decode GRIB2 payloads into the long climate-table shape — one
     row per PRESENT grid cell (bitmap-masked cells are absent, the
-    same contract as a real ingest), decoded inside one Arrow
-    ``mapInPandas`` so payload bytes never leave the executor."""
-    import pandas as pd
+    same contract as a real ingest), decoded inside one Arrow row
+    stage so payload bytes never leave the executor."""
+    from ..operators._kernel import row_stage
 
-    def _decode(batches):
-        import numpy as np
+    lon_cache: dict = {}
 
-        lon_cache: dict = {}
+    def _par_lons(k: int) -> np.ndarray:
+        got = lon_cache.get(k)
+        if got is None:
+            got = lon_cache[k] = np.arange(k) * (360.0 / k)
+        return got
 
-        def _par_lons(k: int) -> np.ndarray:
-            got = lon_cache.get(k)
-            if got is None:
-                got = lon_cache[k] = np.arange(k) * (360.0 / k)
-            return got
+    def decode(payload, _id) -> list[tuple]:
+        rows: list[tuple] = []
+        for m in parse_grib2(bytes(payload)):
+            if m.get("spectral"):
+                raise ValueError(
+                    "grib2_long got a spherical-harmonic "
+                    "field — use grib2_spectral_long")
+            vals = m["values"]
+            if m.get("pl") is not None:
+                # reduced Gaussian: ragged parallels — each
+                # parallel j holds pl[j] points at spacing
+                # 360/pl[j] from lo1
+                pl = m["pl"]
+                latf = np.repeat(m["lats"], pl)
+                lonf = m["lo1"] + np.concatenate(
+                    [_par_lons(int(k)) for k in pl])
+            elif m.get("lat2d") is not None:
+                # Lambert conformal: lat/lon are genuinely 2-D
+                # fields, one value per stored cell
+                latf = m["lat2d"].reshape(-1)
+                lonf = m["lon2d"].reshape(-1)
+                vals = vals.reshape(-1)
+            else:
+                nj, ni = vals.shape
+                # the parser computes the north-first latitude
+                # vector per grid template (regular spacing
+                # for 3.0, quadrature nodes for 3.40 Gaussian)
+                lat = m["lats"]
+                lon = m["lo1"] + m["dlon"] * np.arange(ni)
+                latg, long_ = np.meshgrid(lat, lon, indexing="ij")
+                latf = latg.reshape(-1)
+                lonf = long_.reshape(-1)
+                vals = vals.reshape(-1)
+            mask = ~np.isnan(vals)
+            head = (m["template"], m["ref_time"], m["param_category"],
+                    m["param_number"])
+            rows.extend((*head, la, lo, v) for la, lo, v in
+                        zip(latf[mask].tolist(), lonf[mask].tolist(),
+                            vals[mask].tolist()))
+        return rows
 
-        for pdf in batches:
-            rows = {k: [] for k in ("msg_id", "template", "ref_time",
-                                    "param_category", "param_number",
-                                    "lat", "lon", "value")}
-            for mid, payload in zip(pdf[id_col].astype("int64"),
-                                    pdf[payload_col]):
-                for m in parse_grib2(bytes(payload)):
-                    if m.get("spectral"):
-                        raise ValueError(
-                            "grib2_long got a spherical-harmonic "
-                            "field — use grib2_spectral_long")
-                    vals = m["values"]
-                    if m.get("pl") is not None:
-                        # reduced Gaussian: ragged parallels — each
-                        # parallel j holds pl[j] points at spacing
-                        # 360/pl[j] from lo1
-                        pl = m["pl"]
-                        latf = np.repeat(m["lats"], pl)
-                        lonf = m["lo1"] + np.concatenate(
-                            [_par_lons(int(k)) for k in pl])
-                    elif m.get("lat2d") is not None:
-                        # Lambert conformal: lat/lon are genuinely 2-D
-                        # fields, one value per stored cell
-                        latf = m["lat2d"].reshape(-1)
-                        lonf = m["lon2d"].reshape(-1)
-                        vals = vals.reshape(-1)
-                    else:
-                        nj, ni = vals.shape
-                        # the parser computes the north-first latitude
-                        # vector per grid template (regular spacing
-                        # for 3.0, quadrature nodes for 3.40 Gaussian)
-                        lat = m["lats"]
-                        lon = m["lo1"] + m["dlon"] * np.arange(ni)
-                        latg, long_ = np.meshgrid(lat, lon,
-                                                  indexing="ij")
-                        latf = latg.reshape(-1)
-                        lonf = long_.reshape(-1)
-                        vals = vals.reshape(-1)
-                    mask = ~np.isnan(vals)
-                    n = int(mask.sum())
-                    rows["msg_id"].extend([int(mid)] * n)
-                    rows["template"].extend([m["template"]] * n)
-                    rows["ref_time"].extend([m["ref_time"]] * n)
-                    rows["param_category"].extend(
-                        [m["param_category"]] * n)
-                    rows["param_number"].extend([m["param_number"]] * n)
-                    rows["lat"].extend(latf[mask].tolist())
-                    rows["lon"].extend(lonf[mask].tolist())
-                    rows["value"].extend(vals[mask].tolist())
-            yield pd.DataFrame(rows)
-
-    return payload_df.mapInPandas(_decode, schema=GRIB_LONG_SCHEMA)
+    return row_stage(payload_df, id_col, payload_col, decode,
+                     "template string, ref_time string, "
+                     "param_category int, param_number int, "
+                     "lat double, lon double, value double",
+                     id_name="msg_id")
 
 
 def read_grib2_long(spark, path_glob: str):
@@ -1499,29 +1485,17 @@ def grib2_interval_stats(payload_df, id_col: str = "msg_id",
     """Decode template-4.8 GRIB2 payloads executor-side → one row per
     message with the statistical-interval metadata and the field mean:
     (msg_id, stat_process, stat_hours, interval_end, mean_value)."""
-    import pandas as pd
+    from ..operators._kernel import row_stage
 
-    def _decode(batches):
-        import numpy as np
+    def decode(payload, _id) -> list[tuple]:
+        return [(int(m["stat_process"]), int(m["stat_hours"]),
+                 m["interval_end"], float(np.nanmean(m["values"])))
+                for m in parse_grib2(bytes(payload))]
 
-        for pdf in batches:
-            rows = {"msg_id": [], "stat_process": [], "stat_hours": [],
-                    "interval_end": [], "mean_value": []}
-            for mid, payload in zip(pdf[id_col].astype("int64"),
-                                    pdf[payload_col]):
-                for m in parse_grib2(bytes(payload)):
-                    rows["msg_id"].append(int(mid))
-                    rows["stat_process"].append(int(m["stat_process"]))
-                    rows["stat_hours"].append(int(m["stat_hours"]))
-                    rows["interval_end"].append(m["interval_end"])
-                    rows["mean_value"].append(
-                        float(np.nanmean(m["values"])))
-            yield pd.DataFrame(rows)
-
-    return payload_df.mapInPandas(
-        _decode, schema=("msg_id long, stat_process int, "
-                         "stat_hours int, interval_end string, "
-                         "mean_value double"))
+    return row_stage(payload_df, id_col, payload_col, decode,
+                     "stat_process int, stat_hours int, "
+                     "interval_end string, mean_value double",
+                     id_name="msg_id")
 
 
 def synthesize_grib2_reduced(df, id_col: str, text_col: str):
@@ -1800,30 +1774,25 @@ def grib2_spectral_long(payload_df, id_col: str = "msg_id",
     with part 0 = real, 1 = imaginary — the coefficient-domain twin of
     ``grib2_long`` (spectral fields have no lat/lon grid until a
     Legendre synthesis, which is a separate transform, not ingest)."""
-    import pandas as pd
+    from ..operators._kernel import row_stage
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = {"msg_id": [], "template": [], "m": [], "n": [],
-                    "part": [], "coeff": []}
-            for mid, payload in zip(pdf[id_col].astype("int64"),
-                                    pdf[payload_col]):
-                for rec in parse_grib2(bytes(payload)):
-                    if not rec.get("spectral"):
-                        raise ValueError("grib2_spectral_long got a "
-                                         "grid-point field")
-                    k = rec["values"].size
-                    rows["msg_id"].extend([int(mid)] * k)
-                    rows["template"].extend([rec["template"]] * k)
-                    rows["m"].extend(rec["coeff_m"].tolist())
-                    rows["n"].extend(rec["coeff_n"].tolist())
-                    rows["part"].extend(rec["coeff_part"].tolist())
-                    rows["coeff"].extend(rec["values"].tolist())
-            yield pd.DataFrame(rows)
+    def decode(payload, _id) -> list[tuple]:
+        rows: list[tuple] = []
+        for rec in parse_grib2(bytes(payload)):
+            if not rec.get("spectral"):
+                raise ValueError("grib2_spectral_long got a "
+                                 "grid-point field")
+            t = rec["template"]
+            rows.extend((t, m, n, part, c) for m, n, part, c in
+                        zip(rec["coeff_m"].tolist(),
+                            rec["coeff_n"].tolist(),
+                            rec["coeff_part"].tolist(),
+                            rec["values"].tolist()))
+        return rows
 
-    return payload_df.mapInPandas(
-        _decode, schema=("msg_id long, template string, m int, n int, "
-                         "part int, coeff double"))
+    return row_stage(payload_df, id_col, payload_col, decode,
+                     "template string, m int, n int, part int, "
+                     "coeff double", id_name="msg_id")
 
 
 def synthesize_grib2_spectral(df, id_col: str, text_col: str):

@@ -2289,32 +2289,23 @@ def synthesize_hdf5_szip(df, id_col: str, text_col: str):
 def hdf5_szip_stats(payload_df, id_col: str = "msg_id",
                     payload_col: str = "payload"):
     """Decode szip-compressed HDF5 payloads executor-side (one Arrow
-    ``mapInPandas``, the chunk pipeline incl. the szip filter and CF
+    row stage, the chunk pipeline incl. the szip filter and CF
     scale_factor unpacking) → per-file (msg_id, dtype, n_vals,
     mean_value)."""
-    import pandas as pd
+    from ..operators._kernel import row_stage
 
-    def _decode(batches):
-        for pdf in batches:
-            rows = {"msg_id": [], "dtype": [], "n_vals": [],
-                    "mean_value": []}
-            for mid, payload in zip(pdf[id_col].astype("int64"),
-                                    pdf[payload_col]):
-                f = H5File(bytes(payload))
-                ds = f.datasets["v"]
-                vals = f.read("v").astype(np.float64)
-                scale = ds.attrs.get("scale_factor")
-                if scale is not None:
-                    vals = vals * float(scale)
-                rows["msg_id"].append(int(mid))
-                rows["dtype"].append(ds.dtype.name)
-                rows["n_vals"].append(int(vals.size))
-                rows["mean_value"].append(float(vals.mean()))
-            yield pd.DataFrame(rows)
+    def decode(payload, _id) -> list[tuple]:
+        f = H5File(bytes(payload))
+        ds = f.datasets["v"]
+        vals = f.read("v").astype(np.float64)
+        scale = ds.attrs.get("scale_factor")
+        if scale is not None:
+            vals = vals * float(scale)
+        return [(ds.dtype.name, int(vals.size), float(vals.mean()))]
 
-    return payload_df.mapInPandas(
-        _decode, schema=("msg_id long, dtype string, n_vals long, "
-                         "mean_value double"))
+    return row_stage(payload_df, id_col, payload_col, decode,
+                     "dtype string, n_vals long, mean_value double",
+                     id_name="msg_id")
 
 
 def synthesize_hdf5_so_float(df, id_col: str, text_col: str):

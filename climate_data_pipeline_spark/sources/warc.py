@@ -198,33 +198,26 @@ def warc_extract(payload_df, id_col: str = "doc_id",
     ``include_text`` adds the recovered text itself (the corpus
     column a curation job continues with; off by default so the
     screening projection stays narrow)."""
-    import pandas as pd
+    from ..operators._kernel import row_stage
 
-    out_schema = ("doc_id long, uri string, http_status int, "
-                  "n_body_bytes long, n_chars long, text_md5 string")
+    out_schema = ("uri string, http_status int, n_body_bytes long, "
+                  "n_chars long, text_md5 string")
     if include_text:
         out_schema += ", text string"
 
-    def _extract(batches):
-        for pdf in batches:
-            rows = []
-            for i, p in zip(pdf[id_col].astype("int64"),
-                            pdf[payload_col]):
-                for rec in parse_warc(bytes(p)):
-                    if rec["type"] != "response":
-                        continue
-                    text = html_text(rec["body"])
-                    row = (int(i), rec["uri"], rec["http_status"],
-                           len(rec["body"]), len(text),
-                           hashlib.md5(text.encode()).hexdigest())
-                    rows.append(row + (text,) if include_text else row)
-            cols = ["doc_id", "uri", "http_status", "n_body_bytes",
-                    "n_chars", "text_md5"]
-            if include_text:
-                cols.append("text")
-            yield pd.DataFrame(rows, columns=cols)
+    def extract(p, _id) -> list[tuple]:
+        rows = []
+        for rec in parse_warc(bytes(p)):
+            if rec["type"] != "response":
+                continue
+            text = html_text(rec["body"])
+            row = (rec["uri"], rec["http_status"], len(rec["body"]),
+                   len(text), hashlib.md5(text.encode()).hexdigest())
+            rows.append(row + (text,) if include_text else row)
+        return rows
 
-    return payload_df.mapInPandas(_extract, schema=out_schema)
+    return row_stage(payload_df, id_col, payload_col, extract,
+                     out_schema, id_name="doc_id")
 
 
 # --------------------------------------------------------------------------
@@ -399,28 +392,15 @@ def parse_sitemap(xml_text: str) -> list[dict]:
 
 
 def sitemap_extract(df, xml_col: str, id_col: str):
-    """Explode sitemap documents into one row per entry (Arrow
-    ``mapInPandas``; the XML never shuffles) →
+    """Explode sitemap documents into one row per entry (one Arrow row
+    stage; the XML never shuffles) →
     (id, kind, loc, lastmod, changefreq, priority)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    from ..operators._kernel import row_stage
 
-    def _extract(batches):
-        for pdf in batches:
-            rows = {"sid": [], "kind": [], "loc": [], "lastmod": [],
-                    "changefreq": [], "priority": []}
-            for sid, xml in zip(pdf[id_col].astype("int64"),
-                                pdf[xml_col]):
-                for e in parse_sitemap(xml):
-                    rows["sid"].append(int(sid))
-                    for k in ("kind", "loc", "lastmod", "changefreq",
-                              "priority"):
-                        rows[k].append(e[k])
-            yield pd.DataFrame(rows)
-
-    return (df.select(F.col(id_col), F.col(xml_col))
-              .mapInPandas(_extract,
-                           schema=("sid long, kind string, loc string, "
-                                   "lastmod string, changefreq string, "
-                                   "priority double"))
-              .withColumnRenamed("sid", id_col))
+    return row_stage(
+        df, id_col, xml_col,
+        lambda xml, _id: [(e["kind"], e["loc"], e["lastmod"],
+                           e["changefreq"], e["priority"])
+                          for e in parse_sitemap(xml)],
+        "kind string, loc string, lastmod string, changefreq string, "
+        "priority double", id_name=id_col)

@@ -494,7 +494,7 @@ def streaming_winnow_contamination(spark: SparkSession, sf_dir: str,
 def streaming_media_decode(spark: SparkSession, media_dir: str) -> DataFrame:
     """Streaming twin of the REAL media decode: a file stream of payload
     rows (the shape a tar-shard ingest or object-store notification feed
-    produces) through the same Arrow ``mapInPandas`` codecs as the batch
+    produces) through the same Arrow row-stage codecs as the batch
     path (`operators/multimodal.decode_media_real`). Stateless — no
     watermark, no state store; each micro-batch decodes independently,
     so the operator scales with arrival rate exactly like the batch plan

@@ -195,10 +195,10 @@ def test_multimodal_decode_stub_and_fake(spark, docs):
     assert out.count() == docs.count()
     row = out.first()
     assert row["width"] >= 16 and row["mean_intensity"] > 0
-    # real=True dispatches actual codecs; these payloads are raw UTF-8
-    # text (no container magic), so the decode fails loudly per payload
+    # the real codecs: these payloads are raw UTF-8 text (no container
+    # magic), so the decode fails loudly per payload
     with pytest.raises(Exception, match="no pure-python codec"):
-        MM.decode_media(media, real=True).collect()
+        MM.decode_media_real(media).collect()
 
 
 def test_multimodal_features_shape(spark, docs):
@@ -2896,6 +2896,77 @@ def test_audio_features_bit_depths_and_stereo(spark):
         [(9, "audio/wav", bytearray(over), len(over))],
         "media_id long, media_type string, payload binary, n_bytes long")
     with _pt.raises(Exception, match="int64"):
+        audio_features(df2).collect()
+
+
+def test_audio_features_reads_every_integer_wav_form(spark):
+    """audio_features decodes what decode_media_real decodes: 24-bit
+    PCM (mono and stereo), G.711 μ-law and A-law, and
+    WAVE_FORMAT_EXTENSIBLE wrappers, each equal to numpy features over
+    the known samples; an IEEE-float clip raises."""
+    import numpy as np
+
+    from climate_data_pipeline_spark.operators.audio import build_wav
+    from climate_data_pipeline_spark.operators.multimodal import (
+        audio_features)
+
+    def pcm24(s) -> bytes:
+        v = np.asarray(s, np.int64) & 0xFFFFFF
+        return np.stack([v & 0xFF, (v >> 8) & 0xFF, v >> 16],
+                        1).astype(np.uint8).tobytes()
+
+    def ulaw(c: int) -> int:       # G.711 table form, per code
+        u = ~c & 0xFF
+        mag = ((((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)) - 0x84
+        return -mag if u & 0x80 else mag
+
+    def alaw(c: int) -> int:
+        a = c ^ 0x55
+        seg, mant = (a >> 4) & 7, a & 0x0F
+        mag = ((mant << 4) + 8 if seg == 0
+               else ((mant << 4) + 0x108) << (seg - 1))
+        return mag if a & 0x80 else -mag
+
+    rng = np.random.default_rng(7)
+    s24 = rng.integers(-2 ** 23, 2 ** 23, 600)
+    s24[0], s24[1] = -2 ** 23, 2 ** 23 - 1
+    s16 = rng.integers(-2 ** 15, 2 ** 15, 400)
+    codes = np.arange(256)
+    clips = {
+        0: (build_wav(pcm24(s24), 1, 1, 8000, 24), s24, 1),
+        1: (build_wav(pcm24(s24), 1, 2, 8000, 24), s24, 2),
+        2: (build_wav(codes.astype(np.uint8).tobytes(), 7, 1, 8000, 8),
+            np.array([ulaw(int(c)) for c in codes]), 1),
+        3: (build_wav(codes.astype(np.uint8).tobytes(), 6, 1, 8000, 8),
+            np.array([alaw(int(c)) for c in codes]), 1),
+        4: (build_wav(s16.astype("<i2").tobytes(), 1, 2, 8000, 16,
+                      extensible=True), s16, 2),
+        5: (build_wav(pcm24(s24), 1, 2, 8000, 24, extensible=True),
+            s24, 2),
+        6: (build_wav(codes.astype(np.uint8).tobytes(), 7, 1, 8000, 8,
+                      extensible=True),
+            np.array([ulaw(int(c)) for c in codes]), 1),
+    }
+    df = spark.createDataFrame(
+        [(i, "audio/wav", bytearray(b), len(b))
+         for i, (b, _, _) in clips.items()],
+        "media_id long, media_type string, payload binary, n_bytes long")
+    got = {r["media_id"]: r for r in audio_features(df).collect()}
+    for i, (_, s, nch) in clips.items():
+        fr = np.asarray(s, np.int64).reshape(-1, nch)
+        nonneg = fr >= 0
+        energy = sum(int(v) * int(v) for v in fr.ravel())
+        assert (got[i]["n_samples"], got[i]["zero_crossings"],
+                got[i]["peak"], got[i]["energy"], got[i]["rms"]) == (
+            len(fr), int((nonneg[1:] != nonneg[:-1]).sum()),
+            int(np.abs(fr).max()), energy,
+            float(np.sqrt(energy / fr.size))), i
+
+    flt = build_wav(np.zeros(8, "<f4").tobytes(), 3, 1, 8000, 32)
+    df2 = spark.createDataFrame(
+        [(9, "audio/wav", bytearray(flt), len(flt))],
+        "media_id long, media_type string, payload binary, n_bytes long")
+    with pytest.raises(Exception, match="IEEE-float"):
         audio_features(df2).collect()
 
 
